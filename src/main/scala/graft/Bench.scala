@@ -1,34 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // fail BEFORE the multi-minute warm-up, not after it with an
     // opaque empty-collection error inside the first median (r14)
     require(reps > 0, s"SPARK_GRAFT_BENCH_REPS must be positive, got $reps")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Timestamp dump encoding is Spark's INT96 default — a DRIVER
-      // CONTRACT, not a preference. r18 switched these sessions to
-      // TIMESTAMP_MICROS to fix a probe-only pyarrow INT96->ns wrap on
-      // 9999-12-31 instants, and the driver's comparator immediately
-      // failed schema+hash on the four queries whose final schemas
-      // carry raw TIMESTAMP columns (q27/q46/q69/q107) after eleven
-      // green INT96 rounds (CORRECTNESS_r7-r17 vs r18). The wrap only
-      // ever appears in builder-side probes, which read dumps with
-      // int96 coercion (tools/local_verify.py). Do not change this
-      // encoding again without a driver-gated migration to epoch-us
-      // BIGINT outputs (SURVEY S5 item 7).
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warm-up: touch every table and run one tiny query so JVM
     // startup, codegen compilation, and parquet footer reads land

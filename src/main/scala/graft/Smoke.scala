@@ -1,33 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner: replicates the driver's t1 check (entry rows>0)
   * and prints a sample. `sbt "runMain graft.Smoke"`.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Timestamp dump encoding is Spark's INT96 default — a DRIVER
-      // CONTRACT, not a preference. r18 switched these sessions to
-      // TIMESTAMP_MICROS to fix a probe-only pyarrow INT96->ns wrap on
-      // 9999-12-31 instants, and the driver's comparator immediately
-      // failed schema+hash on the four queries whose final schemas
-      // carry raw TIMESTAMP columns (q27/q46/q69/q107) after eleven
-      // green INT96 rounds (CORRECTNESS_r7-r17 vs r18). The wrap only
-      // ever appears in builder-side probes, which read dumps with
-      // int96 coercion (tools/local_verify.py). Do not change this
-      // encoding again without a driver-gated migration to epoch-us
-      // BIGINT outputs (SURVEY S5 item 7).
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())

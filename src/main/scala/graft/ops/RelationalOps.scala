@@ -32,7 +32,7 @@ object RelationalOps {
     * exchange; a plain narrow scan gains nothing from the extra hop.
     *
     * Apply ONLY where the pre-exchange per-row work is genuinely
-    * expensive (measured, DevRebalanceAB): an interpreted expression
+    * expensive (measured, OPTIMIZATION_r21.md): an interpreted expression
     * chain (zip_with n-gram hashing) or a broadcast nested-loop probe.
     * Codegen'd explode+aggregate pipelines and plain partial
     * aggregations measured FASTER without it — the exchange of raw

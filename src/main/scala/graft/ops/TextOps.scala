@@ -88,23 +88,20 @@ object TextOps {
   def shingleHashes(shing: Column): Column =
     transform(shing, s => pmod(xxhash64(s), lit(MersennePrime)))
 
-  /** Full-width 64-bit shingle hashes: the representation the
+  /** Distinct 64-bit word-n-gram hashes: the representation the
     * candidate-generation joins and exact-Jaccard verify run on.
     * Longs shuffle and hash-intersect far cheaper than 3-word shingle
     * strings, and set arithmetic on them equals set arithmetic on the
     * strings up to a 64-bit collision (~|shingles|²/2⁶⁵ per corpus —
     * ~1e-6 even at 10M distinct shingles; the 31-bit fold above is for
     * minhash permutation inputs only, never for set identity).
-    */
-  def shingleHashes64(shing: Column): Column = transform(shing, s => xxhash64(s))
-
-  /** Distinct 64-bit word-n-gram hashes computed NUMERICALLY: each
-    * token is hashed once, then consecutive token hashes combine by
-    * rotate-XOR (position i contributes rot₇₍ₙ₋ᵢ₎(hᵢ) — order-
-    * sensitive, bitwise only, so no ANSI overflow and no n-gram string
-    * is ever materialized). Set-equivalent to hashing the concatenated
-    * shingle strings (64-bit collision odds as above) at a fraction of
-    * the cost: the string path slices + concats + re-hashes ~20 bytes
+    *
+    * Computed NUMERICALLY: each token is hashed once, then consecutive
+    * token hashes combine by rotate-XOR (position i contributes
+    * rot₇₍ₙ₋ᵢ₎(hᵢ) — order-sensitive, bitwise only, so no ANSI overflow
+    * and no n-gram string is ever materialized). Set-equivalent to
+    * hashing the concatenated shingle strings at a fraction of the
+    * cost: the string path slices + concats + re-hashes ~20 bytes
     * per shingle. Built as a zip_with chain over shifted slices —
     * NOT a lambda referencing the token-hash array (a nested reference
     * would re-evaluate the whole inner transform per element, O(n²)).
@@ -201,7 +198,7 @@ object TextOps {
     // place of the old transform(sequence)/aggregate(slice) chain,
     // whose higher-order lambdas evaluate INTERPRETED per band per
     // row (measured: the banding stage dominated everything around it
-    // in DevPrefixStages; the unrolled form folds the same
+    // in OPTIMIZATION_r21.md; the unrolled form folds the same
     // acc → (acc << 31) ⊕ m arithmetic, bit-identical output).
     // element_at is 1-based and only reached under the size guard, so
     // no out-of-bounds path exists (ANSI-safe).
@@ -365,7 +362,7 @@ object TextOps {
     // parallelism instead of running in the checkpoint's (single, on
     // the fixture) partition. dfreq and the refinement's idxB keep
     // the un-repartitioned lineage — their aggregations reduce
-    // map-side / join on their own keys. Interleaved A/B (DevR22AB3,
+    // map-side / join on their own keys. Interleaved A/B (OPTIMIZATION_r22.md,
     // 9 reps calm): q37 end-to-end med 2.141 → 1.898 s, min 1.910 →
     // 1.812; candidate rows bit-identical.
     val idxW = docShingles.repartition(col(idCol))

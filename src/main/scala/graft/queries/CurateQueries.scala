@@ -104,7 +104,7 @@ object CurateQueries {
       // zip_with chain over every token of every doc, run for both the
       // eval and train sides) otherwise executes inside the
       // unsplittable single-row-group scan task (RelationalOps doc;
-      // measured: 1.21s → 0.86s min in DevRebalanceAB; no-op at
+      // measured: 1.21s → 0.86s min in OPTIMIZATION_r21.md; no-op at
       // production scale where the scan has many splits)
       val sh = graft.ops.RelationalOps.rebalanceScan(Tables.documents(s, d),
           col("doc_id"))

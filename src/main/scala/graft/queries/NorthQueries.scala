@@ -130,7 +130,7 @@ object NorthQueries {
       // so the partial agg passes raw rows through anyway; the saved
       // exchange + sort + partial-limit pass is pure win. Skew-safe:
       // TPC-H rows per supplier is a constant (~600) at any SF.
-      // Interleaved A/B (DevR22AB2, 7 reps): min 1.459 → 0.898 s,
+      // Interleaved A/B (OPTIMIZATION_r22.md, 7 reps): min 1.459 → 0.898 s,
       // med 1.704 → 1.241 s; rows bit-identical (decimal sum is
       // order-independent, window order fully tiebroken).
       val rev = Tables.lineitem(s, d)

@@ -68,7 +68,7 @@ object OpsQueries {
       // floor 2 (multi-partition state stays exercised) — instead of
       // a constant tuned for either environment. Filesystem metadata
       // only (no Spark job); at sf0.1 this yields 2 (measured best:
-      // DevTimeQ100AB interleaved mins 2.69/2.48/2.42 s for 8/4/2),
+      // OPTIMIZATION_r21.md interleaved mins 2.69/2.48/2.42 s for 8/4/2),
       // and a production-sized backfill derives thousands. Scoped to
       // this pipeline and restored in finally.
       val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")

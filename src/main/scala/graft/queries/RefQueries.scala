@@ -140,7 +140,7 @@ object RefQueries {
     // (map-side) aggregation then one shuffle on the group key.
     // (r21: a pre-agg rebalanceScan was measured SLOWER here — the
     // codegen'd partial agg in the scan task beats exchanging raw
-    // rows; DevRebalanceAB agg_plain 0.64s vs rebalanced 0.70-1.24s.)
+    // rows; OPTIMIZATION_r21.md plain 0.64s vs rebalanced 0.70-1.24s.)
     "q17_store_day_agg" -> ((s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_suppkey"), col("l_shipdate").cast("date").as("sale_dy"))

@@ -73,7 +73,7 @@ object WidenQueries {
       // rebalanceScan (r21): the broadcast nested-loop interval probe
       // (28 comparisons per fact row) otherwise runs inside the
       // unsplittable single-row-group scan task (RelationalOps doc;
-      // measured: 0.94s → 0.68s min in DevRebalanceAB; no-op at
+      // measured: 0.94s → 0.68s min in OPTIMIZATION_r21.md; no-op at
       // production scale where the scan has many splits)
       TemporalOps.rangeJoinBroadcast(
           graft.ops.RelationalOps.rebalanceScan(Tables.lineitem(s, d),

@@ -43,17 +43,7 @@ object DevIsolated {
     val target = args(1)
     val reps = if (args.length > 2) args(2).toInt else 5
     val warmN = if (args.length > 3) args(3).toInt else 0
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-isolated-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.envCpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // same untimed table warm-up as Bench (footers/schemas out of the

@@ -70,17 +70,7 @@ object DevNightlySoak {
     val nights = if (args.length > 0) args(0).toInt else 30
     val stores = if (args.length > 1) args(1).toLong else 200L
     val gradeEvery = if (args.length > 2) args(2).toInt else 5
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "8") + "]")
-      .appName("graft-nightly-soak")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -5,8 +5,8 @@ package graft
   * prints a single JSON line. Invoked once per rung (the flagship
   * reads SPARK_GRAFT_SF_DIR, so rungs are separate JVMs by design);
   * the ratio table in SCALING.md is computed from the two lines.
-  * Session config matches Bench exactly — local[32], 32 shuffle
-  * partitions — so a ladder number is comparable to a bench number.
+  * Session config matches Bench exactly — `Session.local` at
+  * SPARK_GRAFT_CPUS — so a ladder number is comparable to a bench number.
   */
 object DevScaleLadder {
   def main(args: Array[String]): Unit = {
@@ -15,17 +15,7 @@ object DevScaleLadder {
     val reps = if (args.length > 1) args(1).toInt else 3
     val wanted: Seq[String] =
       if (args.length > 2) args(2).split(",").toSeq.filter(_.nonEmpty) else Nil
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-ladder")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.envCpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // same warm-up discipline as Bench: footers, codegen, JIT outside

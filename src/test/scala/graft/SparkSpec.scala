@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites: small parallelism for
-  * test speed, UTC + nanosAsLong matching the Verify/Bench contract.
+/** Shared local SparkSession for all suites: the Verify/Bench session
+  * contract (`Session.local`) at small parallelism for test speed.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -15,28 +15,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Timestamp dump encoding is Spark's INT96 default — a DRIVER
-      // CONTRACT, not a preference. r18 switched these sessions to
-      // TIMESTAMP_MICROS to fix a probe-only pyarrow INT96->ns wrap on
-      // 9999-12-31 instants, and the driver's comparator immediately
-      // failed schema+hash on the four queries whose final schemas
-      // carry raw TIMESTAMP columns (q27/q46/q69/q107) after eleven
-      // green INT96 rounds (CORRECTNESS_r7-r17 vs r18). The wrap only
-      // ever appears in builder-side probes, which read dumps with
-      // int96 coercion (tools/local_verify.py). Do not change this
-      // encoding again without a driver-gated migration to epoch-us
-      // BIGINT outputs (SURVEY S5 item 7).
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local(2)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
