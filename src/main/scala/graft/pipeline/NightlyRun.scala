@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DateType, LongType, StringType, StructType}
 
 import graft.ops.RelationalOps
 import graft.sources.{EnvelopeTransport, IngestFetch}
@@ -19,8 +19,8 @@ import graft.sources.{EnvelopeTransport, IngestFetch}
   *   worklist (DSv2, executor-side enumeration)
   *     → envelope fetch (transport seam, coordinates preserved)
   *     → decode (ret_code gate; loop date wins over API date)
-  *     → dim enrich (broadcast update-join, J1)
   *     → latest-wins merge against the STANDING mart slice (U1)
+  *     → dim enrich of the fresh winners (broadcast update-join, J1)
   *     → date-partitioned mart commit (stage + per-partition swap)
   *     → governance gate over what actually landed (q103's operator)
   *
@@ -34,6 +34,12 @@ import graft.sources.{EnvelopeTransport, IngestFetch}
   * the q35/q56/q93 ingest artifacts (ArtifactGateSpec): steady-state
   * ticks launch no rebuild work (NightlyRunSpec pins this by job
   * count and partition-file identity).
+  *
+  * Enriching after the merge keeps the broadcast out of the fetch
+  * stage: the fetch (the one step waiting on the network) is submitted
+  * at once, alongside the dim aggregate, instead of behind the dim's
+  * aggregate and broadcast. Only incoming winners are enriched;
+  * standing winners keep their stored region.
   */
 object NightlyRun {
 
@@ -56,8 +62,12 @@ object NightlyRun {
 
   /** Mart row layout: business key `id`, loop-date partition
     * `sale_d`, measure `k`, dim-enriched `region`. */
-  private val martCols =
-    Seq("id", "store_id", "sale_d", "k", "region")
+  private val martSchema: StructType = new StructType()
+    .add("id", LongType).add("store_id", LongType)
+    .add("sale_d", DateType)
+    .add("k", LongType).add("region", StringType)
+
+  private val martCols = martSchema.fieldNames.toSeq.map(col)
 
   /** One nightly tick over `[lo, hi]`. `storeDim` is the small store
     * dimension (`store_id`, `region_nm`) — broadcast, like the
@@ -76,11 +86,13 @@ object NightlyRun {
     val decoded = RelationalOps
       .decodeEnvelope(raw, "payload", envSchema, keep = Seq("store_id", "d"))
       .observe(decodedObs, count(lit(1)).as("n"))
-    val enriched = RelationalOps.enrichJoinOverwrite(
-      decoded.withColumn("region", lit("unknown")),
-      storeDim, "store_id", "region", "region_nm")
+    // `_dim_key` is the enrich join key: store_id on incoming rows,
+    // null (never matches) on standing ones
+    val incoming = decoded
       .select(col("id"), col("store_id"), col("d").as("sale_d"),
-        col("k"), col("region"))
+        col("k"), lit("unknown").as("region"), col("store_id").as("_dim_key"))
+    val standing = standingSlice(spark, martDir, lo, hi)
+      .withColumn("_dim_key", lit(null).cast(LongType))
     val mergedObs = Observation()
     // tiebreak matters on exactly one input shape: the re-runnable
     // mixed state after a mid-swap crash, where the STANDING slice can
@@ -92,14 +104,20 @@ object NightlyRun {
     // an ARBITRARY survivor (r14 review). Latest sale_d wins (a date
     // correction re-sends under the new date), with the remaining
     // columns closing the total order upsertLatestWins' determinism
-    // contract asks for.
+    // contract asks for. Incoming rows are still un-enriched here;
+    // that cannot change a winner, because incoming copies tying up to
+    // `store_id` get the same dim value.
     val merged = RelationalOps
-      .upsertLatestWins(standingSlice(spark, martDir, lo, hi), enriched,
-        Seq("id"),
+      .upsertLatestWins(standing, incoming, Seq("id"),
         tiebreak = Seq(col("sale_d").desc, col("k").desc,
           col("store_id").desc, col("region").desc))
       .observe(mergedObs, count(lit(1)).as("n"))
-    commitSlice(merged, martDir, lo, hi)
+    // the dim is min-deduped on its key, so the join cannot add rows
+    val enriched = RelationalOps.enrichJoinOverwrite(merged,
+      storeDim.select(col("store_id").as("_dim_key"), col("region_nm")),
+      "_dim_key", "region", "region_nm")
+      .select(martCols: _*)
+    commitSlice(enriched, martDir, lo, hi)
     // gate what LANDED, not what was about to land: the reference's
     // contract is on the loaded table. Directory-level slice read —
     // the rest of the mart is not even listed.
@@ -117,8 +135,18 @@ object NightlyRun {
     Report(obsLong(decodedObs), obsLong(mergedObs), gate)
   }
 
+  /** An observed count. Once a stage has proved the write input empty,
+    * AQE may swap that whole input for an `EmptyRelation`, and the
+    * observation nodes beneath it leave the executed plan with it, so
+    * no metric means no row reached the write. Both counts are then
+    * 0: every decoded row yields a merge winner (the window keeps one
+    * row per `id`, null included). */
   private def obsLong(o: Observation): Long =
-    o.get("n") match { case l: java.lang.Long => l.longValue(); case x => x.toString.toLong }
+    o.get.get("n") match {
+      case Some(l: java.lang.Long) => l.longValue()
+      case Some(x) => x.toString.toLong
+      case None => 0L
+    }
 
   /** The standing mart rows of THIS slice only. Before the first
     * committed tick there is no mart: an empty, schema-matching
@@ -129,11 +157,7 @@ object NightlyRun {
     else sliceRead(spark, martDir, lo, hi)
 
   private def emptyMart(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      new StructType()
-        .add("id", LongType).add("store_id", LongType)
-        .add("sale_d", org.apache.spark.sql.types.DateType)
-        .add("k", LongType).add("region", StringType))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], martSchema)
 
   /** Directory-level slice read: enumerate the slice's dates and hand
     * Spark ONLY the partition dirs that exist (`basePath` keeps
@@ -146,16 +170,20 @@ object NightlyRun {
     * dirs ≈ a month of dailies) starts launching listing JOBS, which
     * would also break the steady-tick job-count pin in
     * NightlyRunSpec. Here the listing work is O(slice) regardless of
-    * mart size. */
+    * mart size. The schema is declared, not inferred: inference
+    * launches a footer-merge job, outside any SQL execution, on every
+    * read. This is SCALING.md's writer-schema read-back rule (its
+    * "empty partitioned sink" row): read back under the schema the
+    * writer used. */
   private def sliceRead(spark: SparkSession, martDir: String,
                         lo: String, hi: String): DataFrame = {
     val dirs = sliceDates(lo, hi)
       .map(d => new java.io.File(martDir, s"sale_d=$d"))
       .filter(_.isDirectory)
     if (dirs.isEmpty) emptyMart(spark)
-    else spark.read.option("basePath", martDir)
+    else spark.read.schema(martSchema).option("basePath", martDir)
       .parquet(dirs.map(_.toString): _*)
-      .select(martCols.map(col): _*)
+      .select(martCols: _*)
   }
 
   /** The slice's dates as ISO strings, inclusive. Nightly slices are

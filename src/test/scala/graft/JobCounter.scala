@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -19,12 +20,19 @@ final class JobCounter(sc: SparkContext) extends AutoCloseable {
   private val jobStarts = new AtomicInteger(0)
   private val seen =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  // first-stage names of non-sentinel jobs started outside any SQL
+  // execution (helpers such as parquet footer merging)
+  private val outside =
+    new java.util.concurrent.ConcurrentLinkedQueue[String]()
   private val listener = new SparkListener {
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       jobStarts.incrementAndGet()
-      val g = Option(j.properties)
-        .map(_.getProperty("spark.jobGroup.id")).orNull
+      val props = Option(j.properties)
+      val g = props.map(_.getProperty("spark.jobGroup.id")).orNull
       if (g != null && g.startsWith(JobCounter.Tag)) { seen.add(g); () }
+      else if (props.forall(_.getProperty("spark.sql.execution.id") == null)) {
+        outside.add(j.stageInfos.headOption.map(_.name).getOrElse(s"job ${j.jobId}")); ()
+      }
     }
   }
   sc.addSparkListener(listener)
@@ -61,6 +69,17 @@ final class JobCounter(sc: SparkContext) extends AutoCloseable {
     val mark = settle()
     val a = body
     (a, settle() - mark - 1) // minus the closing settle's sentinel
+  }
+
+  /** Stage names of the jobs started during `body` that carry no
+    * `spark.sql.execution.id`, i.e. that no planned query accounts for.
+    */
+  def outsideSql[A](body: => A): (A, Seq[String]) = {
+    settle(): Unit
+    val mark = outside.size
+    val a = body
+    settle(): Unit
+    (a, outside.asScala.toSeq.drop(mark))
   }
 
   override def close(): Unit = sc.removeSparkListener(listener)

@@ -11,10 +11,11 @@ import graft.sources.{EnvelopeTransport, FetchRequest, StubTransport}
 
 /** End-to-end proof of the reference's nightly composition (r11
   * VERDICT item 5; SURVEY §3 Entry 1+2): worklist → envelope decode →
-  * latest-wins merge → dim enrich → partitioned mart commit →
-  * governance gate, chained through graft.pipeline.NightlyRun over a
-  * date slice, with the artifact-reuse contract asserted END TO END
-  * rather than per-family:
+  * latest-wins merge → dim enrich of the fresh winners → partitioned
+  * mart commit → governance gate, chained through
+  * graft.pipeline.NightlyRun over a date slice, with the
+  * artifact-reuse contract asserted END TO END rather than
+  * per-family:
   *   - a tick touches only its slice's partitions (untouched
   *     partition files byte-identical by name+mtime after later
   *     ticks);
@@ -22,7 +23,10 @@ import graft.sources.{EnvelopeTransport, FetchRequest, StubTransport}
   *     mart) and launches exactly as many Spark jobs as the previous
   *     tick — the job count does not grow with mart size and no
   *     rebuild work appears (LazyRegistrySpec's claim, exercised on
-  *     the whole chain).
+  *     the whole chain), and every job belongs to a SQL execution;
+  *   - only incoming winners are enriched: a standing winner keeps the
+  *     region it was stored with, and a duplicate dim key never fans
+  *     out mart rows.
   */
 class NightlyRunSpec extends SparkSpec {
   import spark.implicits._
@@ -58,6 +62,8 @@ class NightlyRunSpec extends SparkSpec {
       .map(p => Paths.get(martDir).relativize(p).toString ->
         Files.getLastModifiedTime(p).toMillis)
       .toMap
+
+  private def rmMart(martDir: String): Unit = graft.ops.FsOps.rmTree(new java.io.File(martDir))
 
   /** Count every job started during `body` via the shared
     * [[JobCounter]] (sentinel-tagged FIFO settle — r20 ADVICE item 4
@@ -106,12 +112,7 @@ class NightlyRunSpec extends SparkSpec {
         "the superseded rows must not survive as duplicates")
       assert(mart.filter(col("sale_d") =!= lit(d2).cast("date")).count() === 0L)
       assert(r2.gatePassed, s"gate failed: ${r2.gate.filterNot(_.passed)}")
-    } finally {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(del)); f.delete(): Unit
-      }
-      del(new java.io.File(martDir))
-    }
+    } finally rmMart(martDir)
   }
 
   test("a fully-gated tick commits an empty mart LOUDLY and the next good tick recovers") {
@@ -146,12 +147,7 @@ class NightlyRunSpec extends SparkSpec {
         s"recovery tick must pass: ${r2.gate.filterNot(_.passed)}")
       val mart = spark.read.parquet(martDir)
       assert(mart.count() === exp.size.toLong)
-    } finally {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(del)); f.delete(): Unit
-      }
-      del(new java.io.File(martDir))
-    }
+    } finally rmMart(martDir)
   }
 
   test("nightly ticks: cold build, slice isolation, idempotent steady state with stable job count") {
@@ -219,10 +215,10 @@ class NightlyRunSpec extends SparkSpec {
       assert(partitionFiles(martDir).view.filterKeys(filesA.contains).toMap
         === filesANow, "steady-state tick leaked writes into a foreign slice")
       // a tick over a NEW slice skips the standing read entirely (its
-      // partition dirs don't exist yet), so the first re-send pays at
-      // most the footer-read of its own slice on top — never more
-      assert(jobs3 <= jobs2 + 1,
-        s"re-send job count grew beyond the standing read: tick2=$jobs2 tick3=$jobs3")
+      // partition dirs don't exist yet); the first re-send scans its
+      // slice inside the fetch's map stage, so it adds no job
+      assert(jobs3 === jobs2,
+        s"re-send job count grew with the standing read: tick2=$jobs2 tick3=$jobs3")
 
       // ---- tick 4: second steady-state re-send — the stable shape ----
       // the artifact-reuse claim, end to end: two steady re-sends of
@@ -240,11 +236,73 @@ class NightlyRunSpec extends SparkSpec {
         (expA.size + expB.size).toLong)
       assert(jobs4 === jobs3,
         s"steady-state job count drifted: tick3=$jobs3 tick4=$jobs4")
-    } finally {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(del)); f.delete(): Unit
-      }
-      del(new java.io.File(martDir))
+    } finally rmMart(martDir)
+  }
+
+  test("dim enrich: min wins on duplicate dim keys, standing winners keep their stored region") {
+    val martDir = Files.createTempDirectory("graft_nightly_enrich_").toString
+    val (lo, hi) = ("2024-07-01", "2024-07-02")
+    // store 2 answers non-OK on the re-send, so its rows survive only
+    // as STANDING winners; the rest re-send revised figures
+    final class Store2DownTransport extends EnvelopeTransport {
+      override def fetchPartition(rs: Iterator[FetchRequest]): Iterator[String] =
+        rs.map { r =>
+          val day = r.date.toEpochDay
+          val code = if (r.storeId % 50 == 0 || r.storeId == 2) "9999" else "0000"
+          s"""{"ret_code":"$code","data":[{"id":${r.storeId * 100000 + day},"k":${day % 7 + 10}}]}"""
+        }
     }
+    def regions: Map[Long, Set[String]] =
+      spark.read.parquet(martDir).select("store_id", "region").as[(Long, String)]
+        .collect().groupBy(_._1).map { case (s, rs) => s -> rs.map(_._2).toSet }
+    try {
+      val dim1 = Seq((1L, "north"), (1L, "east"), (2L, "south"), (3L, "west"))
+        .toDF("store_id", "region_nm")
+      val r1 = NightlyRun.run(spark, martDir, stores = 60, lo = lo, hi = hi,
+        transport = new StubTransport, storeDim = dim1)
+      val exp = expectedRows(60, lo, hi)
+      assert(r1.merged === exp.size.toLong && r1.gatePassed)
+      assert(spark.read.parquet(martDir).count() === exp.map(_._1).distinct.size.toLong,
+        "a duplicate dim key must not fan out mart rows")
+      val g1 = regions
+      assert(g1(1L) === Set("east") && g1(2L) === Set("south") && g1(3L) === Set("west"))
+      assert((g1 -- Seq(1L, 2L, 3L)).values.flatten.toSet === Set("unknown"))
+
+      val dim2 = Seq((1L, "zeta"), (1L, "alpha"), (2L, "changed"), (3L, "central"),
+        (4L, "added")).toDF("store_id", "region_nm")
+      val r2 = NightlyRun.run(spark, martDir, stores = 60, lo = lo, hi = hi,
+        transport = new Store2DownTransport, storeDim = dim2)
+      assert(r2.decoded === exp.size.toLong - 2L && r2.merged === exp.size.toLong)
+      assert(r2.gatePassed, s"gate failed: ${r2.gate.filterNot(_.passed)}")
+      val mart = spark.read.parquet(martDir)
+      assert(mart.count() === exp.size.toLong)
+      val g2 = regions
+      assert(g2(2L) === Set("south"), "a standing winner must keep its stored region")
+      assert(g2(1L) === Set("alpha") && g2(3L) === Set("central") && g2(4L) === Set("added"),
+        s"re-sent stores must take the current dim value: $g2")
+      assert((g2 -- Seq(1L, 2L, 3L, 4L)).values.flatten.toSet === Set("unknown"))
+      val k2 = mart.filter(col("store_id") === 2L).select("k").as[Long].collect().toSet
+      assert(k2.forall(_ < 10L), s"store 2 must keep its tick-1 measures: $k2")
+    } finally rmMart(martDir)
+  }
+
+  test("a steady tick starts no job outside a SQL execution") {
+    // every job of a re-send must belong to a planned query: a side job
+    // (e.g. inferring the standing slice's schema from parquet footers)
+    // is fixed cost on the tick's critical path that no plan shows
+    val martDir = Files.createTempDirectory("graft_nightly_side_").toString
+    val dim = Seq((1L, "north")).toDF("store_id", "region_nm")
+    val (lo, hi) = ("2024-08-01", "2024-08-02")
+    try {
+      NightlyRun.run(spark, martDir, stores = 60, lo = lo, hi = hi,
+        transport = new StubTransport, storeDim = dim)
+      val jc = new JobCounter(spark.sparkContext)
+      val (r, side) = try jc.outsideSql {
+        NightlyRun.run(spark, martDir, stores = 60, lo = lo, hi = hi,
+          transport = new RevisedTransport, storeDim = dim)
+      } finally jc.close()
+      assert(r.gatePassed)
+      assert(side.isEmpty, s"jobs without spark.sql.execution.id: $side")
+    } finally rmMart(martDir)
   }
 }
