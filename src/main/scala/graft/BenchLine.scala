@@ -1,354 +1,89 @@
 package graft
 
-/** One derivation for the run/boot identity stamp every measurement
-  * line carries. Bench.scala and DevScaleLadder.scala used to inline
-  * this block separately, each truncating now/uptime on its own, so
-  * the derivation (and the adjudicator's 60 s same-boot tolerance it
-  * must stay inside) could drift apart — r11 ADVICE item. The ±1 s
-  * jitter between two reads is inherent (both fields truncate a
-  * moving clock); what the shared helper pins is that both emitters
-  * compute boot the same way from the same reads.
-  */
-object BenchStamp {
-  /** (epoch seconds now, boot epoch = now − /proc/uptime). Linux-only
-    * uptime; absent, the boot half is skipped rather than guessed. */
-  def stamp(): (Long, Option[Long]) = {
-    val nowSec = System.currentTimeMillis() / 1000
-    val boot = scala.util.Try {
-      val up = scala.io.Source.fromFile("/proc/uptime")
-      try up.mkString.split("\\s+")(0).toDouble.toLong finally up.close()
-    }.toOption.map(nowSec - _)
-    (nowSec, boot)
-  }
-
-  /** The `,"ts":…[,"boot":…]` JSON fragment both emitters append. */
-  def fragment(nowSec: Long, boot: Option[Long]): String =
-    s""","ts":$nowSec""" + boot.map(b => s""","boot":$b""").getOrElse("")
-}
-
-/** Storm-robust bench-line self-adjudication (r11 VERDICT item 1).
+/** The one place that knows the bench line format.
   *
-  * The driver's r11 bench line landed inside an ambient episode — the
-  * repo's own adjudicator flags it (18/52 queries inflated, per-query
-  * minima drifted together) — but the only number a casual reader
-  * sees is `"value": 59.6` where the same-boot calm window measured
-  * 44.5 s. These helpers make every line carry the adjudication
-  * evidence itself:
+  * Bench hands over one [[Result]] per timed query; [[render]] builds
+  * both lines from them:
   *
-  *   - `total_min`  — sum of per-query MINIMA. A transient stall
-  *     inflates medians but rarely all three back-to-back reps, so
-  *     the min-sum is the contamination-robust aggregate of the same
-  *     run (it is NOT a replacement for the median contract — a
-  *     sustained storm inflates minima too — but it bounds how much
-  *     of `value` is one-rep noise).
-  *   - `probe_flagged` — how many queries' ambient probes (CPU
-  *     canary / fsync'd io probe) read elevated against this line's
-  *     OWN probe medians: intra-line evidence of a mid-run episode.
-  *   - `machine_state` — verdict vs the most recent committed line
-  *     that is actually floor-comparable (same fixture bytes, same
-  *     boot, full suite): median per-query min-ratio ≥ 1.2 ⇒ the
-  *     machine changed speed under this run ("storm"), ≤ 1/1.2 ⇒ it
-  *     sped up ("faster" — i.e. the BASELINE was the stormy one),
-  *     else "calm". No comparable line ⇒ "no-baseline".
+  *   - the FULL line — `value` (sum of per-query medians), `total_min`
+  *     (sum of per-query minima), the per-query `queries` medians and
+  *     `spread` min/med/max. Bench prints it and appends it to the
+  *     bench ledger, so per-query history stays reviewable.
+  *   - the COMPACT line — the same head and tail with `n_queries` in
+  *     place of the per-query maps, bounded in length. Bench prints it
+  *     as the very last stdout line: the driver keeps only a short
+  *     stdout tail, and the full line's 113-entry maps push the total
+  *     out of it.
   *
-  * Thresholds mirror tools/bench_adjudicate.py — one reading rule,
-  * two implementations, both pinned by BenchLineSpec.
+  * Both carry `failed` (query → reps that threw) when any rep threw: a
+  * failed rep's elapsed is time-to-fail, not a measurement, and the
+  * line must say so rather than report it as a plausible median. Both
+  * carry `only` (the selected names) on a SPARK_GRAFT_BENCH_ONLY
+  * subset run, so a subset line can't be mistaken for a full pass.
   */
 object BenchLine {
-  import org.json4s._
-  import org.json4s.jackson.JsonMethods
-
-  /** tools/bench_adjudicate.py: MINSHIFT / MIN_SECS / CANARY_UP / IO_UP */
-  val MinShift = 1.2
-  val MinSecs = 0.25
-  val CanaryUp = 1.8
-  val IoUp = 2.0
-  /** Absolute-floor storm bar (r17 VERDICT item 1): machine_state
-    * compares line-over-line, so a multi-line ESCALATING storm reads
-    * "calm" at every step — r17's graded line sat at vs_floor 6.26
-    * with line-over-line min_ratio 1.09 and self-labeled "calm",
-    * misleading exactly the consumer (the driver) the field exists
-    * for. A line whose min-sum exceeds this multiple of the committed
-    * record floor cannot be calm regardless of its neighbor; the
-    * anchor wrapper learned the same lesson earlier (its acceptance
-    * bar is vs_floor ≤ 1.25 after pf-only acceptance missed two
-    * broad-mild-inflation lines live). 1.5 deliberately sits above
-    * the wrapper's 1.25 accept bar: between them is "not accepted as
-    * an anchor, but not provably a storm" — the verdict only claims
-    * storm where the evidence is unambiguous. Mirrored in
-    * tools/bench_adjudicate.py (STORM_VS_FLOOR). */
-  val StormVsFloor = 1.5
-  /** same-boot tolerance (seconds) — covers the stamp's ±1 s jitter */
-  val BootTolSecs = 60L
-  /** fewer comparable queries than this is not a floor signal */
-  val MinRatios = 5
 
   def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
-  /** A committed line reduced to what floor comparison needs.
-    * `failed` — queries whose reps threw in that run (r12 field): their
-    * recorded numbers are time-to-fail, not measurements, so they are
-    * excluded from floor comparison on either side. */
-  final case class Baseline(ts: Long, boot: Option[Long], fixtures: String,
-                            mins: Map[String, Double], meds: Map[String, Double],
-                            failed: Set[String] = Set.empty)
+  /** One query's timed reps (seconds, in rep order); `failed` counts
+    * the reps that threw — their elapsed time stays in `samples`. */
+  final case class Result(name: String, samples: Seq[Double], failed: Int)
 
-  final case class MachineState(verdict: String, minRatio: Option[Double],
-                                n: Int, vsTs: Option[Long],
-                                basis: Option[String] = None) {
-    /** `"machine_state":{…}` fragment (absent sub-fields omitted). */
-    def json: String = {
-      def r2(x: Double): Double = math.rint(x * 100) / 100
-      val mr = minRatio.map(r => s""","min_ratio":${r2(r)}""").getOrElse("")
-      val vs = vsTs.map(t => s""","vs_ts":$t""").getOrElse("")
-      val bs = basis.map(b => s""","basis":"$b"""").getOrElse("")
-      s"""{"verdict":"$verdict"$mr,"n":$n$vs$bs}"""
+  /** Resolve a SPARK_GRAFT_BENCH_ONLY value (comma-separated names)
+    * against the registry. Unset selects every query; either way the
+    * selection runs in sorted registry order, the order of a full
+    * pass. A name the registry lacks — or a value naming no query at
+    * all — fails here, so Bench stops before its warm-up instead of
+    * timing nothing and reporting 0.0. */
+  def select(registry: Iterable[String], only: Option[String]): Seq[String] = {
+    val all = registry.toSeq.sorted
+    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq) match {
+      case None => all
+      case Some(names) =>
+        require(names.nonEmpty, "SPARK_GRAFT_BENCH_ONLY names no query")
+        val unknown = names.filterNot(all.toSet).distinct
+        require(unknown.isEmpty,
+          s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.mkString(",")}")
+        all.filter(names.toSet)
     }
   }
 
-  /** Storm-proof the line-over-line verdict with the absolute floor
-    * (r17 VERDICT item 1). `vsFloor` is this run's min-sum over the
-    * committed record (the line's own `vs_floor` field; None on
-    * subset/failed runs where that field is suppressed). ANY non-storm
-    * verdict — "calm", "faster", and "no-baseline" alike (a first line
-    * on a boot far above floor is still a storm observation) — at
-    * vs_floor > [[StormVsFloor]] is promoted to
-    * "storm" with `basis:"vs_floor"` so a consumer can see WHY the
-    * min_ratio it carries still reads near 1. The line-over-line
-    * evidence (minRatio/n/vsTs) is deliberately preserved, not
-    * erased — it is what proves the storm was multi-line. */
-  def stormProof(ms: MachineState, vsFloor: Option[Double]): MachineState =
-    vsFloor match {
-      case Some(vf) if vf > StormVsFloor && ms.verdict != "storm" =>
-        ms.copy(verdict = "storm", basis = Some("vs_floor"))
-      case _ => ms
-    }
+  /** JSON string literal. `sf` is the one raw external string in the
+    * line; query names are registry keys ([A-Za-z0-9_]+) and the
+    * fixture fingerprint is hex, so neither needs escaping. */
+  private def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
-  private def num(v: JValue): Option[Double] = v match {
-    case JDouble(d)  => Some(d)
-    case JInt(i)     => Some(i.toDouble)
-    case JLong(l)    => Some(l.toDouble)
-    case JDecimal(d) => Some(d.toDouble)
-    case _           => None
-  }
+  private def r4(x: Double): Double = math.rint(x * 1e4) / 1e4
 
-  /** Parse committed jsonl lines into comparable baselines. Excluded
-    * by design: subset (`"only"`) lines — they measure in a different
-    * suite context — and lines without a spread block or stamp
-    * (pre-r7 history). A malformed line is skipped, never fatal: the
-    * bench must run even if the history file is damaged.
-    */
-  def parseBaselines(lines: Seq[String]): Seq[Baseline] = lines.flatMap { ln =>
-    scala.util.Try {
-      val j = JsonMethods.parse(ln)
-      val fields = j match { case JObject(fs) => fs.toMap; case _ => Map.empty[String, JValue] }
-      if (fields.contains("only")) None
-      else for {
-        ts <- fields.get("ts").flatMap(num).map(_.toLong)
-        fx <- fields.get("fixtures").collect { case JString(s) => s }
-        spread <- fields.get("spread").collect { case JObject(fs) => fs }
-        meds <- fields.get("queries").collect { case JObject(fs) =>
-          fs.flatMap { case (k, v) => num(v).map(k -> _) }.toMap }
-      } yield {
-        val mins = spread.flatMap { case (q, v) =>
-          v match {
-            case JObject(qs) => qs.toMap.get("min").flatMap(num).map(q -> _)
-            case _           => None
-          }
-        }.toMap
-        val failed = fields.get("failed") match {
-          case Some(JObject(fs)) => fs.map(_._1).toSet
-          case _                 => Set.empty[String]
-        }
-        Baseline(ts, fields.get("boot").flatMap(num).map(_.toLong), fx, mins, meds, failed)
+  /** The full line, or with `compact` the bounded summary line.
+    * `subset` marks a SPARK_GRAFT_BENCH_ONLY run. */
+  def render(results: Seq[Result], fixtures: String, reps: Int, ts: Long,
+             sf: String, subset: Boolean, compact: Boolean): String = {
+    val total = results.map(r => median(r.samples)).sum
+    val totalMin = results.map(_.samples.min).sum
+    val failed = results.filter(_.failed > 0)
+      .map(r => s""""${r.name}":${r.failed}""")
+    val failedField =
+      if (failed.isEmpty) "" else failed.mkString(""","failed":{""", ",", "}")
+    val body =
+      if (compact) s""","n_queries":${results.size}"""
+      else {
+        val qs = results.map(r => s""""${r.name}":${median(r.samples)}""")
+          .mkString("{", ",", "}")
+        val spread = results.map { r =>
+          s""""${r.name}":{"min":${r4(r.samples.min)},"med":${r4(median(r.samples))},"max":${r4(r.samples.max)}}"""
+        }.mkString("{", ",", "}")
+        s""","queries":$qs,"spread":$spread"""
       }
-    }.toOption.flatten
-  }
-
-  /** Verdict for a run with per-query minima `mins` against the most
-    * recent comparable line in `history` (same fixtures; both boots
-    * known and within [[BootTolSecs]]). Ratios are restricted to
-    * queries whose BASELINE median clears [[MinSecs]] — sub-250 ms
-    * floors are scheduling jitter (adjudicator rule, verbatim).
-    * Queries that failed in either run (`failed` here = current run;
-    * `b.failed` = baseline's own field) carry time-to-fail numbers and
-    * are excluded from the ratio set.
-    */
-  def machineState(history: Seq[Baseline], boot: Option[Long],
-                   fixtures: String, mins: Map[String, Double],
-                   failed: Set[String] = Set.empty): MachineState = {
-    val base = history.reverseIterator.find { b =>
-      b.fixtures == fixtures &&
-        (for (x <- b.boot; y <- boot) yield math.abs(x - y) <= BootTolSecs)
-          .getOrElse(false)
-    }
-    base match {
-      case None => MachineState("no-baseline", None, 0, None)
-      case Some(b) =>
-        val ratios = for {
-          (q, m) <- mins.toSeq
-          if !failed.contains(q) && !b.failed.contains(q)
-          bm <- b.mins.get(q)
-          bmed <- b.meds.get(q)
-          if bmed >= MinSecs && bm > 0
-        } yield m / bm
-        if (ratios.size < MinRatios) MachineState("no-baseline", None, ratios.size, Some(b.ts))
-        else {
-          val r = median(ratios)
-          val v =
-            if (r >= MinShift) "storm"
-            else if (r <= 1.0 / MinShift) "faster"
-            else "calm"
-          MachineState(v, Some(r), ratios.size, Some(b.ts))
-        }
-    }
-  }
-
-  /** Record floor band from committed history (r15, VERDICT item 4):
-    * the judge reading only `"value"` saw 49.3 s where the same-code
-    * floor was 39.9 — nothing in the line said "above band". This
-    * computes [lo, hi] where `lo` is the SMALLEST min-sum among
-    * comparable committed lines and `hi = lo × MinShift` (the repo's
-    * own machine-state threshold: within 1.2× of the record is the
-    * band a calm boot reproduces). Comparable = same fixture bytes,
-    * the exact same query set (so sums mean the same thing — the
-    * surface is frozen, so real full lines always match), and no
-    * failed queries (a time-to-fail min poisons the sum). The boot is
-    * deliberately NOT required to match: a floor demonstrated on any
-    * boot is a demonstrated floor of the code+data, which is exactly
-    * what "above band" should be judged against.
-    * The third element is the TS of the line that set the record
-    * (r15 ADVICE): without provenance, an accepted code-level slowdown
-    * leaves every future line permanently "above band" against an
-    * obsolete floor with no way to see which line anchors it. The
-    * documented rebaseline path is `SPARK_GRAFT_FLOOR_SINCE` (Bench
-    * .scala): a cutoff epoch-ts that excludes pre-shift lines from the
-    * floor computation — the emitted `floor_since` field records that
-    * the band was deliberately re-anchored. */
-  def floorBand(history: Seq[Baseline], fixtures: String,
-                keys: Set[String]): Option[(Double, Double, Long)] = {
-    val sums = history.collect {
-      case b if b.fixtures == fixtures && b.mins.keySet == keys &&
-        b.failed.isEmpty => (b.mins.values.sum, b.ts)
-    }
-    if (sums.isEmpty) None
-    else { val (lo, ts) = sums.minBy(_._1); Some((lo, lo * MinShift, ts)) }
-  }
-
-  /** Cross-line per-query floor (r15 quiesce experiment): on an aged
-    * boot, a single line's min-sum is inflated by STALL SAMPLING —
-    * each run catches a different subset of queries mid-stall — so
-    * even the best single-line min-sum (floorBand's `lo`) overstates
-    * the code's demonstrated cost. The truthful reference is the sum
-    * over queries of the minimum per-query min across ALL comparable
-    * committed lines: r15 measured three late-boot lines at 44.3/45.6/
-    * 49.0 min-sum whose cross-line combination lands at 38.1, inside
-    * the committed band. Comparability mirrors floorBand (same
-    * fixture bytes, full-suite lines only — parseBaselines already
-    * drops subset lines) but deliberately does NOT require an exact
-    * key-set match per line: each query's floor is its own evidence.
-    * Per-query failed exclusions apply (a time-to-fail min is not a
-    * floor). None unless EVERY current key has at least one committed
-    * floor — a partial sum would silently compare different suites. */
-  def crossFloor(history: Seq[Baseline], fixtures: String,
-                 keys: Set[String]): Option[Double] = {
-    val floors = keys.toSeq.flatMap { q =>
-      val ms = history.collect {
-        case b if b.fixtures == fixtures && !b.failed.contains(q) &&
-          b.mins.contains(q) => b.mins(q)
-      }
-      if (ms.isEmpty) None else Some(ms.min)
-    }
-    if (floors.size == keys.size && keys.nonEmpty) Some(floors.sum) else None
-  }
-
-  /** Per-query committed floor map: for each query, the minimum of its
-    * per-line minima across comparable committed lines (same fixture
-    * bytes; per-query failed exclusions — a time-to-fail min is not a
-    * floor). This is crossFloor's component map exposed, so the r20
-    * re-rep mechanism and the cross-floor sum can never disagree about
-    * what a query's demonstrated floor is. */
-  def perQueryFloors(history: Seq[Baseline], fixtures: String): Map[String, Double] =
-    history.filter(_.fixtures == fixtures)
-      .flatMap(b => (b.mins -- b.failed).toSeq)
-      .groupMapReduce(_._1)(_._2)(math.min)
-
-  /** Bounded storm-resistance re-rep targets (r19 VERDICT item 1, r20).
-    *
-    * Four consecutive driver bench lines landed inside ambient storms
-    * and committed face values 3–9× the floor band even though the
-    * per-query minima were real executions of un-regressed code. The
-    * honest shrink: at the END of the run (when a 10–20 min storm wave
-    * has often passed), grant a few extra reps to exactly the queries
-    * whose min-of-reps sits above [[StormVsFloor]] × their committed
-    * per-query floor — the same 1.5 bar the line's own storm verdict
-    * uses; below it the evidence is ambiguous and a re-rep would just
-    * be band-hunting. The bar alone keeps this honest in both worlds:
-    * if the excursion was weather, the extra reps measure the calm
-    * truth; if it was a real code regression, they re-measure the same
-    * slow code and change nothing.
-    *
-    * Deliberately NOT gated on the query's own probe flag (the r19
-    * VERDICT's first sketch): the probes are point samples taken
-    * BEFORE each rep loop, so a wave arriving DURING the loop never
-    * coincides with its own flag — measured live on this machine's
-    * first new-code line (vs_floor 1.44): 14 queries >1.5× floor,
-    * 11 probe-flagged, intersection EMPTY. Requiring the coincidence
-    * makes the mechanism fire exactly never in the broad-mild-storm
-    * regime it exists for.
-    *
-    * The per-query min over ALL reps (primary + extra) is still a real
-    * measured execution, so `total_min`'s definition is untouched;
-    * medians stay over the primary reps only (the median-of-N contract
-    * is unchanged). Floors below [[MinSecs]] are excluded — sub-250 ms
-    * readings are scheduling jitter by the adjudicator's own rule, and
-    * a 2.5× "inflation" of a 50 ms query is not storm evidence. Failed
-    * queries are excluded (their minima are time-to-fail; re-running a
-    * broken query cannot fix the line). Targets return in input order
-    * so the extra reps run in suite order, deterministically. */
-  def rerepTargets(mins: Seq[(String, Double)], floors: Map[String, Double],
-                   failed: Set[String]): Seq[String] =
-    mins.collect {
-      case (q, m) if !failed.contains(q) &&
-        floors.get(q).exists(f => f >= MinSecs && m > StormVsFloor * f) => q
-    }
-
-  /** Count of queries whose (canary, io) probes read elevated against
-    * this line's own probe medians — the adjudicator's per-query
-    * elevation rule applied intra-line. */
-  def probeFlagged(probes: Seq[(Double, Double)]): Int =
-    if (probes.isEmpty) 0
-    else {
-      val cnMed = math.max(median(probes.map(_._1)), 1e-9)
-      val ioMed = math.max(median(probes.map(_._2)), 1e-9)
-      probes.count { case (cn, io) => cn > CanaryUp * cnMed || io > IoUp * ioMed }
-    }
-
-  /** Compact self-contained summary line (r15 VERDICT item 1): the
-    * driver keeps only a short stdout TAIL, and the full line's
-    * per-query queries/spread/ambient maps (113 entries each) push the
-    * total out of it — BENCH_r13/r14/r15.json all read `"parsed":
-    * null`. This line carries everything a grader needs (total,
-    * min-sum, probe count, machine state, floor anchors, failures)
-    * and NO per-query map, so Bench prints it as the VERY LAST stdout
-    * line and the driver's tail always contains it whole. It is
-    * stdout-only by design: bench_full.jsonl keeps full lines so
-    * parseBaselines history stays per-query-rich (a compact line has
-    * no spread and would be dropped by the parser anyway).
-    *
-    * `floorField`/`failedField` are the exact fragments the full line
-    * embeds (empty when absent) so the two lines can never disagree.
-    */
-  def compactLine(value: Double, totalMin: Double, probeFlagged: Int,
-                  msJson: String, floorField: String, failedField: String,
-                  nQueries: Int, fixtures: String, reps: Int,
-                  stampFragment: String, sfJson: String,
-                  onlyField: String = "", rerepped: Int = 0): String = {
-    def r4(x: Double): Double = math.rint(x * 1e4) / 1e4
-    // rerep is a COUNT here, not the full line's per-query map: a
-    // storm-wide re-rep names ~30 queries and the map would blow the
-    // bounded-length guarantee this line exists for.
-    val rr = if (rerepped > 0) s""","rerep":$rerepped""" else ""
-    s"""{"metric":"total","value":${r4(value)},"unit":"sec","total_min":${r4(totalMin)},"probe_flagged":$probeFlagged,"machine_state":$msJson,"n_queries":$nQueries$floorField$failedField$rr,"fixtures":"$fixtures","reps":$reps$stampFragment,"sf":$sfJson$onlyField,"compact":true}"""
+    val onlyField =
+      if (subset) s""","only":"${results.map(_.name).mkString(",")}"""" else ""
+    val value = if (compact) r4(total) else total
+    val tail = if (compact) ""","compact":true""" else ""
+    s"""{"metric":"total","value":$value,"unit":"sec","total_min":${r4(totalMin)}$failedField$body,"fixtures":"$fixtures","reps":$reps,"ts":$ts,"sf":${jsonString(sf)}$onlyField$tail}"""
   }
 }

@@ -29,12 +29,11 @@ package graft
   * warmN=5, plateau at 20; q104's calm arms agree). RULE: isolated
   * pricings run warmN=20 or are read as upper bounds only; warm with
   * the cheap registry head, never after a shuffle-heavy query (GC
-  * debt). The canary itself needs ~warmN=20 to read calm on a cold
-  * JVM — do not read a high isolated canary as proof of ambient load.
+  * debt).
   *
   * Usage: tools/spark_java.sh graft.DevIsolated <sfDir> <query> [reps] [warmN]
   * Emits one JSON line: per-rep samples (JIT decay is visible rep-by-
-  * rep), min/med, canary/io/gc probes, and the arm's warmN.
+  * rep), min/med, and the arm's warmN.
   */
 object DevIsolated {
   def main(args: Array[String]): Unit = {
@@ -67,11 +66,6 @@ object DevIsolated {
       }
     }
 
-    val probes = new AmbientProbes(spark)
-    probes.warmup()
-    val cn = probes.canary()
-    val ioT = probes.ioProbe()
-    val gc0 = probes.gcMillis()
     val samples = (1 to reps).map { i =>
       val t0 = System.nanoTime()
       try queries(target)(spark, sfDir).count()
@@ -80,16 +74,13 @@ object DevIsolated {
       }
       (System.nanoTime() - t0) / 1e9
     }
-    val gcMs = probes.gcMillis() - gc0
     def r4(x: Double): Double = math.rint(x * 1e4) / 1e4
-    val (nowSec, bootOpt) = BenchStamp.stamp()
     println(
       s"""{"isolated":{"query":"$target","warm_n":$warmN,""" +
       s""""warmed":${warmed.size},"reps":$reps,""" +
       s""""samples":[${samples.map(r4).mkString(",")}],""" +
       s""""min":${r4(samples.min)},"med":${r4(BenchLine.median(samples))},""" +
-      s""""canary":${r4(cn)},"io":${r4(ioT)},"gc":$gcMs,""" +
-      s""""fixtures":"${Fixtures.fingerprint(sfDir)}"${BenchStamp.fragment(nowSec, bootOpt)}}}""")
+      s""""fixtures":"${Fixtures.fingerprint(sfDir)}","ts":${System.currentTimeMillis() / 1000}}}""")
     spark.stop()
   }
 }

@@ -12,16 +12,12 @@
 #
 # HEAP: deliberately JVM-default (~25% of RAM) when no -Xmx is passed —
 # build.sbt forks with -Xmx8g, but every committed bench/ladder line
-# was taken at the default, so silently matching sbt here would shift
-# the floor band and break same-boot comparability (r14 review weighed
-# and declined the change). Pass -Xmx explicitly for a bounded run;
+# was taken at the default. Pass -Xmx explicitly for a bounded run;
 # the r14 q52 three-arm experiment measured heap size as floor-neutral.
 #
 # Usage: tools/spark_java.sh [java-opts...] <MainClass> [args...]
 #   e.g. env SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
 #          tools/spark_java.sh -Xmx16g graft.Bench
-#   (compose with tools/idle_run.sh for measurements:
-#    tools/idle_run.sh -- env ... tools/spark_java.sh -Xmx16g graft.Bench)
 set -eu
 cd "$(dirname "$0")/.."
 PKGS=(
