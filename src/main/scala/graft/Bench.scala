@@ -19,7 +19,7 @@ object Bench {
     require(reps > 0, s"SPARK_GRAFT_BENCH_REPS must be positive, got $reps")
     val queries = SparkEntry.queries
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-    val selected = BenchLine.select(queries.keys, only)
+    val selected = SparkEntry.select(only)
     val spark = Session.local(Session.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warm-up: touch every table so JVM startup, codegen

@@ -18,8 +18,10 @@ package graft
   * Both carry `failed` (query → reps that threw) when any rep threw: a
   * failed rep's elapsed is time-to-fail, not a measurement, and the
   * line must say so rather than report it as a plausible median. Both
-  * carry `only` (the selected names) on a SPARK_GRAFT_BENCH_ONLY
-  * subset run, so a subset line can't be mistaken for a full pass.
+  * carry `only` on a SPARK_GRAFT_BENCH_ONLY subset run, so a subset
+  * line can't be mistaken for a full pass: the selected names in the
+  * full line, `true` in the compact one (a name list would unbound it;
+  * `n_queries` gives the count).
   */
 object BenchLine {
 
@@ -29,29 +31,12 @@ object BenchLine {
     * the reps that threw — their elapsed time stays in `samples`. */
   final case class Result(name: String, samples: Seq[Double], failed: Int)
 
-  /** Resolve a SPARK_GRAFT_BENCH_ONLY value (comma-separated names)
-    * against the registry. Unset selects every query; either way the
-    * selection runs in sorted registry order, the order of a full
-    * pass. A name the registry lacks — or a value naming no query at
-    * all — fails here, so Bench stops before its warm-up instead of
-    * timing nothing and reporting 0.0. */
-  def select(registry: Iterable[String], only: Option[String]): Seq[String] = {
-    val all = registry.toSeq.sorted
-    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq) match {
-      case None => all
-      case Some(names) =>
-        require(names.nonEmpty, "SPARK_GRAFT_BENCH_ONLY names no query")
-        val unknown = names.filterNot(all.toSet).distinct
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.mkString(",")}")
-        all.filter(names.toSet)
-    }
-  }
-
-  /** JSON string literal. `sf` is the one raw external string in the
-    * line; query names are registry keys ([A-Za-z0-9_]+) and the
-    * fixture fingerprint is hex, so neither needs escaping. */
-  private def jsonString(s: String): String = "\"" + s.flatMap {
+  /** JSON string literal: quote, backslash and every control char
+    * (< 0x20) escaped. The one escaper of the bench line and Verify's
+    * JSON files. In the bench line `sf` is the one raw external string;
+    * query names are registry keys ([A-Za-z0-9_]+) and the fixture
+    * fingerprint is hex, so neither needs escaping. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
@@ -81,7 +66,9 @@ object BenchLine {
         s""","queries":$qs,"spread":$spread"""
       }
     val onlyField =
-      if (subset) s""","only":"${results.map(_.name).mkString(",")}"""" else ""
+      if (!subset) ""
+      else if (compact) ""","only":true"""
+      else s""","only":"${results.map(_.name).mkString(",")}""""
     val value = if (compact) r4(total) else total
     val tail = if (compact) ""","compact":true""" else ""
     s"""{"metric":"total","value":$value,"unit":"sec","total_min":${r4(totalMin)}$failedField$body,"fixtures":"$fixtures","reps":$reps,"ts":$ts,"sf":${jsonString(sf)}$onlyField$tail}"""

@@ -8,50 +8,41 @@ object Verify {
     // the driver always passes exactly two args → full dump)
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
+      case Array(s, o, f) => (s, o, Some(f))
       case _ => // r14 review: a bare MatchError explained nothing
         System.err.println(
           "usage: graft.Verify <sfDir> <outDir> [q1,q2,...]")
         sys.exit(64)
     }
+    // resolved before the session starts: an unknown name fails here,
+    // named, rather than selecting nothing
+    val selected = SparkEntry.select(only)
     val spark = Session.local(Session.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     var nDumped = 0
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { name =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         nDumped += 1
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // escape every string: a tab or CR in builder-authored SQL would
+    // otherwise make the driver's json.load fail and silently zero the
+    // round's correctness
+    val q = BenchLine.jsonString _
+    val json = selected.flatMap { n =>
+      SparkEntry.oracleSql.get(n).map(sql => s"${q(n)}: ${q(sql)}")
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // every ATTEMPTED query, oracle-backed or rows-only — the local
     // replica diffs this against the dump dirs so a rows-only query
     // that threw (no oracle entry to flag it) can't vanish silently
-    val attempted = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      attempted.map(q).mkString("[", ",", "]"))
+      selected.map(q).mkString("[", ",", "]"))
     // fixture-schema fingerprint: the driver regenerates the test
     // tables between rounds and their types can drift (round 9→10:
     // events.ts TIMESTAMP → TIMESTAMP_NTZ silently broke one query).
@@ -68,15 +59,13 @@ object Verify {
     // artifact: round 9 shipped a 112-entry CORRECTNESS_r9.json and
     // nobody noticed q95 was missing until round 10. Make that loud in
     // the run itself: print the registered-vs-dumped counts (the
-    // driver keeps a stdout tail) and exit non-zero on a full run with
-    // missing dumps, so a silently-thrown builder fails the run
-    // instead of shrinking the artifact.
-    val nRegistered = SparkEntry.queries.keys
-      .count(n => only.forall(_.contains(n)))
-    val counts = s"""{"n_registered":$nRegistered,"n_dumped":$nDumped}"""
+    // driver keeps a stdout tail) and exit non-zero when any selected
+    // query — full run or subset — failed to dump, so a silently-thrown
+    // builder fails the run instead of shrinking the artifact.
+    val counts = s"""{"n_registered":${selected.size},"n_dumped":$nDumped}"""
     println(s"[verify] $counts")
     Files.writeString(Paths.get(s"$outDir/counts.json"), counts)
     spark.stop()
-    if (only.isEmpty && nDumped != nRegistered) sys.exit(1)
+    if (nDumped != selected.size) sys.exit(1)
   }
 }

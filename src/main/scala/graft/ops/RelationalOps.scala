@@ -332,50 +332,6 @@ object RelationalOps {
       .select(kept ++ recCols: _*)
   }
 
-  /** Malformed-record quarantine: PERMISSIVE parse of a JSON string
-    * column where rows that fail to parse are KEPT, with the raw text
-    * captured in `quarantine_raw` — the engine's version of the
-    * reference's catch-log-continue per batch
-    * (kicc_to_tb_sales.py:97-98): one bad record must never kill (or
-    * silently vanish from) a 100-TB job. Returns the parsed columns
-    * plus `quarantine_raw` (null ⇔ row parsed cleanly); callers split
-    * good/bad with one filter each. `schema` must NOT already contain
-    * the quarantine column.
-    *
-    * from_json semantics under PERMISSIVE: a syntactically broken
-    * document yields a fully-null struct (quarantined, parsed columns
-    * all null); a parseable document with a wrong-typed field yields
-    * nulls for the bad fields only AND sets the corrupt record — such
-    * rows are quarantined too, with their well-typed fields populated
-    * alongside `quarantine_raw` for replay. The invariant callers may
-    * rely on is exactly "quarantine_raw IS NULL ⇔ the row parsed
-    * fully clean" — partially-parsed rows are in the BAD bucket, not
-    * silently half-good (P7's null-defaulting applies to fields the
-    * source legitimately omitted, which is not a parse error).
-    *
-    * Rows whose parse produces NO struct at all — a NULL input string,
-    * or the JSON text `null` — are ALSO quarantined (from_json returns
-    * a null struct for both, with no corrupt record set, so without
-    * this rule they would masquerade as clean all-null rows, breaking
-    * the "null quarantine_raw ⇔ parsed cleanly" replay contract).
-    * Their quarantine_raw is the input text, with NULL input recorded
-    * as the JSON text `null` — the replay text that reproduces the
-    * same non-struct outcome.
-    */
-  def parseWithQuarantine(raw: DataFrame, jsonCol: String,
-                          schema: StructType): DataFrame = {
-    val withCorrupt = schema.add("_corrupt_record", "string")
-    raw.withColumn("_rec", from_json(col(jsonCol), withCorrupt,
-        Map("mode" -> "PERMISSIVE",
-          "columnNameOfCorruptRecord" -> "_corrupt_record")))
-      .withColumn("_qraw",
-        when(col("_rec").isNull, coalesce(col(jsonCol), lit("null")))
-          .otherwise(col("_rec._corrupt_record")))
-      .select(col("_rec.*"), col("_qraw"))
-      .drop("_corrupt_record")
-      .withColumnRenamed("_qraw", "quarantine_raw")
-  }
-
   /** Skew-safe salted equi-join for BIG-fact × BIG-dim joins where the
     * fact side has hot keys: the fact's rows get a per-row salt in
     * [0, salts) and the dim side is replicated once per salt value, so

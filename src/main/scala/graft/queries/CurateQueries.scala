@@ -1,8 +1,8 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Graded, Tables}
 import graft.ops.{PrivacyOps, SampleOps, TextOps}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,13 +18,11 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle.
   */
 object CurateQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   /** The SQL twin of SampleOps.bucket — one shared definition. */
   private def bucketSql(key: String): String =
     graft.ops.SampleOps.bucketSql(key)
 
-  val queries: Map[String, Q] = Map(
+  val graded: Seq[Graded] = Seq(
     // §2k — PII release gate: stable keyed pseudonym (sha2-256 +
     // pepper), partial mask of the display name, quasi-identifier
     // generalization (balance → 1000-wide band), then a k-anonymity
@@ -34,7 +32,7 @@ object CurateQueries {
     // pure codegen'd projection; the audit is ONE window count over the
     // class key — a single shuffle, no join, one scan (kAnonymize's doc
     // explains why the old broadcast-join-back form was backwards).
-    "q86_pii_mask" -> ((s, d) => {
+    Graded("q86_pii_mask", (s, d) => {
       val base = Tables.customer(s, d).select(
         col("c_custkey"),
         PrivacyOps.pseudonym(col("c_name"), "graft-pepper").as("pseudonym"),
@@ -44,7 +42,25 @@ object CurateQueries {
       PrivacyOps.kAnonymize(base, Seq("c_nationkey", "bal_band"), 5L)
         .select(col("c_custkey"), col("pseudonym"), col("name_masked"),
           col("c_nationkey"), col("bal_band"), col("k_class"))
-    }),
+    },
+      Some("""WITH m AS (SELECT c_custkey,
+        |    sha256(c_name || '|graft-pepper') AS pseudonym,
+        |    substr(c_name, 1, 9)
+        |      || repeat('*', greatest(length(c_name) - 12, 0))
+        |      || substr(c_name,
+        |                length(c_name) - least(greatest(length(c_name) - 9, 0), 3) + 1,
+        |                least(greatest(length(c_name) - 9, 0), 3)) AS name_masked,
+        |    c_nationkey,
+        |    CASE WHEN isfinite(c_acctbal)
+        |         THEN CAST(floor(c_acctbal / 1000.0) AS BIGINT) END AS bal_band
+        |  FROM customer),
+        | k AS (SELECT *, count(*) OVER (PARTITION BY c_nationkey, bal_band)
+        |         AS k_class FROM m)
+        |SELECT c_custkey, pseudonym, name_masked,
+        |  CASE WHEN k_class >= 5 THEN c_nationkey END AS c_nationkey,
+        |  CASE WHEN k_class >= 5 THEN bal_band END AS bal_band,
+        |  k_class
+        |FROM k""".stripMargin)),
 
     // §2k — proportional quota sampling (largest-remainder method): a
     // fixed output budget (300 docs) allocated across sources in exact
@@ -58,7 +74,7 @@ object CurateQueries {
     // #sources (tiny — its global window is over that tiny relation,
     // never the corpus) and rides a broadcast join; the corpus pays
     // one per-source window shuffle.
-    "q87_quota_sample" -> ((s, d) => {
+    Graded("q87_quota_sample", (s, d) => {
       val budget = 300L
       val counts = Tables.documents(s, d)
         .groupBy(col("source")).agg(count(lit(1)).as("n"))
@@ -87,7 +103,22 @@ object CurateQueries {
         .withColumn("_rn", rn)
         .filter(col("_rn") <= col("quota"))
         .select(col("doc_id"), col("source"))
-    }),
+    },
+      Some("""WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
+        | t AS (SELECT sum(n) AS tot FROM c),
+        | q AS (SELECT source, n, (300 * n) // tot AS q0, (300 * n) % tot AS fr
+        |       FROM c CROSS JOIN t),
+        | r AS (SELECT source, q0, fr,
+        |         row_number() OVER (ORDER BY fr DESC, source) AS rk,
+        |         (SELECT 300 - sum(q0) FROM q) AS rem FROM q),
+        | quotas AS (SELECT source,
+        |   q0 + CASE WHEN rk <= rem THEN 1 ELSE 0 END AS quota FROM r),
+        | ranked AS (SELECT doc_id, source,
+        |   row_number() OVER (PARTITION BY source
+        |                      ORDER BY n_chars DESC, doc_id) AS rn
+        |   FROM documents)
+        |SELECT ranked.doc_id, ranked.source
+        |FROM ranked JOIN quotas USING (source) WHERE rn <= quota""".stripMargin)),
 
     // §2k — eval-set decontamination: flag every training doc sharing
     // at least one 3-gram with the held-out eval slice (doc_id ≡ 0
@@ -99,7 +130,7 @@ object CurateQueries {
     // only at-scale shuffle is the per-doc count agg. Shingles travel
     // as 64-bit hashes (never strings); the oracle re-derives the same
     // sets from the raw text.
-    "q88_decontam" -> ((s, d) => {
+    Graded("q88_decontam", (s, d) => {
       // rebalanceScan (r21): the shingle hashing (an INTERPRETED
       // zip_with chain over every token of every doc, run for both the
       // eval and train sides) otherwise executes inside the
@@ -117,7 +148,18 @@ object CurateQueries {
         .join(broadcast(eval_), "_h")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_shared"))
-    }),
+    },
+      Some("""WITH sh AS (SELECT doc_id,
+        |    list_distinct(list_transform(
+        |      range(1, len(string_split(text, ' ')) - 1),
+        |      i -> string_split(text, ' ')[i] || ' ' ||
+        |           string_split(text, ' ')[i+1] || ' ' ||
+        |           string_split(text, ' ')[i+2])) AS sh
+        |  FROM documents WHERE len(string_split(text, ' ')) >= 3),
+        | ev AS (SELECT DISTINCT unnest(sh) AS g FROM sh WHERE doc_id % 97 = 0),
+        | tr AS (SELECT doc_id, unnest(sh) AS g FROM sh WHERE doc_id % 97 <> 0)
+        |SELECT doc_id, count(*) AS n_shared
+        |FROM tr JOIN ev USING (g) GROUP BY 1""".stripMargin)),
 
     // §2k — leakage-safe split: the q63 hash split made DUPLICATE-
     // CONSISTENT. Near-duplicate clusters (q56's connected components
@@ -134,7 +176,7 @@ object CurateQueries {
     // gated) — re-running the iterative propagation per invocation
     // was r10's q89 perf flag, and a nightly split job would never do
     // it either.
-    "q89_group_split" -> ((s, d) => {
+    Graded("q89_group_split", (s, d) => {
       val comps = HardenQueries.neardupComponents(s, d)
       val docs = Tables.documents(s, d).select(col("doc_id"))
       val corpus = docs.unionByName(
@@ -146,7 +188,47 @@ object CurateQueries {
         "split_key", "split",
         Seq("train" -> 80, "val" -> 10, "test" -> 10))
         .select(col("doc_id"), col("split"))
-    }),
+    },
+      // the component derivation's corpus collapses dup doc_ids
+      // (max(text), r16 dupfacts probe — must match the engine's pair
+      // artifact); `ids` below deliberately does NOT collapse: the
+      // engine assigns a split PER CORPUS RECORD, and both copies of
+      // a dup id get the same (id-keyed) split either way
+      Some(s"""WITH RECURSIVE corpus AS (
+         |  SELECT doc_id, max(text) AS text FROM documents GROUP BY doc_id
+         |  UNION ALL SELECT doc_id + ${100000L} AS doc_id,
+         |    max(text) || ' graftdup' AS text FROM documents GROUP BY doc_id),
+         | sh AS (SELECT doc_id,
+         |   list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
+         |     i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
+         |   FROM corpus WHERE len(string_split(text,' ')) >= 3),
+         | pairs AS (
+         |   SELECT a.doc_id AS id_a, b.doc_id AS id_b
+         |   FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+         |   WHERE len(list_intersect(a.sh, b.sh)) * 5 >=
+         |         (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) * 4),
+         | edges AS (SELECT id_a AS u, id_b AS v FROM pairs
+         |           UNION SELECT id_b AS u, id_a AS v FROM pairs),
+         | reach(id, r) AS (
+         |   SELECT u, u FROM edges
+         |   UNION
+         |   SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id),
+         | comp AS (SELECT id AS doc_id, min(r) AS component
+         |          FROM reach GROUP BY id),
+         | ids AS (SELECT doc_id FROM documents
+         |         UNION ALL SELECT doc_id + ${100000L} FROM documents),
+         | keyed AS (SELECT ids.doc_id,
+         |   coalesce(comp.component, ids.doc_id) AS k
+         |   FROM ids LEFT JOIN comp USING (doc_id))
+         |SELECT doc_id,
+         |  -- NULL-key branch mirrors the engine's NULL-split contract
+         |  -- (r14 review; k = coalesce(component, doc_id) is non-null
+         |  -- whenever doc_id is, so this only matters off-fixture)
+         |  CASE WHEN k IS NULL THEN NULL
+         |       WHEN ${bucketSql("k")} < 80 THEN 'train'
+         |       WHEN ${bucketSql("k")} < 90 THEN 'val'
+         |       ELSE 'test' END AS split
+         |FROM keyed""".stripMargin)),
 
     // §2k — repeated-n-gram quality scoring (the Gopher/FineWeb
     // repetition rule): per doc, the fraction of its 3-gram slots
@@ -155,7 +237,7 @@ object CurateQueries {
     // and is dropped before training. Pure codegen'd projection over
     // the token array (array_distinct inside the row — no explode, no
     // shuffle, embarrassingly parallel at any scale).
-    "q90_repetition_score" -> ((s, d) => {
+    Graded("q90_repetition_score", (s, d) => {
       val toks = TextOps.tokens(col("text"))
       val total = greatest(size(toks) - 2, lit(0)).cast("long")
       val dist = size(TextOps.shingles(toks, 3)).cast("long")
@@ -170,7 +252,28 @@ object CurateQueries {
         .withColumn("dup_frac", when(col("n_ngrams") > 0,
           round(lit(1.0) - col("n_distinct") / col("n_ngrams"), 6)))
         .withColumn("is_repetitive", col("dup_frac") > 0.2)
-    }),
+    },
+      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
+        |           FROM documents),
+        | g AS (SELECT doc_id,
+        |   -- explicit NULL branch: DuckDB's greatest() SKIPS null
+        |   -- arguments, so greatest(len(NULL)-2, 0) is 0 where the
+        |   -- engine (and SQL null propagation) keeps a null-text doc's
+        |   -- counts NULL (r13 edge sweep)
+        |   CAST(CASE WHEN toks IS NULL THEN NULL
+        |        ELSE greatest(len(toks) - 2, 0) END AS BIGINT) AS n_ngrams,
+        |   CAST(len(list_distinct(list_transform(range(1, len(toks) - 1),
+        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])))
+        |     AS BIGINT) AS n_distinct
+        |  FROM t)
+        |SELECT doc_id, n_ngrams, n_distinct,
+        |  CASE WHEN n_ngrams > 0
+        |    THEN round(1.0 - CAST(n_distinct AS DOUBLE) / n_ngrams, 6)
+        |  END AS dup_frac,
+        |  CASE WHEN n_ngrams > 0
+        |    THEN round(1.0 - CAST(n_distinct AS DOUBLE) / n_ngrams, 6) > 0.2
+        |  END AS is_repetitive
+        |FROM g""".stripMargin)),
 
     // §2k — INCREMENTAL near-dup detection: tonight's delta probed
     // against the standing corpus — the nightly form of q29. The
@@ -189,7 +292,7 @@ object CurateQueries {
     // oracle, and the delta probe bounds the join fan-out anyway.
     // Oracle = exhaustive delta×corpus Jaccard — an independent
     // derivation with no LSH anywhere.
-    "q93_incremental_neardup" -> ((s, d) => {
+    Graded("q93_incremental_neardup", (s, d) => {
       val base = s"${System.getProperty("java.io.tmpdir")}/graft_q93_idx_v1_" +
         graft.Fixtures.tableFingerprint(d, "documents")
       val shP = s"$base/shingles"
@@ -237,7 +340,24 @@ object CurateQueries {
         broadcast(bands(shD)), s.read.parquet(bandP), "doc_id",
         maxBucket = Int.MaxValue)
       TextOps.jaccardVerify(cands, shS.unionByName(shD), "doc_id", "sh", 4, 5)
-    }),
+    },
+      Some("""WITH shS AS (SELECT doc_id,
+        |   list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
+        |     i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
+        |   FROM documents WHERE len(string_split(text,' ')) >= 3),
+        | d0 AS (SELECT doc_id + 200000 AS doc_id, text || ' graftdelta' AS text
+        |        FROM documents WHERE doc_id % 10 = 0),
+        | shD AS (SELECT doc_id,
+        |   list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
+        |     i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
+        |   FROM d0 WHERE len(string_split(text,' ')) >= 3)
+        |SELECT d.doc_id AS id_a, s.doc_id AS id_b,
+        |  CAST(len(list_intersect(d.sh, s.sh)) AS INT) AS n_inter,
+        |  CAST(len(d.sh) + len(s.sh) - len(list_intersect(d.sh, s.sh)) AS INT)
+        |    AS n_union
+        |FROM shD d JOIN shS s
+        |  ON len(list_intersect(d.sh, s.sh)) * 5 >=
+        |     (len(d.sh) + len(s.sh) - len(list_intersect(d.sh, s.sh))) * 4""".stripMargin)),
 
     // §2k — snapshot-diff CDC derivation: two logical snapshots of the
     // per-customer mart (trailing windows as of two run dates) full-
@@ -249,7 +369,7 @@ object CurateQueries {
     // load_store_data.py:77-84). Comparison runs on EXACT decimal
     // sums; doubles appear only in the output projection. One shuffle
     // per snapshot agg + the key-aligned join.
-    "q91_snapshot_cdc" -> ((s, d) => {
+    Graded("q91_snapshot_cdc", (s, d) => {
       def snap(lo: String, hi: String) = Tables.orders(s, d)
         .filter(col("o_orderdate") >= to_timestamp(lit(lo)) &&
           col("o_orderdate") < to_timestamp(lit(hi)))
@@ -284,140 +404,8 @@ object CurateQueries {
           col("amt_a").cast("double").as("amt_a"),
           nullablePin(col("n_b")).as("n_b"),
           col("amt_b").cast("double").as("amt_b"))
-    })
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q86_pii_mask" ->
-      """WITH m AS (SELECT c_custkey,
-        |    sha256(c_name || '|graft-pepper') AS pseudonym,
-        |    substr(c_name, 1, 9)
-        |      || repeat('*', greatest(length(c_name) - 12, 0))
-        |      || substr(c_name,
-        |                length(c_name) - least(greatest(length(c_name) - 9, 0), 3) + 1,
-        |                least(greatest(length(c_name) - 9, 0), 3)) AS name_masked,
-        |    c_nationkey,
-        |    CASE WHEN isfinite(c_acctbal)
-        |         THEN CAST(floor(c_acctbal / 1000.0) AS BIGINT) END AS bal_band
-        |  FROM customer),
-        | k AS (SELECT *, count(*) OVER (PARTITION BY c_nationkey, bal_band)
-        |         AS k_class FROM m)
-        |SELECT c_custkey, pseudonym, name_masked,
-        |  CASE WHEN k_class >= 5 THEN c_nationkey END AS c_nationkey,
-        |  CASE WHEN k_class >= 5 THEN bal_band END AS bal_band,
-        |  k_class
-        |FROM k""".stripMargin,
-    "q87_quota_sample" ->
-      """WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-        | t AS (SELECT sum(n) AS tot FROM c),
-        | q AS (SELECT source, n, (300 * n) // tot AS q0, (300 * n) % tot AS fr
-        |       FROM c CROSS JOIN t),
-        | r AS (SELECT source, q0, fr,
-        |         row_number() OVER (ORDER BY fr DESC, source) AS rk,
-        |         (SELECT 300 - sum(q0) FROM q) AS rem FROM q),
-        | quotas AS (SELECT source,
-        |   q0 + CASE WHEN rk <= rem THEN 1 ELSE 0 END AS quota FROM r),
-        | ranked AS (SELECT doc_id, source,
-        |   row_number() OVER (PARTITION BY source
-        |                      ORDER BY n_chars DESC, doc_id) AS rn
-        |   FROM documents)
-        |SELECT ranked.doc_id, ranked.source
-        |FROM ranked JOIN quotas USING (source) WHERE rn <= quota""".stripMargin,
-    "q88_decontam" ->
-      """WITH sh AS (SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(1, len(string_split(text, ' ')) - 1),
-        |      i -> string_split(text, ' ')[i] || ' ' ||
-        |           string_split(text, ' ')[i+1] || ' ' ||
-        |           string_split(text, ' ')[i+2])) AS sh
-        |  FROM documents WHERE len(string_split(text, ' ')) >= 3),
-        | ev AS (SELECT DISTINCT unnest(sh) AS g FROM sh WHERE doc_id % 97 = 0),
-        | tr AS (SELECT doc_id, unnest(sh) AS g FROM sh WHERE doc_id % 97 <> 0)
-        |SELECT doc_id, count(*) AS n_shared
-        |FROM tr JOIN ev USING (g) GROUP BY 1""".stripMargin,
-    "q89_group_split" ->
-      // the component derivation's corpus collapses dup doc_ids
-      // (max(text), r16 dupfacts probe — must match the engine's pair
-      // artifact); `ids` below deliberately does NOT collapse: the
-      // engine assigns a split PER CORPUS RECORD, and both copies of
-      // a dup id get the same (id-keyed) split either way
-      s"""WITH RECURSIVE corpus AS (
-         |  SELECT doc_id, max(text) AS text FROM documents GROUP BY doc_id
-         |  UNION ALL SELECT doc_id + ${100000L} AS doc_id,
-         |    max(text) || ' graftdup' AS text FROM documents GROUP BY doc_id),
-         | sh AS (SELECT doc_id,
-         |   list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
-         |     i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
-         |   FROM corpus WHERE len(string_split(text,' ')) >= 3),
-         | pairs AS (
-         |   SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |   FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |   WHERE len(list_intersect(a.sh, b.sh)) * 5 >=
-         |         (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) * 4),
-         | edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-         |           UNION SELECT id_b AS u, id_a AS v FROM pairs),
-         | reach(id, r) AS (
-         |   SELECT u, u FROM edges
-         |   UNION
-         |   SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id),
-         | comp AS (SELECT id AS doc_id, min(r) AS component
-         |          FROM reach GROUP BY id),
-         | ids AS (SELECT doc_id FROM documents
-         |         UNION ALL SELECT doc_id + ${100000L} FROM documents),
-         | keyed AS (SELECT ids.doc_id,
-         |   coalesce(comp.component, ids.doc_id) AS k
-         |   FROM ids LEFT JOIN comp USING (doc_id))
-         |SELECT doc_id,
-         |  -- NULL-key branch mirrors the engine's NULL-split contract
-         |  -- (r14 review; k = coalesce(component, doc_id) is non-null
-         |  -- whenever doc_id is, so this only matters off-fixture)
-         |  CASE WHEN k IS NULL THEN NULL
-         |       WHEN ${bucketSql("k")} < 80 THEN 'train'
-         |       WHEN ${bucketSql("k")} < 90 THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM keyed""".stripMargin,
-    "q90_repetition_score" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-        |           FROM documents),
-        | g AS (SELECT doc_id,
-        |   -- explicit NULL branch: DuckDB's greatest() SKIPS null
-        |   -- arguments, so greatest(len(NULL)-2, 0) is 0 where the
-        |   -- engine (and SQL null propagation) keeps a null-text doc's
-        |   -- counts NULL (r13 edge sweep)
-        |   CAST(CASE WHEN toks IS NULL THEN NULL
-        |        ELSE greatest(len(toks) - 2, 0) END AS BIGINT) AS n_ngrams,
-        |   CAST(len(list_distinct(list_transform(range(1, len(toks) - 1),
-        |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])))
-        |     AS BIGINT) AS n_distinct
-        |  FROM t)
-        |SELECT doc_id, n_ngrams, n_distinct,
-        |  CASE WHEN n_ngrams > 0
-        |    THEN round(1.0 - CAST(n_distinct AS DOUBLE) / n_ngrams, 6)
-        |  END AS dup_frac,
-        |  CASE WHEN n_ngrams > 0
-        |    THEN round(1.0 - CAST(n_distinct AS DOUBLE) / n_ngrams, 6) > 0.2
-        |  END AS is_repetitive
-        |FROM g""".stripMargin,
-    "q93_incremental_neardup" ->
-      """WITH shS AS (SELECT doc_id,
-        |   list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
-        |     i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
-        |   FROM documents WHERE len(string_split(text,' ')) >= 3),
-        | d0 AS (SELECT doc_id + 200000 AS doc_id, text || ' graftdelta' AS text
-        |        FROM documents WHERE doc_id % 10 = 0),
-        | shD AS (SELECT doc_id,
-        |   list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
-        |     i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
-        |   FROM d0 WHERE len(string_split(text,' ')) >= 3)
-        |SELECT d.doc_id AS id_a, s.doc_id AS id_b,
-        |  CAST(len(list_intersect(d.sh, s.sh)) AS INT) AS n_inter,
-        |  CAST(len(d.sh) + len(s.sh) - len(list_intersect(d.sh, s.sh)) AS INT)
-        |    AS n_union
-        |FROM shD d JOIN shS s
-        |  ON len(list_intersect(d.sh, s.sh)) * 5 >=
-        |     (len(d.sh) + len(s.sh) - len(list_intersect(d.sh, s.sh))) * 4""".stripMargin,
-    "q91_snapshot_cdc" ->
-      """WITH a AS (SELECT o_custkey, count(*) AS n_a,
+    },
+      Some("""WITH a AS (SELECT o_custkey, count(*) AS n_a,
         |    sum(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS amt_a
         |  FROM orders
         |  WHERE o_orderdate >= TIMESTAMP '1992-01-01 00:00:00'
@@ -442,6 +430,6 @@ object CurateQueries {
         |       ELSE 'unchanged' END AS status,
         |  a.n_a, CAST(a.amt_a AS DOUBLE) AS amt_a,
         |  b.n_b, CAST(b.amt_b AS DOUBLE) AS amt_b
-        |FROM a FULL OUTER JOIN b ON a.o_custkey = b.o_custkey""".stripMargin
+        |FROM a FULL OUTER JOIN b ON a.o_custkey = b.o_custkey""".stripMargin))
   )
 }

@@ -1,7 +1,6 @@
 package graft.queries
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Graded, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,8 +15,6 @@ import org.apache.spark.sql.functions._
   * decision is recomputed independently by the DuckDB oracle.
   */
 object DeepQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Shared tokenizer: lowercase, split on non-letter runs, drop the
     * boundary empties. Restricted to ASCII letters so the oracle's
     * regex engine (RE2) and Java's agree byte-for-byte.
@@ -25,7 +22,7 @@ object DeepQueries {
   private def tokens(text: org.apache.spark.sql.Column) =
     split(lower(text), "[^a-z]+")
 
-  val queries: Map[String, Q] = Map(
+  val graded: Seq[Graded] = Seq(
     // BM25 ranked retrieval (Robertson/Spärck Jones; k1=1.2, b=0.75)
     // over the English corpus for a fixed 3-term query. The corpus
     // statistics (df, N, avgdl) and the per-doc term frequencies all
@@ -38,7 +35,7 @@ object DeepQueries {
     // the formula the oracle restates. At 100 TB the tf relation is
     // the inverted-index build (q85) keyed by term; the query-time
     // probe touches only the query terms' postings — never the corpus.
-    "q78_bm25" -> ((s, d) => {
+    Graded("q78_bm25", (s, d) => {
       val qterms = Seq("spark", "hash", "window")
       val tf = graft.ops.Materialize.once("q78.tf",
         Tables.documents(s, d).filter(col("lang") === "en")
@@ -61,7 +58,21 @@ object DeepQueries {
           (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
         .groupBy(col("doc_id"))
         .agg(round(sum(col("_s")), 6).as("bm25"))
-    }),
+    },
+      Some("""WITH toks AS (
+        |  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
+        |  FROM documents WHERE lang = 'en'),
+        | tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
+        |        WHERE term <> '' GROUP BY 1, 2),
+        | dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
+        | stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
+        | dfreq AS (SELECT term, count(*) AS df FROM tf
+        |           WHERE term IN ('spark', 'hash', 'window') GROUP BY 1)
+        |SELECT tf.doc_id,
+        |  round(sum(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2) /
+        |            (tf + 1.2 * (0.25 + 0.75 * dl.dl / avgdl))), 6) AS bm25
+        |FROM tf JOIN dfreq USING (term) JOIN dl USING (doc_id) CROSS JOIN stats
+        |GROUP BY 1""".stripMargin)),
 
     // Event-funnel conversion (view → click → purchase, each stage
     // anchored at the user's FIRST qualifying event after the prior
@@ -71,7 +82,7 @@ object DeepQueries {
     // whole funnel is a single shuffle of the events scan. The oracle
     // formulates the same funnel as three joined GROUP BYs — an
     // independent derivation certifying the window chain.
-    "q79_funnel" -> ((s, d) => {
+    Graded("q79_funnel", (s, d) => {
       val w = Window.partitionBy(col("user_id"))
       Tables.events(s, d).select(col("user_id"), col("ts"), col("event_type"))
         .withColumn("v",
@@ -87,7 +98,23 @@ object DeepQueries {
         .agg(count(col("_v")).as("n_viewed"),
           count(col("_c")).as("n_clicked"),
           count(col("_p")).as("n_purchased"))
-    }),
+    },
+      Some("""WITH v AS (SELECT user_id, min(ts) AS v FROM events
+        |           WHERE event_type = 'view' GROUP BY 1),
+        | c AS (SELECT e.user_id, min(e.ts) AS c FROM events e
+        |       JOIN v ON e.user_id = v.user_id
+        |       WHERE e.event_type = 'click' AND e.ts >= v.v GROUP BY 1),
+        | p AS (SELECT e.user_id, min(e.ts) AS p FROM events e
+        |       JOIN c ON e.user_id = c.user_id
+        |       WHERE e.event_type = 'purchase' AND e.ts >= c.c GROUP BY 1)
+        |-- count(col) not count(*): a user whose every 'view' ts is
+        |-- NULL groups here with v = min(ts) = NULL — they never
+        |-- entered the funnel at any known instant, and the engine's
+        |-- window-min chain (count of non-null _v) agrees; count(*)
+        |-- counted the group anyway (r18 nulltime probe)
+        |SELECT (SELECT count(v) FROM v) AS n_viewed,
+        |       (SELECT count(c) FROM c) AS n_clicked,
+        |       (SELECT count(p) FROM p) AS n_purchased""".stripMargin)),
 
     // Time-RANGE trailing window: 7-day trailing spend per customer —
     // a range frame over the calendar, not a row-count frame (q22's
@@ -99,7 +126,7 @@ object DeepQueries {
     // oracle drives the frame with RANGE BETWEEN INTERVAL — a
     // different frame mechanism (calendar intervals vs day ordinals)
     // certifying the same semantics.
-    "q80_trailing_window" -> ((s, d) => {
+    Graded("q80_trailing_window", (s, d) => {
       val daily = Tables.orders(s, d)
         .groupBy(col("o_custkey"), col("o_orderdate").cast("date").as("day"))
         .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("_amt"))
@@ -109,7 +136,16 @@ object DeepQueries {
       daily.select(col("o_custkey"), col("day"),
         col("_amt").cast("double").as("day_amt"),
         sum(col("_amt")).over(w).cast("double").as("amt_7d"))
-    }),
+    },
+      Some("""WITH daily AS (
+        |  SELECT o_custkey, CAST(o_orderdate AS DATE) AS day,
+        |         sum(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS amt
+        |  FROM orders GROUP BY 1, 2)
+        |SELECT o_custkey, day, CAST(amt AS DOUBLE) AS day_amt,
+        |  CAST(sum(amt) OVER (PARTITION BY o_custkey ORDER BY day
+        |       RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW)
+        |       AS DOUBLE) AS amt_7d
+        |FROM daily""".stripMargin)),
 
     // Canonicalize-then-hash dedup: lowercase, strip every non-
     // alphanumeric run to a single space, trim, md5 — the
@@ -119,7 +155,7 @@ object DeepQueries {
     // the shuffle moves hashes, never document text. The md5 hex
     // string is graded too: both engines must canonicalize to the
     // identical byte sequence.
-    "q81_canonical_dedup" -> ((s, d) => {
+    Graded("q81_canonical_dedup", (s, d) => {
       val fp = md5(trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " ")))
       val w = Window.partitionBy(col("fp"))
       Tables.documents(s, d)
@@ -127,7 +163,13 @@ object DeepQueries {
         .select(col("doc_id"), col("fp"),
           min(col("doc_id")).over(w).as("keep_id"),
           count(lit(1)).over(w).as("n_same"))
-    }),
+    },
+      Some("""WITH c AS (SELECT doc_id,
+        |    md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
+        |  FROM documents)
+        |SELECT doc_id, fp, min(doc_id) OVER (PARTITION BY fp) AS keep_id,
+        |       count(*) OVER (PARTITION BY fp) AS n_same
+        |FROM c""".stripMargin)),
 
     // Incremental mart maintenance: merge a bounded delta's PARTIAL
     // aggregates into the standing mart by re-aggregating the union of
@@ -138,7 +180,7 @@ object DeepQueries {
     // from base data). The oracle aggregates the full window in one
     // pass — merged partials must be indistinguishable from a cold
     // recompute, which is exactly the associativity contract.
-    "q82_incremental_agg" -> ((s, d) => {
+    Graded("q82_incremental_agg", (s, d) => {
       def slice(lo: Option[String], hi: String) = {
         val base = Tables.orders(s, d)
           .filter(col("o_orderdate") < to_timestamp(lit(hi)))
@@ -153,7 +195,11 @@ object DeepQueries {
         .groupBy(col("o_custkey"))
         .agg(sum(col("n")).as("n"),
           sum(col("amt")).cast("double").as("amt"))
-    }),
+    },
+      Some("""SELECT o_custkey, count(*) AS n,
+        |  CAST(sum(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS amt
+        |FROM orders WHERE o_orderdate < TIMESTAMP '1996-01-08 00:00:00'
+        |GROUP BY 1""".stripMargin)),
 
     // Hot-key diagnosis: the top-20 heaviest join/agg keys with their
     // traffic share — the measurement that decides WHERE the salting
@@ -162,7 +208,7 @@ object DeepQueries {
     // TakeOrdered top-20 under a total order (count desc, key asc) —
     // no full sort, no driver collect, deterministic at any partition
     // count.
-    "q83_heavy_hitters" -> ((s, d) => {
+    Graded("q83_heavy_hitters", (s, d) => {
       val li = Tables.lineitem(s, d)
       val grouped = li.groupBy(col("l_suppkey")).agg(count(lit(1)).as("n"))
       // the grand total is the SUM of the per-key counts — deriving it
@@ -177,7 +223,12 @@ object DeepQueries {
         // engine and drops it on the other (r18 review pass 14)
         .orderBy(col("n").desc, col("l_suppkey").asc_nulls_last)
         .limit(20)
-    }),
+    },
+      Some("""WITH t AS (SELECT count(*) AS total FROM lineitem),
+        | h AS (SELECT l_suppkey, count(*) AS n FROM lineitem GROUP BY 1)
+        |SELECT l_suppkey, n, round(CAST(n AS DOUBLE) / total, 6) AS share
+        |FROM h CROSS JOIN t
+        |ORDER BY n DESC, l_suppkey LIMIT 20""".stripMargin)),
 
     // Edit-distance near-dup verification: Levenshtein ≤ 8 on 48-char
     // prefixes, blocked on (lang, length-band) so the quadratic
@@ -189,7 +240,7 @@ object DeepQueries {
     // itself is charset-clean). The 3-arg threshold form prunes the DP
     // early — a row over the bound costs O(threshold·len), not
     // O(len²).
-    "q84_editdist_neardup" -> ((s, d) => {
+    Graded("q84_editdist_neardup", (s, d) => {
       val b = Tables.documents(s, d).filter(col("lang") === "en")
         .select(col("doc_id"),
           floor(col("n_chars") / lit(16.0)).cast("long").as("bkt"),
@@ -201,7 +252,15 @@ object DeepQueries {
         .withColumn("dist", levenshtein(col("_pa"), col("_pb"), 8))
         .filter(col("dist") >= 0)
         .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
-    }),
+    },
+      Some("""WITH b AS (SELECT doc_id,
+        |    CAST(floor(n_chars / 16.0) AS BIGINT) AS bkt,
+        |    substr(text, 1, 48) AS pfx
+        |  FROM documents WHERE lang = 'en')
+        |SELECT a.doc_id AS id_a, b2.doc_id AS id_b,
+        |       CAST(levenshtein(a.pfx, b2.pfx) AS BIGINT) AS dist
+        |FROM b a JOIN b b2 ON a.bkt = b2.bkt AND a.doc_id < b2.doc_id
+        |WHERE levenshtein(a.pfx, b2.pfx) <= 8""".stripMargin)),
 
     // Inverted-index build: term → sorted posting list + document
     // frequency, the index q78's query-time probe assumes. Postings
@@ -211,7 +270,7 @@ object DeepQueries {
     // (term, shard) and delta-encoded rather than one array — same
     // build shape, bounded rows; the tail (most of the vocabulary)
     // fits exactly this layout.
-    "q85_inverted_index" -> ((s, d) =>
+    Graded("q85_inverted_index", (s, d) =>
       Tables.documents(s, d).filter(col("lang") === "en")
         .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
         .filter(col("term") =!= "").distinct()
@@ -219,7 +278,16 @@ object DeepQueries {
         .agg(count(lit(1)).as("n_docs"),
           array_join(
             transform(sort_array(collect_list(col("doc_id"))),
-              _.cast("string")), ",").as("postings"))),
+              _.cast("string")), ",").as("postings")),
+      Some("""WITH t AS (SELECT DISTINCT doc_id, term FROM (
+        |    SELECT doc_id,
+        |           unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
+        |    FROM documents WHERE lang = 'en')
+        |  WHERE term <> '')
+        |SELECT term, count(*) AS n_docs,
+        |  array_to_string(list(CAST(doc_id AS VARCHAR) ORDER BY doc_id), ',')
+        |    AS postings
+        |FROM t GROUP BY 1""".stripMargin)),
 
     // In-row analytics via higher-order functions: each doc's dominant
     // term (max count, lexicographic tie-break) computed ENTIRELY
@@ -241,7 +309,7 @@ object DeepQueries {
     // `>` — runs arrive in ascending term order, so ties keep the
     // earlier (lexicographically smaller) term, the same tiebreak the
     // comparator sort and the oracle's (n DESC, term) window encode.
-    "q104_hof_topterm" -> ((s, d) => {
+    Graded("q104_hof_topterm", (s, d) => {
       val sorted = array_sort(split(col("text"), " "))
       val zero = struct(
         lit(null).cast("string").as("prev"), lit(0L).as("cnt"),
@@ -272,101 +340,18 @@ object DeepQueries {
         .select(col("doc_id"),
           folded.getField("t").as("top_term"),
           folded.getField("c").cast("long").as("n_top"))
-    })
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q78_bm25" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
-        |  FROM documents WHERE lang = 'en'),
-        | tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |        WHERE term <> '' GROUP BY 1, 2),
-        | dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-        | stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-        | dfreq AS (SELECT term, count(*) AS df FROM tf
-        |           WHERE term IN ('spark', 'hash', 'window') GROUP BY 1)
-        |SELECT tf.doc_id,
-        |  round(sum(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2) /
-        |            (tf + 1.2 * (0.25 + 0.75 * dl.dl / avgdl))), 6) AS bm25
-        |FROM tf JOIN dfreq USING (term) JOIN dl USING (doc_id) CROSS JOIN stats
-        |GROUP BY 1""".stripMargin,
-    "q79_funnel" ->
-      """WITH v AS (SELECT user_id, min(ts) AS v FROM events
-        |           WHERE event_type = 'view' GROUP BY 1),
-        | c AS (SELECT e.user_id, min(e.ts) AS c FROM events e
-        |       JOIN v ON e.user_id = v.user_id
-        |       WHERE e.event_type = 'click' AND e.ts >= v.v GROUP BY 1),
-        | p AS (SELECT e.user_id, min(e.ts) AS p FROM events e
-        |       JOIN c ON e.user_id = c.user_id
-        |       WHERE e.event_type = 'purchase' AND e.ts >= c.c GROUP BY 1)
-        |-- count(col) not count(*): a user whose every 'view' ts is
-        |-- NULL groups here with v = min(ts) = NULL — they never
-        |-- entered the funnel at any known instant, and the engine's
-        |-- window-min chain (count of non-null _v) agrees; count(*)
-        |-- counted the group anyway (r18 nulltime probe)
-        |SELECT (SELECT count(v) FROM v) AS n_viewed,
-        |       (SELECT count(c) FROM c) AS n_clicked,
-        |       (SELECT count(p) FROM p) AS n_purchased""".stripMargin,
-    "q80_trailing_window" ->
-      """WITH daily AS (
-        |  SELECT o_custkey, CAST(o_orderdate AS DATE) AS day,
-        |         sum(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS amt
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT o_custkey, day, CAST(amt AS DOUBLE) AS day_amt,
-        |  CAST(sum(amt) OVER (PARTITION BY o_custkey ORDER BY day
-        |       RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW)
-        |       AS DOUBLE) AS amt_7d
-        |FROM daily""".stripMargin,
-    "q81_canonical_dedup" ->
-      """WITH c AS (SELECT doc_id,
-        |    md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-        |  FROM documents)
-        |SELECT doc_id, fp, min(doc_id) OVER (PARTITION BY fp) AS keep_id,
-        |       count(*) OVER (PARTITION BY fp) AS n_same
-        |FROM c""".stripMargin,
-    "q82_incremental_agg" ->
-      """SELECT o_custkey, count(*) AS n,
-        |  CAST(sum(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS amt
-        |FROM orders WHERE o_orderdate < TIMESTAMP '1996-01-08 00:00:00'
-        |GROUP BY 1""".stripMargin,
-    "q83_heavy_hitters" ->
-      """WITH t AS (SELECT count(*) AS total FROM lineitem),
-        | h AS (SELECT l_suppkey, count(*) AS n FROM lineitem GROUP BY 1)
-        |SELECT l_suppkey, n, round(CAST(n AS DOUBLE) / total, 6) AS share
-        |FROM h CROSS JOIN t
-        |ORDER BY n DESC, l_suppkey LIMIT 20""".stripMargin,
-    "q84_editdist_neardup" ->
-      """WITH b AS (SELECT doc_id,
-        |    CAST(floor(n_chars / 16.0) AS BIGINT) AS bkt,
-        |    substr(text, 1, 48) AS pfx
-        |  FROM documents WHERE lang = 'en')
-        |SELECT a.doc_id AS id_a, b2.doc_id AS id_b,
-        |       CAST(levenshtein(a.pfx, b2.pfx) AS BIGINT) AS dist
-        |FROM b a JOIN b b2 ON a.bkt = b2.bkt AND a.doc_id < b2.doc_id
-        |WHERE levenshtein(a.pfx, b2.pfx) <= 8""".stripMargin,
-    "q85_inverted_index" ->
-      """WITH t AS (SELECT DISTINCT doc_id, term FROM (
-        |    SELECT doc_id,
-        |           unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
-        |    FROM documents WHERE lang = 'en')
-        |  WHERE term <> '')
-        |SELECT term, count(*) AS n_docs,
-        |  array_to_string(list(CAST(doc_id AS VARCHAR) ORDER BY doc_id), ',')
-        |    AS postings
-        |FROM t GROUP BY 1""".stripMargin,
-    // the relational derivation the in-row HOF rewrite is certified
-    // against — PER-RECORD via LATERAL (r16 dupfacts probe): the old
-    // explode → GROUP BY doc_id → window form merged two same-id
-    // revisions' term counts into a top-term of neither record; the
-    // lateral subquery groups within ONE row's token list, so a dup
-    // id contributes one output row per input record, like the engine
-    "q104_hof_topterm" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE text IS NOT NULL)
+    },
+      // the relational derivation the in-row HOF rewrite is certified
+      // against — PER-RECORD via LATERAL (r16 dupfacts probe): the old
+      // explode → GROUP BY doc_id → window form merged two same-id
+      // revisions' term counts into a top-term of neither record; the
+      // lateral subquery groups within ONE row's token list, so a dup
+      // id contributes one output row per input record, like the engine
+      Some("""WITH d AS (SELECT doc_id, text FROM documents WHERE text IS NOT NULL)
         |SELECT d.doc_id, t.top_term, t.n_top
         |FROM d, LATERAL (
         |  SELECT term AS top_term, CAST(count(*) AS BIGINT) AS n_top
         |  FROM unnest(string_split(d.text, ' ')) AS u(term)
-        |  GROUP BY term ORDER BY count(*) DESC, term LIMIT 1) t""".stripMargin
+        |  GROUP BY term ORDER BY count(*) DESC, term LIMIT 1) t""".stripMargin))
   )
 }

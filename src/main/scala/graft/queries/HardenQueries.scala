@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Graded, Tables}
 import graft.ops.TextOps
 import graft.ops.RelationalOps.sumMoney
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,8 +14,6 @@ import org.apache.spark.sql.functions._
   * and the LSH-bucketed ANN variant beside q35's IVF (q55).
   */
 object HardenQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private[queries] val DupOffset = 100000L
 
   /** Persisted-ingest-artifact cache keys: CONTENT of the documents
@@ -110,7 +108,7 @@ object HardenQueries {
     s.read.parquet(cpath)
   }
 
-  val queries: Map[String, Q] = Map(
+  val graded: Seq[Graded] = Seq(
     // §2h — SimHash banded near-dup search, end-to-end under the
     // oracle: 64-bit simhash → 4×16-bit bands → bucket equi-join →
     // Hamming ≤ 3 → exact verify. Near-dups are planted by REVERSING
@@ -128,7 +126,7 @@ object HardenQueries {
     // VERDICT r3 flagged for q30. Precision is exact (every candidate
     // verified); organic bag-equal pairs would be found symmetrically
     // by both engines (the fixture has none — measured).
-    "q50_simhash_neardup" -> ((s, d) => {
+    Graded("q50_simhash_neardup", (s, d) => {
       // null text is excluded up front: concat_ws would fold a NULL
       // into "" on the planted side (the oracle's list_reverse keeps
       // NULL), and two null-text docs would spuriously bag-match
@@ -153,7 +151,15 @@ object HardenQueries {
       cands.join(a, "id_a").join(b, "id_b")
         .filter(col("_bag_a") === col("_bag_b"))
         .select(col("id_a"), col("id_b"), col("ham"))
-    }),
+    },
+      Some(s"""WITH corpus AS (
+         |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+         |  UNION ALL
+         |  SELECT doc_id + $DupOffset AS doc_id,
+         |         list_reverse(string_split(text, ' ')) AS toks FROM documents),
+         | s AS (SELECT doc_id, list_sort(toks) AS bag FROM corpus)
+         |SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(0 AS BIGINT) AS ham
+         |FROM s a JOIN s b ON a.doc_id < b.doc_id AND a.bag = b.bag""".stripMargin)),
 
     // F3 — the reference's ACTUAL entry condition: a current-date-
     // relative window (nightly: [today−1, today), load_sales_data.py:
@@ -165,7 +171,7 @@ object HardenQueries {
     // reproducible on any day). Catalyst folds current_date() at plan
     // time, so the bounds reach the parquet scan as pushed literals —
     // the nightly job never rescans history (PlanSpec-asserted).
-    "q51_nightly_window" -> ((s, d) => {
+    Graded("q51_nightly_window", (s, d) => {
       val anchor = to_date(lit("1995-03-16"))
       val today = date_add(current_date(), datediff(anchor, current_date()))
       val lo = date_sub(today, 7).cast("timestamp")
@@ -174,7 +180,14 @@ object HardenQueries {
         .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi)
         .groupBy(col("o_custkey"), col("o_orderdate").cast("date").as("sale_dy"))
         .agg(sumMoney(col("o_totalprice")).as("amt"), count(lit(1)).as("n"))
-    }),
+    },
+      Some("""SELECT o_custkey, CAST(o_orderdate AS DATE) AS sale_dy,
+        | CAST(sum(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS amt,
+        | count(*) AS n
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1995-03-09 00:00:00'
+        |  AND o_orderdate <  TIMESTAMP '1995-03-16 00:00:00'
+        |GROUP BY 1, 2""".stripMargin)),
 
     // S6/S9 — the DSv2 WRITE tier: store×day mart rows go through the
     // keyed-upsert sink's two-phase commit, then the SAME batch is
@@ -182,7 +195,7 @@ object HardenQueries {
     // re-runnable nightly, load_sales_data.py:129-134: per-key UPDATE-
     // or-INSERT ⇒ idempotent re-runs). The oracle computes the agg
     // directly; any duplication or partial commit breaks the hash.
-    "q52_dsv2_sink_upsert" -> ((s, d) => {
+    Graded("q52_dsv2_sink_upsert", (s, d) => {
       val table = ("mart_" + s.sparkContext.applicationId + "_" + d)
         .replaceAll("[^A-Za-z0-9_]", "_")
       // served lazily by the returned frame — reclaimed at JVM exit
@@ -210,7 +223,11 @@ object HardenQueries {
       graft.sources.UpsertSinkSource.vacuum(table)
       s.read.format("graft.sources.UpsertSinkSource")
         .option("table", table).load()
-    }),
+    },
+      Some("""SELECT o_custkey, CAST(o_orderdate AS DATE) AS day,
+        | CAST(sum(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS amt,
+        | count(*) AS n
+        |FROM orders GROUP BY 1, 2""".stripMargin)),
 
     // The reference's storage tier IS a SQL database over JDBC
     // (pymysql, load_sales_data.py:89,151): round-trip a dimension
@@ -218,7 +235,7 @@ object HardenQueries {
     // spark.read.jdbc — the same API lines that would hit MySQL in
     // production, minus the network. Overwrite mode = the reference's
     // TRUNCATE-and-load refresh (load_store_data.py:77-84).
-    "q53_jdbc_roundtrip" -> ((s, d) => {
+    Graded("q53_jdbc_roundtrip", (s, d) => {
       val (url, props) = derbyUrlAndProps(s)
       Tables.nation(s, d).write.mode("overwrite")
         .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -230,7 +247,8 @@ object HardenQueries {
         .jdbc(url, "nation_rt", props)
         .select(col("n_nationkey").cast("int").as("n_nationkey"),
           col("n_name"), col("n_regionkey").cast("int").as("n_regionkey"))
-    }),
+    },
+      Some("SELECT n_nationkey, n_name, n_regionkey FROM nation")),
 
     // S6/S9 over JDBC — the reference's ACTUAL write: keyed upsert
     // into a SQL database (per-row UPDATE-else-INSERT against MySQL,
@@ -246,7 +264,7 @@ object HardenQueries {
     // sink; this query certifies the JDBC MERGE tier, and a single-
     // node embedded DB ingesting the full fact volume per bench rep
     // would measure Derby's insert path, not the engine.
-    "q54_jdbc_upsert" -> ((s, d) => {
+    Graded("q54_jdbc_upsert", (s, d) => {
       val (url, props) = derbyUrlAndProps(s)
       props.setProperty("batchsize", "10000")
       val table = ("mart_jdbc_" + d).replaceAll("[^A-Za-z0-9_]", "_")
@@ -269,7 +287,11 @@ object HardenQueries {
         .jdbc(url, table, props)
         .select(col("o_custkey").cast("long").as("o_custkey"),
           col("amt"), col("n").cast("long").as("n"))
-    }),
+    },
+      Some("""SELECT o_custkey,
+        | CAST(sum(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS amt,
+        | count(*) AS n
+        |FROM orders WHERE o_custkey IS NOT NULL GROUP BY 1""".stripMargin)),
 
     // §2h — near-dup GROUPS: the step pair detection exists for.
     // q37's verified pairs → connected components (iterative min-label
@@ -281,56 +303,10 @@ object HardenQueries {
     // q35-centroid build/consume pattern — see neardupComponents
     // above): the propagation runs once per dataset, and this query
     // grades what that artifact contains.
-    "q56_neardup_components" -> ((s, d) => neardupComponents(s, d)),
-
-    // §2h — LSH-bucketed ANN (the data-independent scale path beside
-    // q35's IVF): deterministic random-hyperplane buckets (8 bits →
-    // 256), search scans the probe's bucket only, exact cosine rank
-    // within it. The integer-grid hyperplanes make the bucketing
-    // bit-reproducible in DuckDB, so — unlike typical seeded-Gaussian
-    // LSH — the whole approximate search is hash-graded, not
-    // rows-only.
-    "q55_ann_lsh" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      graft.ops.VectorOps.lshAnnTopK(e, e.filter(col("vec_id") === 0L),
-        "vec_id", "embedding", 8, 10)
-    })
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q50_simhash_neardup" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + $DupOffset AS doc_id,
-         |         list_reverse(string_split(text, ' ')) AS toks FROM documents),
-         | s AS (SELECT doc_id, list_sort(toks) AS bag FROM corpus)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(0 AS BIGINT) AS ham
-         |FROM s a JOIN s b ON a.doc_id < b.doc_id AND a.bag = b.bag""".stripMargin,
-    "q51_nightly_window" ->
-      """SELECT o_custkey, CAST(o_orderdate AS DATE) AS sale_dy,
-        | CAST(sum(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS amt,
-        | count(*) AS n
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1995-03-09 00:00:00'
-        |  AND o_orderdate <  TIMESTAMP '1995-03-16 00:00:00'
-        |GROUP BY 1, 2""".stripMargin,
-    "q52_dsv2_sink_upsert" ->
-      """SELECT o_custkey, CAST(o_orderdate AS DATE) AS day,
-        | CAST(sum(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS amt,
-        | count(*) AS n
-        |FROM orders GROUP BY 1, 2""".stripMargin,
-    "q53_jdbc_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation",
-    "q54_jdbc_upsert" ->
-      """SELECT o_custkey,
-        | CAST(sum(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS amt,
-        | count(*) AS n
-        |FROM orders WHERE o_custkey IS NOT NULL GROUP BY 1""".stripMargin,
-    "q56_neardup_components" ->
+    Graded("q56_neardup_components", (s, d) => neardupComponents(s, d),
       // corpus collapses dup doc_ids (max(text), r16 dupfacts probe)
       // exactly as the engine's pair builder does
-      s"""WITH RECURSIVE corpus AS (
+      Some(s"""WITH RECURSIVE corpus AS (
          |  SELECT doc_id, max(text) AS text FROM documents GROUP BY doc_id
          |  UNION ALL SELECT doc_id + $DupOffset AS doc_id, max(text) || ' graftdup' AS text FROM documents GROUP BY doc_id),
          | sh AS (SELECT doc_id,
@@ -348,9 +324,21 @@ object HardenQueries {
          |   SELECT u, u FROM edges
          |   UNION
          |   SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id)
-         |SELECT id AS doc_id, min(r) AS component FROM reach GROUP BY id""".stripMargin,
-    "q55_ann_lsh" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |SELECT id AS doc_id, min(r) AS component FROM reach GROUP BY id""".stripMargin)),
+
+    // §2h — LSH-bucketed ANN (the data-independent scale path beside
+    // q35's IVF): deterministic random-hyperplane buckets (8 bits →
+    // 256), search scans the probe's bucket only, exact cosine rank
+    // within it. The integer-grid hyperplanes make the bucketing
+    // bit-reproducible in DuckDB, so — unlike typical seeded-Gaussian
+    // LSH — the whole approximate search is hash-graded, not
+    // rows-only.
+    Graded("q55_ann_lsh", (s, d) => {
+      val e = Tables.embeddings(s, d)
+      graft.ops.VectorOps.lshAnnTopK(e, e.filter(col("vec_id") === 0L),
+        "vec_id", "embedding", 8, 10)
+    },
+      Some("""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         | dots AS (
         |   SELECT vec_id, i.i AS i,
         |          list_sum(list_transform(range(1, len(v) + 1),
@@ -363,6 +351,6 @@ object HardenQueries {
         |FROM b e JOIN b p ON p.vec_id = 0 AND e.bucket = p.bucket
         |JOIN v ev ON ev.vec_id = e.vec_id
         |JOIN v pv ON pv.vec_id = 0
-        |ORDER BY sim DESC, e.vec_id LIMIT 10""".stripMargin
+        |ORDER BY sim DESC, e.vec_id LIMIT 10""".stripMargin))
   )
 }

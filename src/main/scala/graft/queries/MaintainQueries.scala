@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Graded, Tables}
 import graft.ops.RelationalOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -24,9 +24,7 @@ import org.apache.spark.sql.functions._
   *     AqeSkewSpec asserts skew=true in the executed plan.
   */
 object MaintainQueries {
-  type Q = (SparkSession, String) => DataFrame
-
-  val queries: Map[String, Q] = Map(
+  val graded: Seq[Graded] = Seq(
     // Tombstone MERGE (MERGE … WHEN MATCHED AND del THEN DELETE / WHEN
     // MATCHED THEN UPDATE / WHEN NOT MATCHED THEN INSERT): target =
     // pre-1996-07 orders; delta = 1996+ slice where status 'F' rows
@@ -36,7 +34,7 @@ object MaintainQueries {
     // update, and delete all resolve in a single key-partitioned pass.
     // At 100 TB: one shuffle of each side on the merge key, no
     // window state, no second pass for the deletes.
-    "q111_merge_delete" -> ((s, d) => {
+    Graded("q111_merge_delete", (s, d) => {
       val target = Tables.orders(s, d)
         .filter(col("o_orderdate") < to_timestamp(lit("1996-07-01 00:00:00")))
         .select(col("o_orderkey").as("k"), col("o_totalprice").as("v"))
@@ -47,7 +45,25 @@ object MaintainQueries {
           (col("o_orderstatus") === "F").as("is_delete"))
       target.join(delta.select(col("k")), Seq("k"), "left_anti")
         .unionByName(delta.filter(!col("is_delete")).drop("is_delete"))
-    }),
+    },
+      // NOT EXISTS, not NOT IN (r15 review): a single NULL delta key
+      // turns `k NOT IN (...)` NULL for EVERY target row — the oracle's
+      // target half vanishes — while the engine's left-anti join (the
+      // correct MERGE-key semantic: NULL matches nothing) keeps every
+      // unmatched row. Masked on today's fixtures only because the
+      // nulls variant also nulls the date filter; the correlated NOT
+      // EXISTS expresses anti-join semantics exactly.
+      Some("""WITH target AS (
+        |  SELECT o_orderkey AS k, o_totalprice AS v FROM orders
+        |  WHERE o_orderdate < TIMESTAMP '1996-07-01'),
+        | delta AS (
+        |  SELECT o_orderkey AS k, o_totalprice * 2 AS v,
+        |         o_orderstatus = 'F' AS is_delete
+        |  FROM orders WHERE o_orderdate >= TIMESTAMP '1996-01-01')
+        |SELECT k, v FROM target t
+        |WHERE NOT EXISTS (SELECT 1 FROM delta d WHERE d.k = t.k)
+        |UNION ALL
+        |SELECT k, v FROM delta WHERE NOT is_delete""".stripMargin)),
 
     // Trailing 7-day DISTINCT users per day from daily HLL sketches:
     // the RANGE-window form of q96's rollup. Events are scanned ONCE
@@ -57,7 +73,7 @@ object MaintainQueries {
     // Graded as a q28-style certificate: the sketch estimate must land
     // within max(5, 5%) of the exact count (the exact side exists only
     // to certify — production serves the sketch).
-    "q112_trailing_distinct" -> ((s, d) => {
+    Graded("q112_trailing_distinct", (s, d) => {
       val ev = Tables.events(s, d)
         .select(to_date(col("ts")).as("day"), col("user_id"))
       val daily = ev.groupBy(col("day"))
@@ -90,7 +106,16 @@ object MaintainQueries {
           (abs(col("_approx") - col("n_exact")) <=
             greatest(lit(5L), (col("n_exact") * 0.05).cast("long")))
             .as("within_tol"))
-    }),
+    },
+      Some("""WITH pairs AS (
+        |  SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
+        | days AS (SELECT DISTINCT day AS d0 FROM pairs)
+        |SELECT d0 AS day,
+        |       count(DISTINCT user_id) AS n_exact,
+        |       TRUE AS within_tol
+        |FROM days JOIN pairs
+        |  ON pairs.day BETWEEN d0 - INTERVAL 6 DAY AND d0
+        |GROUP BY 1""".stripMargin)),
 
     // AQE skew join: a deterministic hot key (every 4th lineitem row
     // remapped to order key 1 → ~25% of the fact in one shuffle
@@ -101,7 +126,7 @@ object MaintainQueries {
     // for the join so the shuffle path (where skew handling lives) is
     // actually exercised; configs restore in finally so no other
     // query inherits them.
-    "q113_aqe_skew_join" -> ((s, d) =>
+    Graded("q113_aqe_skew_join", (s, d) =>
       withSkewConfigs(s) {
         // the join MUST materialize inside the config scope (lazy
         // execution after restore would run without skew handling);
@@ -110,7 +135,17 @@ object MaintainQueries {
         val out = skewJoinFrame(s, d)
         val rows = out.collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      })
+      },
+      Some("""WITH fact AS (
+        |  SELECT CASE WHEN l_orderkey % 4 = 0 THEN 1 ELSE l_orderkey END AS k,
+        |         l_quantity,
+        |         sha256(CAST(l_orderkey AS VARCHAR) || CAST(l_linenumber AS VARCHAR)) AS payload
+        |  FROM lineitem)
+        |SELECT o_orderpriority, count(*) AS n,
+        |       CAST(sum(TRY_CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
+        |       CAST(sum(length(payload)) AS BIGINT) AS payload_bytes
+        |FROM fact JOIN orders ON k = o_orderkey
+        |GROUP BY 1""".stripMargin))
   )
 
   /** The skewed join-aggregate itself, config-free: AqeSkewSpec drives
@@ -209,47 +244,4 @@ object MaintainQueries {
       case (k, None)    => conf.unset(k)
     }
   }
-
-  val oracle: Map[String, String] = Map(
-    // NOT EXISTS, not NOT IN (r15 review): a single NULL delta key
-    // turns `k NOT IN (...)` NULL for EVERY target row — the oracle's
-    // target half vanishes — while the engine's left-anti join (the
-    // correct MERGE-key semantic: NULL matches nothing) keeps every
-    // unmatched row. Masked on today's fixtures only because the
-    // nulls variant also nulls the date filter; the correlated NOT
-    // EXISTS expresses anti-join semantics exactly.
-    "q111_merge_delete" ->
-      """WITH target AS (
-        |  SELECT o_orderkey AS k, o_totalprice AS v FROM orders
-        |  WHERE o_orderdate < TIMESTAMP '1996-07-01'),
-        | delta AS (
-        |  SELECT o_orderkey AS k, o_totalprice * 2 AS v,
-        |         o_orderstatus = 'F' AS is_delete
-        |  FROM orders WHERE o_orderdate >= TIMESTAMP '1996-01-01')
-        |SELECT k, v FROM target t
-        |WHERE NOT EXISTS (SELECT 1 FROM delta d WHERE d.k = t.k)
-        |UNION ALL
-        |SELECT k, v FROM delta WHERE NOT is_delete""".stripMargin,
-    "q112_trailing_distinct" ->
-      """WITH pairs AS (
-        |  SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
-        | days AS (SELECT DISTINCT day AS d0 FROM pairs)
-        |SELECT d0 AS day,
-        |       count(DISTINCT user_id) AS n_exact,
-        |       TRUE AS within_tol
-        |FROM days JOIN pairs
-        |  ON pairs.day BETWEEN d0 - INTERVAL 6 DAY AND d0
-        |GROUP BY 1""".stripMargin,
-    "q113_aqe_skew_join" ->
-      """WITH fact AS (
-        |  SELECT CASE WHEN l_orderkey % 4 = 0 THEN 1 ELSE l_orderkey END AS k,
-        |         l_quantity,
-        |         sha256(CAST(l_orderkey AS VARCHAR) || CAST(l_linenumber AS VARCHAR)) AS payload
-        |  FROM lineitem)
-        |SELECT o_orderpriority, count(*) AS n,
-        |       CAST(sum(TRY_CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        |       CAST(sum(length(payload)) AS BIGINT) AS payload_bytes
-        |FROM fact JOIN orders ON k = o_orderkey
-        |GROUP BY 1""".stripMargin
-  )
 }

@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Graded, Tables}
 import graft.ops.{ReconcileOps, RelationalOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -18,14 +17,12 @@ import org.apache.spark.sql.types.DecimalType
   * Every query deterministic; every verdict re-derived by DuckDB.
   */
 object OpsQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private val invocation = new java.util.concurrent.atomic.AtomicLong(0)
 
   private def rmTree(f: java.io.File): Unit = graft.ops.FsOps.rmTree(f)
 
 
-  val queries: Map[String, Q] = Map(
+  val graded: Seq[Graded] = Seq(
     // End-to-end streaming mart maintenance, executed for real (q46
     // grades the transform's batch parity; THIS runs the streaming
     // engine): the events table staged as multiple arrival files →
@@ -38,7 +35,7 @@ object OpsQueries {
     // prove the cumulative-state + latest-wins convergence; each
     // invocation is a fresh pipeline (nonce below) and converges to
     // the identical table.
-    "q100_stream_mart" -> ((s, d) => {
+    Graded("q100_stream_mart", (s, d) => {
       // nonce per INVOCATION, not per app: a re-run (bench rep, retry)
       // must get a fresh staging dir + checkpoint + table — re-staging
       // under an old checkpoint would surface the same events as new
@@ -102,7 +99,11 @@ object OpsQueries {
       }
       s.read.format("graft.sources.UpsertSinkSource")
         .option("table", table).load()
-    }),
+    },
+      Some("""SELECT user_id, CAST(ts AS DATE) AS day,
+        | CAST(sum(TRY_CAST(nullif(value, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS amt,
+        | count(*) AS n
+        |FROM events GROUP BY 1, 2""".stripMargin)),
 
     // Order-insensitive table checksum via ops.ReconcileOps (the
     // pt-table-checksum / data-diff pattern; canonicalization and
@@ -113,7 +114,7 @@ object OpsQueries {
     // 100 TB mart across systems costs one scan + a tiny agg per side.
     // ReconcileOpsSpec runs the two-sided migration proof over the
     // flagship mart; this query grades the digest against DuckDB.
-    "q101_table_checksum" -> ((s, d) =>
+    Graded("q101_table_checksum", (s, d) =>
       graft.ops.ReconcileOps.tableChecksum(
         Tables.orders(s, d),
         Seq(ReconcileOps.canonField(col("o_orderkey")),
@@ -123,7 +124,31 @@ object OpsQueries {
           ReconcileOps.canonField(col("o_orderdate").cast("date")),
           ReconcileOps.escaped(col("o_orderpriority"))),
         date_format(col("o_orderdate"), "yyyy-MM"))
-        .withColumnRenamed("part", "month")),
+        .withColumnRenamed("part", "month"),
+      // Hex→int is spelled digit-by-digit (strpos over '0..f' with exact
+      // double powers ≤ 16^7, all < 2^53) instead of CAST('0x…' AS
+      // BIGINT): the hex-literal cast was the one construct no other
+      // passing oracle used, and per-digit arithmetic is portable to any
+      // engine version. Per-row halves are CAST to BIGINT, and the final
+      // HUGEINT sums are CAST back to BIGINT so the output schema is
+      // decimal-free.
+      Some("""WITH c AS (SELECT strftime(o_orderdate, '%Y-%m') AS month,
+        |  md5(concat_ws('|',
+        |    coalesce(CAST(o_orderkey AS VARCHAR), '\N'),
+        |    coalesce(CAST(o_custkey AS VARCHAR), '\N'),
+        |    coalesce(replace(replace(o_orderstatus, '\', '\\'), '|', '\|'), '\N'),
+        |    coalesce(CAST(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2)) AS VARCHAR), '\N'),
+        |    coalesce(CAST(CAST(o_orderdate AS DATE) AS VARCHAR), '\N'),
+        |    coalesce(replace(replace(o_orderpriority, '\', '\\'), '|', '\|'), '\N'))) AS h
+        |  FROM orders)
+        |SELECT month, count(*) AS n_rows,
+        |  CAST(sum(CAST(list_sum(list_transform(range(1,9), i ->
+        |    (strpos('0123456789abcdef', substr(h, CAST(i AS INT), 1)) - 1.0)
+        |      * (16.0 ** (8 - i)))) AS BIGINT)) AS BIGINT) AS checksum_hi,
+        |  CAST(sum(CAST(list_sum(list_transform(range(1,8), i ->
+        |    (strpos('0123456789abcdef', substr(h, CAST(8 + i AS INT), 1)) - 1.0)
+        |      * (16.0 ** (7 - i)))) AS BIGINT)) AS BIGINT) AS checksum_lo
+        |FROM c GROUP BY 1""".stripMargin)),
 
     // Exact join-cardinality profiler: predicted |orders ⋈ lineitem|
     // from the two sides' key histograms — Σ_k cnt_a(k)·cnt_b(k) —
@@ -132,7 +157,7 @@ object OpsQueries {
     // question "can I afford this join, and does one key dominate?"
     // answered at metadata cost. This is the measurement feeding the
     // q44/q68 salting decisions and q83's hot-key diagnosis.
-    "q102_join_cardinality" -> ((s, d) => {
+    Graded("q102_join_cardinality", (s, d) => {
       val a = Tables.orders(s, d).groupBy(col("o_orderkey").as("k"))
         .agg(count(lit(1)).as("ca"))
       val b = Tables.lineitem(s, d).groupBy(col("l_orderkey").as("k"))
@@ -142,7 +167,13 @@ object OpsQueries {
         .agg(sum(col("_pairs")).as("predicted_pairs"),
           max(col("_pairs")).as("max_key_pairs"),
           count(lit(1)).as("n_join_keys"))
-    }),
+    },
+      Some("""WITH a AS (SELECT o_orderkey AS k, count(*) AS ca FROM orders GROUP BY 1),
+        | b AS (SELECT l_orderkey AS k, count(*) AS cb FROM lineitem GROUP BY 1)
+        |SELECT CAST(sum(ca * cb) AS BIGINT) AS predicted_pairs,
+        |       max(ca * cb) AS max_key_pairs,
+        |       count(*) AS n_join_keys
+        |FROM a JOIN b USING (k)""".stripMargin)),
 
     // Same-pass pipeline observability: audit metrics collected by
     // df.observe() DURING the production write action — the metrics
@@ -154,7 +185,7 @@ object OpsQueries {
     // certifying the observed values equal a from-scratch aggregation.
     // (Observe expressions must be merge-associative — no distinct —
     // exactly the constraint partial aggregation already imposes.)
-    "q108_observe_metrics" -> ((s, d) => {
+    Graded("q108_observe_metrics", (s, d) => {
       val safe = (s.sparkContext.applicationId + "_" + d + "_" +
         invocation.incrementAndGet()).replaceAll("[^A-Za-z0-9_]", "_")
       val sink = s"${System.getProperty("java.io.tmpdir")}/graft_q108_$safe"
@@ -183,7 +214,13 @@ object OpsQueries {
         Option(m("max_price")).map(v =>
           java.lang.Double.valueOf(v.asInstanceOf[Double])).orNull))
         .toDF("n_rows", "amt", "max_price")
-    }),
+    },
+      Some("""SELECT count(*) AS n_rows,
+        |       CAST(sum(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS amt,
+        |       max(o_totalprice) AS max_price
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1995-01-01'
+        |  AND o_orderdate <  TIMESTAMP '1995-04-01'""".stripMargin)),
 
     // Data-quality expectations gate: the nightly load contract as
     // one aggregation pass (RelationalOps.qualityGate) — key
@@ -191,7 +228,7 @@ object OpsQueries {
     // ceiling, volume floor — fanned out to one verdict row per
     // expectation. The oracle recomputes every observed metric and
     // verdict from scratch in SQL.
-    "q103_dq_gate" -> ((s, d) =>
+    Graded("q103_dq_gate", (s, d) =>
       RelationalOps.qualityGate(Tables.orders(s, d), Seq(
         ("row_count_min_1000", count(lit(1)),
           (m: org.apache.spark.sql.Column) => m >= 1000),
@@ -203,56 +240,8 @@ object OpsQueries {
           (m: org.apache.spark.sql.Column) => m === 0),
         ("orderdate_before_2000", count(when(
           col("o_orderdate") >= to_timestamp(lit("2000-01-01 00:00:00")), lit(1))),
-          (m: org.apache.spark.sql.Column) => m === 0))))
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q100_stream_mart" ->
-      """SELECT user_id, CAST(ts AS DATE) AS day,
-        | CAST(sum(TRY_CAST(nullif(value, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS amt,
-        | count(*) AS n
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    // Hex→int is spelled digit-by-digit (strpos over '0..f' with exact
-    // double powers ≤ 16^7, all < 2^53) instead of CAST('0x…' AS
-    // BIGINT): the hex-literal cast was the one construct no other
-    // passing oracle used, and per-digit arithmetic is portable to any
-    // engine version. Per-row halves are CAST to BIGINT, and the final
-    // HUGEINT sums are CAST back to BIGINT so the output schema is
-    // decimal-free.
-    "q101_table_checksum" ->
-      """WITH c AS (SELECT strftime(o_orderdate, '%Y-%m') AS month,
-        |  md5(concat_ws('|',
-        |    coalesce(CAST(o_orderkey AS VARCHAR), '\N'),
-        |    coalesce(CAST(o_custkey AS VARCHAR), '\N'),
-        |    coalesce(replace(replace(o_orderstatus, '\', '\\'), '|', '\|'), '\N'),
-        |    coalesce(CAST(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2)) AS VARCHAR), '\N'),
-        |    coalesce(CAST(CAST(o_orderdate AS DATE) AS VARCHAR), '\N'),
-        |    coalesce(replace(replace(o_orderpriority, '\', '\\'), '|', '\|'), '\N'))) AS h
-        |  FROM orders)
-        |SELECT month, count(*) AS n_rows,
-        |  CAST(sum(CAST(list_sum(list_transform(range(1,9), i ->
-        |    (strpos('0123456789abcdef', substr(h, CAST(i AS INT), 1)) - 1.0)
-        |      * (16.0 ** (8 - i)))) AS BIGINT)) AS BIGINT) AS checksum_hi,
-        |  CAST(sum(CAST(list_sum(list_transform(range(1,8), i ->
-        |    (strpos('0123456789abcdef', substr(h, CAST(8 + i AS INT), 1)) - 1.0)
-        |      * (16.0 ** (7 - i)))) AS BIGINT)) AS BIGINT) AS checksum_lo
-        |FROM c GROUP BY 1""".stripMargin,
-    "q102_join_cardinality" ->
-      """WITH a AS (SELECT o_orderkey AS k, count(*) AS ca FROM orders GROUP BY 1),
-        | b AS (SELECT l_orderkey AS k, count(*) AS cb FROM lineitem GROUP BY 1)
-        |SELECT CAST(sum(ca * cb) AS BIGINT) AS predicted_pairs,
-        |       max(ca * cb) AS max_key_pairs,
-        |       count(*) AS n_join_keys
-        |FROM a JOIN b USING (k)""".stripMargin,
-    "q108_observe_metrics" ->
-      """SELECT count(*) AS n_rows,
-        |       CAST(sum(TRY_CAST(nullif(o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS amt,
-        |       max(o_totalprice) AS max_price
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-        |  AND o_orderdate <  TIMESTAMP '1995-04-01'""".stripMargin,
-    "q103_dq_gate" ->
-      """SELECT 'row_count_min_1000' AS check, CAST(count(*) AS DOUBLE) AS observed,
+          (m: org.apache.spark.sql.Column) => m === 0))),
+      Some("""SELECT 'row_count_min_1000' AS check, CAST(count(*) AS DOUBLE) AS observed,
         |       count(*) >= 1000 AS passed FROM orders
         |UNION ALL SELECT 'custkey_no_nulls',
         |       CAST(count(*) FILTER (WHERE o_custkey IS NULL) AS DOUBLE),
@@ -265,6 +254,6 @@ object OpsQueries {
         |       count(*) FILTER (WHERE o_totalprice < 0) = 0 FROM orders
         |UNION ALL SELECT 'orderdate_before_2000',
         |       CAST(count(*) FILTER (WHERE o_orderdate >= TIMESTAMP '2000-01-01') AS DOUBLE),
-        |       count(*) FILTER (WHERE o_orderdate >= TIMESTAMP '2000-01-01') = 0 FROM orders""".stripMargin
+        |       count(*) FILTER (WHERE o_orderdate >= TIMESTAMP '2000-01-01') = 0 FROM orders""".stripMargin))
   )
 }

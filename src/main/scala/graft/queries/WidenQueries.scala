@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Graded, Tables}
 import graft.ops.TemporalOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,8 +14,6 @@ import org.apache.spark.sql.functions._
   * sketch with a tolerance certificate, and long-to-wide pivot.
   */
 object WidenQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   /** The 28 overlapping 180-day periods q58 AND q77 join against —
     * one definition: the pair certifies two physical strategies
     * interchangeable, which is only meaningful if they provably share
@@ -40,7 +38,7 @@ object WidenQueries {
       |  ON l.l_shipdate >= p.p_start AND l.l_shipdate < p.p_end
       |GROUP BY 1""".stripMargin
 
-  val queries: Map[String, Q] = Map(
+  val graded: Seq[Graded] = Seq(
     // As-of join — attribution: for each purchase, the most recent
     // prior click by the same user (inclusive at equal timestamps),
     // null when the purchase precedes every click. Executed as the
@@ -50,7 +48,7 @@ object WidenQueries {
     // broadcast nested loop. The oracle is DuckDB's native ASOF LEFT
     // JOIN — an independent formulation, so the hash certifies the
     // semantics, not a shared implementation.
-    "q57_asof_join" -> ((s, d) => {
+    Graded("q57_asof_join", (s, d) => {
       val e = Tables.events(s, d)
       val purchases = e.filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
@@ -59,7 +57,24 @@ object WidenQueries {
       TemporalOps.asofJoin(purchases, clicks, Seq("user_id"), "ts", "ts",
           payloadCols = Seq("click_id"), tieBreak = Seq("click_id"))
         .select(col("purchase_id"), col("user_id"), col("click_id"))
-    }),
+    },
+      // NOT DuckDB's ASOF JOIN: on tied click timestamps ASOF returns
+      // whichever row it encounters first (verified: flips with physical
+      // row order), while the engine's asofJoin pins ties with the
+      // click_id tie-break. The windowed latest-prior below expresses
+      // the SAME tie-break, so a fixture regeneration that lands two
+      // clicks on one (user_id, ts) cannot make the gate flap.
+      Some("""WITH j AS (
+        |  SELECT p.event_id AS purchase_id, p.user_id, c.event_id AS click_id,
+        |    row_number() OVER (PARTITION BY p.event_id
+        |      ORDER BY c.ts DESC, c.event_id DESC) AS rn,
+        |    count(c.event_id) OVER (PARTITION BY p.event_id) AS nm
+        |  FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+        |  LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+        |    ON p.user_id = c.user_id AND c.ts <= p.ts)
+        |SELECT purchase_id, user_id,
+        |  CASE WHEN nm > 0 THEN click_id END AS click_id
+        |FROM j WHERE rn = 1""".stripMargin)),
 
     // Interval/range join — revenue per OVERLAPPING reporting period
     // (180-day windows sliding every 90 days): not expressible as a
@@ -68,7 +83,7 @@ object WidenQueries {
     // the aggregation; per-row constant-time probe of the broadcast
     // interval list). The big–big banded flavor of the same operator
     // is equivalence-tested in TemporalOpsSpec.
-    "q58_range_join" -> ((s, d) => {
+    Graded("q58_range_join", (s, d) => {
       val periods = rangePeriods(s)
       // rebalanceScan (r21): the broadcast nested-loop interval probe
       // (28 comparisons per fact row) otherwise runs inside the
@@ -84,7 +99,8 @@ object WidenQueries {
         .groupBy(col("period_id"))
         .agg(count(lit(1)).as("n"),
           sum(col("_rev").cast("decimal(18,4)")).cast("double").as("revenue"))
-    }),
+    },
+      Some(rangeOracle)),
 
     // Set operations (§2e) — INTERSECT / EXCEPT as first-class ops:
     // customer-retention buckets between two years. Spark plans each
@@ -96,7 +112,7 @@ object WidenQueries {
     // times (static exchange reuse does not fire across the
     // differently-shaped semi/anti arms) — at 100 TB the rescans, not
     // the set ops, would be the cost.
-    "q59_set_ops" -> ((s, d) => {
+    Graded("q59_set_ops", (s, d) => {
       def custsIn(year: Int): DataFrame =
         graft.ops.Materialize.once(s"q59.$year",
           Tables.orders(s, d)
@@ -108,7 +124,21 @@ object WidenQueries {
       a.intersect(b).withColumn("tag", lit("both"))
         .unionByName(a.except(b).withColumn("tag", lit("only_1995")))
         .unionByName(b.except(a).withColumn("tag", lit("only_1996")))
-    }),
+    },
+      Some("""WITH a AS (SELECT DISTINCT o_custkey FROM orders
+        |           WHERE o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
+        |             AND o_orderdate <  TIMESTAMP '1996-01-01 00:00:00'),
+        |     b AS (SELECT DISTINCT o_custkey FROM orders
+        |           WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |             AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00')
+        |SELECT o_custkey, 'both' AS tag
+        |  FROM (SELECT o_custkey FROM a INTERSECT SELECT o_custkey FROM b)
+        |UNION ALL
+        |SELECT o_custkey, 'only_1995' AS tag
+        |  FROM (SELECT o_custkey FROM a EXCEPT SELECT o_custkey FROM b)
+        |UNION ALL
+        |SELECT o_custkey, 'only_1996' AS tag
+        |  FROM (SELECT o_custkey FROM b EXCEPT SELECT o_custkey FROM a)""".stripMargin)),
 
     // The SAME range-join semantics through the big–big BANDED flavor
     // (both sides keyed to fixed-width day buckets; facts land in
@@ -116,7 +146,7 @@ object WidenQueries {
     // identical oracle as q58, so the two physical strategies are
     // certified interchangeable. This is the plan that survives when
     // the interval side outgrows a broadcast.
-    "q77_range_join_banded" -> ((s, d) => {
+    Graded("q77_range_join_banded", (s, d) => {
       val periods = rangePeriods(s)
       // (r21: no rebalanceScan here, unlike q58 — the banded flavor is
       // a broadcast HASH equi-join on the bucket key, one cheap probe
@@ -130,7 +160,8 @@ object WidenQueries {
         .groupBy(col("period_id"))
         .agg(count(lit(1)).as("n"),
           sum(col("_rev").cast("decimal(18,4)")).cast("double").as("revenue"))
-    }),
+    },
+      Some(rangeOracle)),
 
     // Approximate percentile (GK sketch) with a tolerance certificate
     // — the quantile twin of q28's HLL certificate. Exact percentiles
@@ -140,7 +171,7 @@ object WidenQueries {
     // `within_tol` bound on the sketch (≤ max(1, 2% of exact)), so the
     // gate certifies sketch quality without demanding bitwise equality
     // of an approximation.
-    "q61_approx_percentile" -> ((s, d) =>
+    Graded("q61_approx_percentile", (s, d) =>
       Tables.lineitem(s, d)
         // finiteOrNull on every estimator (r16 naninf probe): the
         // certificate compares them, so they must agree on the
@@ -172,7 +203,11 @@ object WidenQueries {
           // comparison left within_tol NULL (r13 edge sweep)
           coalesce(abs(col("_approx") - col("_disc")) <=
             greatest(lit(1.0), abs(col("_disc")) * 0.02), lit(true))
-            .as("within_tol"))),
+            .as("within_tol")),
+      Some("""SELECT l_returnflag,
+        | round(quantile_cont(CASE WHEN isfinite(l_quantity) THEN l_quantity END, 0.5), 6) AS p50_qty,
+        | TRUE AS within_tol
+        |FROM lineitem GROUP BY 1""".stripMargin)),
 
     // Pivot — long-to-wide restructuring (per-user event-type counts)
     // as CONDITIONAL AGGREGATION, not DataFrame.pivot: the value list
@@ -182,77 +217,30 @@ object WidenQueries {
     // double aggregation (groupBy(user,type) exchange + groupBy(user)
     // exchange), while count(when(...)) per value is ONE partial-agg
     // shuffle — same result, half the exchanges (plan-verified).
-    "q62_pivot" -> ((s, d) => {
+    Graded("q62_pivot", (s, d) => {
       val counts = Seq("click", "error", "purchase", "signup", "view")
         .map(v => count(when(col("event_type") === v, 1)).as(v))
       Tables.events(s, d).groupBy(col("user_id"))
         .agg(counts.head, counts.tail: _*)
-    }),
-
-    // ORC round trip — the columnar-format matrix beside parquet
-    // (native tables) and CSV (q43): ORC write + schema'd read-back.
-    // Same predicate-pushdown/column-pruning story as parquet at
-    // 100 TB; the engine treats the format as a storage detail.
-    "q60_orc_roundtrip" -> ((s, d) => {
-      val sink = graft.ops.AppScratch.path(s, "q60_orc")
-      Tables.supplier(s, d).write.mode("overwrite").orc(sink)
-      s.read.orc(sink)
-        .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
-    })
-  )
-
-  val oracle: Map[String, String] = Map(
-    // NOT DuckDB's ASOF JOIN: on tied click timestamps ASOF returns
-    // whichever row it encounters first (verified: flips with physical
-    // row order), while the engine's asofJoin pins ties with the
-    // click_id tie-break. The windowed latest-prior below expresses
-    // the SAME tie-break, so a fixture regeneration that lands two
-    // clicks on one (user_id, ts) cannot make the gate flap.
-    "q57_asof_join" ->
-      """WITH j AS (
-        |  SELECT p.event_id AS purchase_id, p.user_id, c.event_id AS click_id,
-        |    row_number() OVER (PARTITION BY p.event_id
-        |      ORDER BY c.ts DESC, c.event_id DESC) AS rn,
-        |    count(c.event_id) OVER (PARTITION BY p.event_id) AS nm
-        |  FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |  LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |    ON p.user_id = c.user_id AND c.ts <= p.ts)
-        |SELECT purchase_id, user_id,
-        |  CASE WHEN nm > 0 THEN click_id END AS click_id
-        |FROM j WHERE rn = 1""".stripMargin,
-    "q58_range_join" ->
-      rangeOracle,
-    "q77_range_join_banded" ->
-      rangeOracle,
-    "q59_set_ops" ->
-      """WITH a AS (SELECT DISTINCT o_custkey FROM orders
-        |           WHERE o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-        |             AND o_orderdate <  TIMESTAMP '1996-01-01 00:00:00'),
-        |     b AS (SELECT DISTINCT o_custkey FROM orders
-        |           WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |             AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00')
-        |SELECT o_custkey, 'both' AS tag
-        |  FROM (SELECT o_custkey FROM a INTERSECT SELECT o_custkey FROM b)
-        |UNION ALL
-        |SELECT o_custkey, 'only_1995' AS tag
-        |  FROM (SELECT o_custkey FROM a EXCEPT SELECT o_custkey FROM b)
-        |UNION ALL
-        |SELECT o_custkey, 'only_1996' AS tag
-        |  FROM (SELECT o_custkey FROM b EXCEPT SELECT o_custkey FROM a)""".stripMargin,
-    "q60_orc_roundtrip" ->
-      "SELECT s_suppkey, s_name, s_nationkey FROM supplier",
-    "q61_approx_percentile" ->
-      """SELECT l_returnflag,
-        | round(quantile_cont(CASE WHEN isfinite(l_quantity) THEN l_quantity END, 0.5), 6) AS p50_qty,
-        | TRUE AS within_tol
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "q62_pivot" ->
-      """SELECT user_id,
+    },
+      Some("""SELECT user_id,
         | count(*) FILTER (WHERE event_type = 'click')    AS click,
         | count(*) FILTER (WHERE event_type = 'error')    AS error,
         | count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
         | count(*) FILTER (WHERE event_type = 'signup')   AS signup,
         | count(*) FILTER (WHERE event_type = 'view')     AS view
-        |FROM events GROUP BY 1""".stripMargin
+        |FROM events GROUP BY 1""".stripMargin)),
+
+    // ORC round trip — the columnar-format matrix beside parquet
+    // (native tables) and CSV (q43): ORC write + schema'd read-back.
+    // Same predicate-pushdown/column-pruning story as parquet at
+    // 100 TB; the engine treats the format as a storage detail.
+    Graded("q60_orc_roundtrip", (s, d) => {
+      val sink = graft.ops.AppScratch.path(s, "q60_orc")
+      Tables.supplier(s, d).write.mode("overwrite").orc(sink)
+      s.read.orc(sink)
+        .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
+    },
+      Some("SELECT s_suppkey, s_name, s_nationkey FROM supplier"))
   )
 }

@@ -4,9 +4,10 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 /** Pins the one bench line format (BenchLine.scala): the full line's
-  * exact key set and aggregates, the compact line's bounded shape, the
-  * `sf` escaping, and the SPARK_GRAFT_BENCH_ONLY selection rule. Pure
-  * functions — no SparkSession.
+  * exact key set and aggregates, the compact line's bounded shape and
+  * the `sf` escaping. Pure functions — no SparkSession. (The
+  * SPARK_GRAFT_BENCH_ONLY selection rule is SparkEntry.select, pinned
+  * in EntrySpec next to the registry.)
   */
 class BenchLineSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -55,8 +56,12 @@ class BenchLineSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(ln.length < 600, s"compact line must fit any stdout tail: ${ln.length}")
     assert(f("n_queries") === JInt(113) && f("compact") === JBool(true))
     assert(f("failed") === JObject("q092_some_long_query_name" -> JInt(3)))
+    // a subset line is marked, but never lists its names: a 113-name
+    // subset stays as short as a full pass
     assert(fields(render(results, subset = true, compact = true))("only") ===
-      JString("q01,q02"))
+      JBool(true))
+    val subsetLn = render(many.map(_.copy(failed = 0)), subset = true, compact = true)
+    assert(subsetLn.length < 600, s"a subset compact line must stay bounded: ${subsetLn.length}")
     // it reports the same totals as the full line it summarizes
     val full = fields(render(many))
     assert(f("value") === full("value") && f("total_min") === full("total_min"))
@@ -68,16 +73,5 @@ class BenchLineSpec extends org.scalatest.funsuite.AnyFunSuite {
     val sf = "/data/\"odd\"\\dir\tx"
     for (compact <- Seq(false, true))
       assert(fields(render(results, sf = sf, compact = compact))("sf") === JString(sf))
-  }
-
-  test("select: unset = all queries, sorted; unknown names fail early, named") {
-    val registry = Seq("q03", "q01", "q02")
-    assert(BenchLine.select(registry, None) === Seq("q01", "q02", "q03"))
-    // the subset runs in full-pass order, whatever order it was named in
-    assert(BenchLine.select(registry, Some(" q03, q01 ,")) === Seq("q01", "q03"))
-    val e = intercept[IllegalArgumentException](
-      BenchLine.select(registry, Some("q01,q999,q998")))
-    assert(e.getMessage.contains("q999,q998") && !e.getMessage.contains("q01"))
-    intercept[IllegalArgumentException](BenchLine.select(registry, Some(" , ")))
   }
 }

@@ -37,16 +37,37 @@ class EntrySpec extends SparkSpec {
     assert(again.exceptAll(result).count() === 0L)
   }
 
-  test("registry contract: every oracle key names a registered query; rows-only set is exactly the documented one") {
-    val qs = SparkEntry.queries.keySet
-    val os = SparkEntry.oracleSql.keySet
-    val orphanOracles = os -- qs
-    assert(orphanOracles.isEmpty,
-      s"oracle entries with no query (typo → silently ungraded): $orphanOracles")
+  test("registry contract: 113 distinct names; rows-only set is exactly {q30_simhash}") {
+    val names = SparkEntry.registry.map(_.name)
+    // a query object left out of the registry Seq would shrink the
+    // graded surface without any other signal
+    assert(names.size === 113 && names.distinct.size === 113,
+      s"graded surface drifted: ${names.size} records, ${names.distinct.size} names")
     // queries the driver grades rows-only, by declared design
-    val rowsOnlyByDesign = Set("q30_simhash")
-    assert((qs -- os) === rowsOnlyByDesign,
-      s"every new query needs an oracleSql entry (or add it to the documented rows-only set): ${(qs -- os) -- rowsOnlyByDesign}")
+    val rowsOnly = SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name).toSet
+    assert(rowsOnly === Set("q30_simhash"),
+      s"every new query needs an oracle (or add it to the documented rows-only set): $rowsOnly")
+  }
+
+  test("select: unset = all queries, sorted; unknown names fail early, named") {
+    val all = SparkEntry.queries.keys.toSeq.sorted
+    assert(SparkEntry.select(None) === all)
+    // the subset runs in full-pass order, whatever order it was named in
+    assert(SparkEntry.select(Some(" q03_filter_date_between, q01_scan_project ,")) ===
+      Seq("q01_scan_project", "q03_filter_date_between"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Some("q01_scan_project,q999,q998")))
+    assert(e.getMessage.contains("q999,q998") && !e.getMessage.contains("q01"))
+    intercept[IllegalArgumentException](SparkEntry.select(Some(" , ")))
+  }
+
+  test("Verify: an unknown subset name fails before any dump, named") {
+    val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_verify_${System.nanoTime()}")
+    val e = intercept[IllegalArgumentException](
+      Verify.main(Array("unused-sf-dir", out.toString, "q999,q01_scan_project")))
+    assert(e.getMessage.contains("q999") && !e.getMessage.contains("q01"))
+    assert(!java.nio.file.Files.exists(out), "Verify wrote output before resolving its subset")
   }
 
   // The r18 regression's static half: the dump encoding of raw

@@ -222,40 +222,6 @@ class RelationalOpsSpec extends SparkSpec {
     assert(r(1) === Row("s2", null)) // missing field → null (.get semantics)
   }
 
-  test("parseWithQuarantine: bad rows quarantined with raw text, good rows survive") {
-    val schema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("amt", StringType)))
-    val raw = Seq(
-      """{"id":1,"amt":"10"}""",
-      """{"id":2,"amt":"20"""",          // truncated JSON → quarantine
-      """not json at all""",             // garbage → quarantine
-      """{"id":4}""").toDF("body")       // missing field → null, NOT quarantined
-    val out = parseWithQuarantine(raw, "body", schema)
-    val good = out.filter(col("quarantine_raw").isNull)
-      .select("id", "amt").collect().toSet
-    val bad = out.filter(col("quarantine_raw").isNotNull)
-      .select("quarantine_raw").as[String].collect().toSet
-    assert(out.count() === 4, "no row may vanish — quarantine, don't drop")
-    assert(good === Set(Row(1L, "10"), Row(4L, null)))
-    assert(bad === Set("""{"id":2,"amt":"20"""", "not json at all"),
-      s"quarantine must carry the raw text for replay: $bad")
-  }
-
-  test("parseWithQuarantine: NULL input and JSON null are quarantined, not clean all-null rows") {
-    val schema = StructType(Seq(StructField("id", LongType)))
-    val raw = Seq(Some("""{"id":1}"""), None, Some("null"))
-      .toDF("body")
-    val out = parseWithQuarantine(raw, "body", schema)
-    assert(out.count() === 3)
-    // the replay contract: quarantine_raw null ⇔ a struct was parsed
-    assert(out.filter(col("quarantine_raw").isNull).count() === 1)
-    val bad = out.filter(col("quarantine_raw").isNotNull)
-      .select("quarantine_raw").as[String].collect().toSet
-    assert(bad === Set("null"),
-      s"non-struct parses must quarantine as replayable JSON text: $bad")
-  }
-
   test("qualityGate: one verdict per expectation, failures observed not thrown") {
     val df = Seq((1L, 10.0), (2L, -5.0), (2L, 3.0)).toDF("k", "v")
     val out = qualityGate(df, Seq(
