@@ -27,8 +27,12 @@ object Tables {
   // test fixtures (TESTDATA.md); the returned frame is an immutable
   // logical plan, safe to share. (This also gives builders their
   // zero-jobs-at-construction contract — LazyRegistrySpec.)
-  private val frames =
+  private[graft] val frames =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+
+  /** Drops `spark`'s entries (a `Session.scoped` child closing). */
+  private[graft] def forget(spark: SparkSession): Unit =
+    frames.keySet.removeIf(_._1 eq spark)
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // lazy eviction: entries strongly pin their SparkSession (and its

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Session
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -34,23 +35,16 @@ object LayoutOps {
     * partition size splits into bounded tasks, several files in that
     * dir), with coalescing disabled scoped to the write — small
     * values keep one task and exactly one file per dir, at every
-    * scale, exactly the r21 layout.
-    *
-    * The scoped conf set/restore is safe under the sequential
-    * bench/Verify drivers; like q100's state-partition scope it is
-    * NOT safe under concurrent query construction on one session
-    * (documented watch item, VERDICT r21 finding 6).
+    * scale, exactly the r21 layout. The write runs on a scoped
+    * session, so the caller's conf never changes.
     */
-  def partitionedOverwrite(df: DataFrame, partCol: String, sink: String): Unit = {
-    val s = df.sparkSession
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prev = s.conf.get(key, "true")
-    try {
-      s.conf.set(key, "false")
-      df.hint("rebalance", col(partCol))
+  def partitionedOverwrite(df: DataFrame, partCol: String, sink: String): Unit =
+    Session.scoped(df.sparkSession,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") { c =>
+      Session.sql(c, "SELECT * FROM {df}", "df" -> df)
+        .hint("rebalance", col(partCol))
         .write.partitionBy(partCol).mode("overwrite").parquet(sink)
-    } finally s.conf.set(key, prev)
-  }
+    }
 
   /** Morton (Z-order) code: interleave the low `bits` bits of x and y
     * (x in even positions, y in odd). Pure codegen'd integer

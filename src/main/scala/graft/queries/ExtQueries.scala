@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Graded, Tables}
+import graft.{Graded, Session, Tables}
 import graft.ops.{RelationalOps, TextOps}
 import graft.ops.RelationalOps.sumMoney
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -360,10 +360,8 @@ object ExtQueries {
     // pipeline in one statement, planned by the same Catalyst rules as
     // the DataFrame queries (they are one API). Mirrors how a mart
     // consumer would actually query the warehouse.
-    Graded("q48_sql_pipeline", (s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("g_orders")
-      Tables.customer(s, d).createOrReplaceTempView("g_customer")
-      s.sql(
+    Graded("q48_sql_pipeline", (s, d) =>
+      Session.sql(s,
         """SELECT c_mktsegment, order_year, total, n_orders,
           |       -- segment tiebreak NULLS LAST explicitly: Spark SQL's bare
           |       -- ASC is NULLS FIRST, DuckDB's default is NULLS LAST — on a
@@ -375,10 +373,10 @@ object ExtQueries {
           |         year(o.o_orderdate) AS order_year,
           |         CAST(sum(TRY_CAST(nullif(o.o_totalprice, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS total,
           |         count(*) AS n_orders
-          |  FROM g_orders o JOIN g_customer c ON o.o_custkey = c.c_custkey
+          |  FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
           |  GROUP BY 1, 2
-          |)""".stripMargin)
-    },
+          |)""".stripMargin,
+        "orders" -> Tables.orders(s, d), "customer" -> Tables.customer(s, d)),
       Some("""SELECT c_mktsegment, order_year, total, n_orders,
         |       rank() OVER (PARTITION BY order_year ORDER BY total DESC, c_mktsegment ASC NULLS LAST) AS rnk
         |FROM (

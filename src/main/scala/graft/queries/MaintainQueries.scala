@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Graded, Tables}
+import graft.{Graded, Session, Tables}
 import graft.ops.RelationalOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *   - q113: AQE skew-join — the RUNTIME re-plan Spark applies when a
   *     shuffle partition is observed skewed (q44/q68 pin the MANUAL
   *     salting alternative; nothing pins the adaptive path).
-  *     AqeSkewSpec asserts skew=true in the executed plan.
+  *     MaintainSpec asserts skew=true in the executed plan.
   */
 object MaintainQueries {
   val graded: Seq[Graded] = Seq(
@@ -124,18 +124,11 @@ object MaintainQueries {
     // SPLITS the hot partition at runtime — the re-plan that replaces
     // q44/q68's hand salting on a real cluster. Broadcast is disabled
     // for the join so the shuffle path (where skew handling lives) is
-    // actually exercised; configs restore in finally so no other
-    // query inherits them.
+    // actually exercised. The configs live on a scoped session that
+    // the returned frame carries to execution, so no other query
+    // inherits them.
     Graded("q113_aqe_skew_join", (s, d) =>
-      withSkewConfigs(s) {
-        // the join MUST materialize inside the config scope (lazy
-        // execution after restore would run without skew handling);
-        // the aggregate is 5 rows (one per priority), so re-packing
-        // the collected result is metadata-sized, not a driver loop
-        val out = skewJoinFrame(s, d)
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      },
+      Session.scoped(s, skewConf: _*)(skewJoinFrame(_, d)),
       Some("""WITH fact AS (
         |  SELECT CASE WHEN l_orderkey % 4 = 0 THEN 1 ELSE l_orderkey END AS k,
         |         l_quantity,
@@ -148,9 +141,9 @@ object MaintainQueries {
         |GROUP BY 1""".stripMargin))
   )
 
-  /** The skewed join-aggregate itself, config-free: AqeSkewSpec drives
-    * this under [[withSkewConfigs]] and asserts the executed plan
-    * carries `skew=true` on the sort-merge join.
+  /** The skewed join-aggregate itself, config-free: MaintainSpec runs
+    * it on a session scoped to [[skewConf]] and asserts the executed
+    * plan carries `skew=true` on the sort-merge join.
     */
   private[graft] def skewJoinFrame(s: SparkSession, d: String): DataFrame = {
     // repartition(8) gives the join's map stage real parallelism: the
@@ -206,8 +199,7 @@ object MaintainQueries {
   }
 
   /** Fixture-scaled AQE skew thresholds + broadcast disabled (the
-    * shuffle join is where skew handling lives); restores every
-    * touched key afterwards so no other query inherits them.
+    * shuffle join is where skew handling lives).
     *
     * Why each knob: skew DETECTION needs the hot partition to stand
     * out from the median (≥16 shuffle partitions — with 2, the median
@@ -215,33 +207,16 @@ object MaintainQueries {
     * fixture KBs from the 256 MB production default); skew SPLITTING
     * happens on map-output boundaries, so the scan must produce
     * multiple mappers (small maxPartitionBytes) — a single-mapper
-    * partition cannot be split no matter how skewed.
+    * partition cannot be split no matter how skewed. Forcing the
+    * split applies it even where it costs an extra downstream
+    * exchange — the agg reshuffles on a different key regardless.
     */
-  private[graft] def withSkewConfigs[A](s: SparkSession)(body: => A): A = {
-    val conf = s.conf
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.shuffle.partitions",
-      "spark.sql.files.maxPartitionBytes",
-      "spark.sql.adaptive.forceOptimizeSkewedJoin")
-      .map(k => k -> conf.getOption(k))
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4KB")
-      // apply the split even where it costs an extra downstream
-      // exchange — the agg reshuffles on a different key regardless
-      conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      conf.set("spark.sql.shuffle.partitions", "16")
-      conf.set("spark.sql.files.maxPartitionBytes", "262144")
-      body
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
-  }
+  private[graft] val skewConf: Seq[(String, String)] = Seq(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4KB",
+    "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+    "spark.sql.shuffle.partitions" -> "16",
+    "spark.sql.files.maxPartitionBytes" -> "262144")
 }

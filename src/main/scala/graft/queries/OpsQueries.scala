@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Graded, Tables}
+import graft.{Graded, Session, Tables}
 import graft.ops.{ReconcileOps, RelationalOps}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -66,9 +66,8 @@ object OpsQueries {
       // a constant tuned for either environment. Filesystem metadata
       // only (no Spark job); at sf0.1 this yields 2 (measured best:
       // OPTIMIZATION_r21.md interleaved mins 2.69/2.48/2.42 s for 8/4/2),
-      // and a production-sized backfill derives thousands. Scoped to
-      // this pipeline and restored in finally.
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
+      // and a production-sized backfill derives thousands. The stream
+      // runs on a session scoped to that count.
       try {
         // 4 arrival files via round-robin repartition (no pre-count
         // scan); the staging write converts the ns-long ts to a proper
@@ -76,27 +75,25 @@ object OpsQueries {
         ev.repartition(4).write.mode("overwrite").parquet(staged)
         val stagedBytes = graft.ops.FsOps.treeBytes(new java.io.File(staged))
         val stateParts = math.max(2L, (stagedBytes + (64L << 20) - 1) / (64L << 20))
-        s.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-        val stream = s.readStream.schema(s.read.parquet(staged).schema)
-          .option("maxFilesPerTrigger", "1").parquet(staged)
-        val agg = stream
-          .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-          .agg(sum(col("value").cast(DecimalType(18, 2))).as("_amt"),
-            count(lit(1)).as("n"))
-          .select(col("user_id"), col("day"),
-            col("_amt").cast("double").as("amt"), col("n"))
-        graft.streaming.StreamingOps
-          .maintainMart(agg, table, Seq("user_id", "day"), s"$base/ckpt")
-          .awaitTermination()
+        val schema = s.read.parquet(staged).schema
+        Session.scoped(s, "spark.sql.shuffle.partitions" -> stateParts.toString) { c =>
+          val agg = c.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").parquet(staged)
+            .groupBy(col("user_id"), to_date(col("ts")).as("day"))
+            .agg(sum(col("value").cast(DecimalType(18, 2))).as("_amt"),
+              count(lit(1)).as("n"))
+            .select(col("user_id"), col("day"),
+              col("_amt").cast("double").as("amt"), col("n"))
+          graft.streaming.StreamingOps
+            .maintainMart(agg, table, Seq("user_id", "day"), s"$base/ckpt")
+            .awaitTermination()
+        }
         // maintenance duty cycle at drain end: fold the per-batch
         // segment chain to one and reclaim the orphans, so the serving
         // read opens O(buckets) files instead of O(batches x buckets)
         graft.sources.UpsertSinkSource.compact(s, table)
         graft.sources.UpsertSinkSource.vacuum(table)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        rmTree(new java.io.File(base))
-      }
+      } finally rmTree(new java.io.File(base))
       s.read.format("graft.sources.UpsertSinkSource")
         .option("table", table).load()
     },

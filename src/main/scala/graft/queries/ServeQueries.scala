@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Graded, Tables}
+import graft.{Graded, Session, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -213,9 +213,8 @@ object ServeQueries {
     // GROUP BYs would scan three times. grouping() flags (cast to a
     // portable int) disambiguate "NULL because rolled up" from "NULL
     // in the data" — both engines restate them bit-for-bit.
-    Graded("q98_grouping_sets", (s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("g_orders_gs")
-      s.sql(
+    Graded("q98_grouping_sets", (s, d) =>
+      Session.sql(s,
         """SELECT o_orderpriority, om,
           |       CAST(grouping(o_orderpriority) AS INT) AS g_pri,
           |       CAST(grouping(om) AS INT) AS g_om,
@@ -224,9 +223,9 @@ object ServeQueries {
           |FROM (SELECT o_orderpriority,
           |             date_format(o_orderdate, 'yyyy-MM') AS om,
           |             o_totalprice
-          |      FROM g_orders_gs)
-          |GROUP BY GROUPING SETS ((o_orderpriority), (om), ())""".stripMargin)
-    },
+          |      FROM {orders})
+          |GROUP BY GROUPING SETS ((o_orderpriority), (om), ())""".stripMargin,
+        "orders" -> Tables.orders(s, d)),
       // HAVING count(*) > 0: Spark emits NO rows for the () grouping set
       // on empty input (Expand+groupBy); the standard emits a count-0
       // grand total. Pins the engine's semantics; vacuous on real groups
@@ -252,39 +251,21 @@ object ServeQueries {
     // back and aggregates per starting node. DuckDB runs the
     // IDENTICAL recursion — both engines derive the closure
     // independently.
-    Graded("q105_recursive_cte", (s, d) => {
-      val cust = Tables.customer(s, d)
-      cust.createOrReplaceTempView("g_cust_r")
-      // Spark's recursion ROW guard defaults to 1M rows TOTAL across
-      // all iterations — a runaway-recursion safety net sized for
-      // notebooks, not data: this closure is |customer| × ~log2(max
-      // key) rows (~4M at sf1 — the SCALING.md ladder caught the
-      // default failing this query at 10× data). Data-sized guards
-      // would need the anchor's cardinality, and counting it here
-      // would run a Spark job at query-CONSTRUCTION time (breaking
-      // the registry's builders-are-lazy contract —
-      // LazyRegistrySpec). So the row guard goes to the conf's Int
-      // ceiling — i.e. out of the way at any data scale — and the
-      // LEVEL limit (default 100) stays as the real non-termination
-      // guard: this hierarchy halves its frontier per level, so a
-      // runaway recursion is a level-limit bug, not a row-count one.
-      // The set is a deterministic constant (idempotent across
-      // builds, no data dependence) and must OUTLIVE the builder:
-      // the returned frame reads the conf lazily at execution, so
-      // restoring it here would re-break the query.
-      s.conf.set("spark.sql.cteRecursionRowLimit", Int.MaxValue.toString)
-      s.sql(
+    // The closure is ~4M rows at sf1, past Spark's default recursion
+    // row guard; Session.local lifts that guard and says why.
+    Graded("q105_recursive_cte", (s, d) =>
+      Session.sql(s,
         """WITH RECURSIVE anc(custkey, anc_key, d) AS (
-          |  SELECT c_custkey, c_custkey, 0 FROM g_cust_r
+          |  SELECT c_custkey, c_custkey, 0 FROM {cust}
           |  UNION ALL
           |  SELECT custkey, anc_key DIV 2, d + 1 FROM anc WHERE anc_key > 1
           |)
           |SELECT a.custkey,
           |       CAST(max(a.d) AS INT) AS depth,
           |       CAST(sum(TRY_CAST(nullif(c.c_acctbal, 'nan'::DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS chain_bal
-          |FROM anc a JOIN g_cust_r c ON a.anc_key = c.c_custkey
-          |GROUP BY a.custkey""".stripMargin)
-    },
+          |FROM anc a JOIN {cust} c ON a.anc_key = c.c_custkey
+          |GROUP BY a.custkey""".stripMargin,
+        "cust" -> Tables.customer(s, d)),
       Some("""WITH RECURSIVE anc(custkey, anc_key, d) AS (
         |  SELECT c_custkey, c_custkey, 0 FROM customer
         |  UNION ALL
@@ -404,14 +385,13 @@ object ServeQueries {
     // Scale note: per-group strings must stay bounded (here ≤25
     // nations per region); unbounded groups shard first like q85's
     // postings.
-    Graded("q109_listagg", (s, d) => {
-      Tables.nation(s, d).createOrReplaceTempView("g_nation_la")
-      s.sql(
+    Graded("q109_listagg", (s, d) =>
+      Session.sql(s,
         """SELECT n_regionkey,
           |       count(*) AS n_nations,
           |       listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS nations
-          |FROM g_nation_la GROUP BY n_regionkey""".stripMargin)
-    },
+          |FROM {nation} GROUP BY n_regionkey""".stripMargin,
+        "nation" -> Tables.nation(s, d)),
       Some("""SELECT n_regionkey, count(*) AS n_nations,
         |       string_agg(n_name, ',' ORDER BY n_name) AS nations
         |FROM nation GROUP BY n_regionkey""".stripMargin)),
@@ -424,16 +404,14 @@ object ServeQueries {
     // any nested loop), i.e. the same plan q23 writes by hand with
     // row_number — proof the user-friendly formulation costs nothing
     // at 100 TB. Ties broken by key so the top-2 is deterministic.
-    Graded("q110_lateral_topn", (s, d) => {
-      Tables.nation(s, d).createOrReplaceTempView("g_nation_lt")
-      Tables.customer(s, d).createOrReplaceTempView("g_cust_lt")
-      s.sql(
+    Graded("q110_lateral_topn", (s, d) =>
+      Session.sql(s,
         """SELECT o.n_nationkey, o.n_name, l.c_custkey, l.c_acctbal
-          |FROM g_nation_lt o,
-          |LATERAL (SELECT c_custkey, c_acctbal FROM g_cust_lt c
+          |FROM {nation} o,
+          |LATERAL (SELECT c_custkey, c_acctbal FROM {cust} c
           |         WHERE c.c_nationkey = o.n_nationkey
-          |         ORDER BY c_acctbal DESC, c_custkey LIMIT 2) l""".stripMargin)
-    },
+          |         ORDER BY c_acctbal DESC, c_custkey LIMIT 2) l""".stripMargin,
+        "nation" -> Tables.nation(s, d), "cust" -> Tables.customer(s, d)),
       Some("""SELECT o.n_nationkey, o.n_name, l.c_custkey, l.c_acctbal
         |FROM nation o,
         |LATERAL (SELECT c_custkey, c_acctbal FROM customer c

@@ -62,7 +62,7 @@ class LazyRegistrySpec extends SparkSpec {
     "q100_stream_mart",        // W end-to-end streaming mart (2m)
     "q112_trailing_distinct",  // C distinct (day,user) pairs feed 3 consumers
     "q108_observe_metrics",    // W metrics ride the one write action
-    "q113_aqe_skew_join",      // collect()s the skew join inside withSkewConfigs; writes nothing
+    "q113_aqe_skew_join",      // scoped session reads its 2 tables afresh (footer jobs)
   )
 
   test("constructing every non-materializing query frame launches zero Spark jobs") {

@@ -36,10 +36,10 @@ class MaintainSpec extends SparkSpec {
   }
 
   test("q113: AQE observes the hot key and splits it — skew=true in the executed join") {
-    MaintainQueries.withSkewConfigs(spark) {
+    Session.scoped(spark, MaintainQueries.skewConf: _*) { c =>
       // sf0.01: enough shuffle bytes for the fixture-scaled skew
       // thresholds to see the hot partition
-      val df = MaintainQueries.skewJoinFrame(spark, "/root/testdata/sf0.01")
+      val df = MaintainQueries.skewJoinFrame(c, "/root/testdata/sf0.01")
       df.collect() // AQE decides from runtime map-output sizes — must execute
       val executed = df.queryExecution.executedPlan.toString
       assert(executed.contains("skew=true"),
@@ -53,31 +53,24 @@ class MaintainSpec extends SparkSpec {
     // filtered dim is broadcast-small, and AQE rewrites the join mid-
     // query. On a 100-TB cluster this is what saves the shuffle when a
     // selective filter guts a dimension the optimizer couldn't predict.
-    val conf = spark.conf
-    val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> conf.getOption(k))
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "1b") // static: never broadcast
-      conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "4MB") // runtime: allow
-      val dim = Tables.nation(spark, sf).filter(col("n_regionkey") === 0)
-      val fact = Tables.customer(spark, sf)
+    Session.scoped(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "1b", // static: never broadcast
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "4MB") { c => // runtime: allow
+      val dim = Tables.nation(c, sf).filter(col("n_regionkey") === 0)
+      val fact = Tables.customer(c, sf)
         .join(dim, col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name")).agg(count(lit(1)).as("n"))
       fact.collect()
       val executed = fact.queryExecution.executedPlan.toString
       assert(executed.contains("BroadcastHashJoin"),
         s"AQE did not convert the shuffle join to broadcast at runtime:\n$executed")
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
     }
   }
 
   test("q113 result values are skew-handling-invariant (same answer with and without AQE skew configs)") {
     val base = MaintainQueries.skewJoinFrame(spark, sf).collect().toSet
-    val skewed = MaintainQueries.withSkewConfigs(spark) {
-      MaintainQueries.skewJoinFrame(spark, sf).collect().toSet
+    val skewed = Session.scoped(spark, MaintainQueries.skewConf: _*) { c =>
+      MaintainQueries.skewJoinFrame(c, sf).collect().toSet
     }
     assert(base === skewed, "runtime re-planning must never change results")
   }

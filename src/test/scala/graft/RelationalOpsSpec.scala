@@ -193,17 +193,16 @@ class RelationalOpsSpec extends SparkSpec {
       .add("ret_code", StringType)
       .add("data", ArrayType(new StructType()
         .add("id", LongType).add("STORE_ID", StringType)))
-    val raw = Seq(("s1", """{"ret_code":"0000","data":[{"id":7,"STORE_ID":"api"}]}"""))
-      .toDF("store_id", "payload")
-    val prev = spark.conf.get("spark.sql.caseSensitive", "false")
-    spark.conf.set("spark.sql.caseSensitive", "true")
-    try {
+    Session.scoped(spark, "spark.sql.caseSensitive" -> "true") { c =>
+      val raw = c.createDataFrame(
+        Seq(("s1", """{"ret_code":"0000","data":[{"id":7,"STORE_ID":"api"}]}""")))
+        .toDF("store_id", "payload")
       val out = decodeEnvelope(raw, "payload", schema, keep = Seq("store_id"))
       assert(out.columns.toSeq === Seq("store_id", "id", "STORE_ID"),
         s"distinct-case payload field must survive: ${out.columns.toSeq}")
       assert(out.select("store_id", "id", "STORE_ID")
         .as[(String, Long, String)].collect().toSeq === Seq(("s1", 7L, "api")))
-    } finally spark.conf.set("spark.sql.caseSensitive", prev)
+    }
   }
 
   test("decodeEnvelope: ret_code gate drops bad batches, payload fields nullable (S1)") {
@@ -281,15 +280,13 @@ class RelationalOpsSpec extends SparkSpec {
     assert(graft.ops.RelationalOps.scanScaledPartitions(df, 8) === 8)
     // shrink the split size to simulate a many-split production table:
     // the count must track the (now large) scan estimate, not the floor
-    val key = "spark.sql.files.maxPartitionBytes"
-    val prev = spark.conf.get(key)
-    try {
-      spark.conf.set(key, (64 * 1024).toString)
-      val scaled = graft.ops.RelationalOps.scanScaledPartitions(df, 8)
-      val est = graft.ops.RelationalOps.estimatedScanSplits(df).get
+    Session.scoped(spark, "spark.sql.files.maxPartitionBytes" -> (64 * 1024).toString) { c =>
+      val small = Tables.load(c, "/root/testdata/sf0.01", "lineitem")
+      val scaled = graft.ops.RelationalOps.scanScaledPartitions(small, 8)
+      val est = graft.ops.RelationalOps.estimatedScanSplits(small).get
       assert(est > 8, s"test premise broken: estimate $est not > 8")
       assert(scaled === est.toInt, s"scaled $scaled != estimate $est")
-    } finally spark.conf.set(key, prev)
+    }
     // a non-single-relation plan keeps the floor untouched
     val union = df.unionByName(df)
     assert(graft.ops.RelationalOps.scanScaledPartitions(union, 8) === 8)

@@ -35,17 +35,15 @@ class WriteRebalanceSpec extends SparkSpec {
   test("partitionedOverwrite: a hot partition splits into bounded files") {
     val dir = java.nio.file.Files.createTempDirectory("graft_rebal_hot").toFile
     dir.deleteOnExit()
-    val prev = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      // force the skew machinery visible at test scale: advisory 64KB
-      // against a ~1MB hot month next to two tiny ones; 16 shuffle
-      // partitions so the cold months get their own hash buckets (a
-      // cold month SHARING a skewed bucket is legitimately split by
-      // map-output ranges — not what this test pins)
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "65536")
-      spark.conf.set("spark.sql.shuffle.partitions", "16")
-      val df = spark.range(200000).select(
+    // force the skew machinery visible at test scale: advisory 64KB
+    // against a ~1MB hot month next to two tiny ones; 16 shuffle
+    // partitions so the cold months get their own hash buckets (a
+    // cold month SHARING a skewed bucket is legitimately split by
+    // map-output ranges — not what this test pins)
+    Session.scoped(spark,
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536",
+        "spark.sql.shuffle.partitions" -> "16") { c =>
+      val df = c.range(200000).select(
         when(col("id") % 100 === 0,
           concat(lit("cold"), (expr("id div 100") % 2).cast("string")))
           .otherwise(lit("hot")).as("m"),
@@ -57,14 +55,11 @@ class WriteRebalanceSpec extends SparkSpec {
       assert(counts("m=cold0") === 1 && counts("m=cold1") === 1,
         s"cold months must stay one file each, saw $counts")
       // and the write is lossless
-      val back = spark.read.parquet(dir.getAbsolutePath)
+      val back = c.read.parquet(dir.getAbsolutePath)
       assert(back.count() === 200000)
-      // the scoped coalescing override must be restored
-      assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled",
+      // the write's no-coalescing scope must not reach its caller
+      assert(c.conf.get("spark.sql.adaptive.coalescePartitions.enabled",
         "true") === "true")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", prev)
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
   }
 }
