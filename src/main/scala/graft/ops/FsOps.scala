@@ -17,10 +17,14 @@ object FsOps {
     * reclaiming its OWN residue (losing race branches, shutdown
     * hooks) or immediately followed by an operation that fails loudly
     * if the tree still stands. Callers needing the loud contract use
-    * [[rmTreeOrThrow]].
+    * [[rmTreeOrThrow]]. A symlink is deleted as itself and never
+    * descended into: `listFiles()` on a link to a directory lists the
+    * TARGET's entries, which lie outside the tree being removed.
     */
   def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(): Unit
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete(): Unit
   }
 
   /** Total bytes of regular files under a tree — filesystem metadata

@@ -79,22 +79,20 @@ object TextOps {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** 31-bit base hash of each shingle: xxhash64 folded into
-    * [0, 2^31-1) so the affine minhash permutations below never
-    * overflow a Long ((2^31)^2 < 2^63).
+  /** Minhash modulus: hashes are folded into [0, 2^31-1) so the
+    * affine minhash permutations below never overflow a Long
+    * ((2^31)^2 < 2^63).
     */
   private val MersennePrime = 2147483647L // 2^31 - 1
-
-  def shingleHashes(shing: Column): Column =
-    transform(shing, s => pmod(xxhash64(s), lit(MersennePrime)))
 
   /** Distinct 64-bit word-n-gram hashes: the representation the
     * candidate-generation joins and exact-Jaccard verify run on.
     * Longs shuffle and hash-intersect far cheaper than 3-word shingle
     * strings, and set arithmetic on them equals set arithmetic on the
     * strings up to a 64-bit collision (~|shingles|²/2⁶⁵ per corpus —
-    * ~1e-6 even at 10M distinct shingles; the 31-bit fold above is for
-    * minhash permutation inputs only, never for set identity).
+    * ~1e-6 even at 10M distinct shingles; the 31-bit fold in
+    * [[minhashSignatures]] is for permutation inputs only, never for
+    * set identity).
     *
     * Computed NUMERICALLY: each token is hashed once, then consecutive
     * token hashes combine by rotate-XOR (position i contributes

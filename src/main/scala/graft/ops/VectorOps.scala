@@ -129,78 +129,6 @@ object VectorOps {
       .select(col("id_a"), col("id_b"))
   }
 
-  /** Squared L2 distance between two double arrays. */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
-
-  /** Nearest-centroid assignment: index (0-based) of the closest
-    * centroid in `cents` (an array-of-arrays Column, typically a
-    * `typedLit` broadcast of driver-held centroids) by squared L2.
-    * One fold over the k candidates per row — no join, no shuffle.
-    */
-  def nearestCentroid(vec: Column, cents: Column, k: Int): Column =
-    // Infinity seed, not Double.MaxValue: a legitimate distance of
-    // +Infinity (overflowed squares) must still beat the seed. A NaN
-    // distance (NaN element in the vector) fails every comparison and
-    // returns the sentinel -1 — callers treat -1 as "unassignable"
-    // (kmeansCentroids drops such rows from training; an ivf probe in
-    // cell -1 matches no centroid and returns empty) rather than
-    // silently training a garbage cell.
-    aggregate(
-      zip_with(cents, sequence(lit(0), lit(k - 1)),
-        (c, i) => struct(sqDist(c, vec).as("d"), i.as("i"))),
-      struct(lit(Double.PositiveInfinity).as("d"), lit(-1).as("i")),
-      (acc, x) => when(x("d") < acc("d"), x).otherwise(acc))("i")
-
-  /** K-means quantizer TRAINING (Lloyd's algorithm) — the build step
-    * [[ivfCentroids]] presupposes: when no precomputed cell assignment
-    * exists, this learns one. The Spark shape is the canonical one
-    * (same as MLlib's): centroids are k×dim doubles held on the
-    * DRIVER (a few KB — legitimately driver-state, like any model
-    * coefficient vector), shipped into the plan as a literal each
-    * iteration; assignment is a per-row fold over the k candidates
-    * (no join), and the update is one partial-aggregated groupBy per
-    * iteration. Per iteration at 100 TB: one corpus scan + one
-    * |k×dim|-sized shuffle — nothing quadratic, nothing collected
-    * except the centroid table itself.
-    *
-    * Deterministic: seeds are the first k rows by `idCol` order, and
-    * means are order-independent (sums of doubles grouped by a
-    * deterministic assignment... strictly, DOUBLE sums depend on
-    * reduce order; for reproducible builds at scale, persist the
-    * trained centroids like q35 does — retraining is approximate by
-    * nature, the persisted artifact is what must be stable).
-    * Returns (cell INT, _centroid ARRAY<DOUBLE>).
-    */
-  def kmeansCentroids(vecs: DataFrame, idCol: String, vecCol: String,
-                      k: Int, iters: Int): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val v = toDouble(col(vecCol))
-    var cents: Seq[Seq[Double]] = vecs.orderBy(col(idCol)).limit(k)
-      .select(v.as("_v")).collect().map(_.getSeq[Double](0).toSeq).toSeq
-    (1 to iters).foreach { _ =>
-      val centLit = typedLit(cents)
-      val assigned = vecs.select(v.as("_v"),
-        nearestCentroid(v, centLit, cents.size).as("_cell"))
-      val updated = assigned
-        .select(col("_cell"), posexplode(col("_v")))
-        .groupBy(col("_cell"), col("pos"))
-        .agg(avg(col("col")).as("c"))
-        .groupBy(col("_cell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
-        .select(col("_cell"), transform(col("pc"), x => x("c")).as("_centroid"))
-        .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq).toMap
-      // empty cells keep their previous centroid (standard Lloyd
-      // fix); rows assigned the -1 sentinel (NaN distance) fall out
-      // here too — indices only covers [0, k)
-      cents = cents.indices.map(i => updated.getOrElse(i, cents(i)))
-    }
-    cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cell", "_centroid")
-  }
-
   /** IVF quantizer BUILD: per-cell mean vector (|cells| rows) from the
     * cell assignments in `labelCol`. This is the INGEST-TIME step — it
     * scans the full corpus once, so it must run when vectors are

@@ -515,15 +515,20 @@ object NorthQueries {
         e.filter(col("vec_id") === 0L),
         "vec_id", "embedding", "label", 3, 10)
     },
-      // non-finite embeddings are UNASSIGNABLE in the engine (a NaN
-      // distance returns nearestCentroid's -1 sentinel: trains no cell,
-      // matches no centroid — r16 mixed augmentation): one NaN vector
-      // in the corpus otherwise turns its label's centroid dims to NaN,
-      // NaN sorts FIRST under DESC in both engines, and the poisoned
-      // label enters best-3 where its ragged members ERROR DuckDB's
-      // list_cosine. The oracle states the exclusion with isfinite on
-      // the squared norm (training AND search); the ragged-pair guard
-      // (len =) mirrors the engine's NULL-sim-on-mismatch as before.
+      // non-finite embeddings are excluded by ivfTopK's NaN filters:
+      // ivfCentroids averages every member, so one NaN/Inf vector
+      // turns its label's centroid non-finite and its probe cosine
+      // NaN. NaN sorts FIRST under DESC in both engines, so without
+      // the `_csim` filter the poisoned label would enter best-3,
+      // where its ragged members ERROR DuckDB's list_cosine; the `sim`
+      // filter drops a non-finite member's NaN similarity from the
+      // result. The oracle states the exclusion with isfinite on the
+      // squared norm (training AND search). That is not the same
+      // exclusion: the oracle still ranks a label by its finite
+      // members where the engine drops the whole label, so the two
+      // agree only while no label in the running holds a non-finite
+      // vector. The ragged-pair guard (len =) mirrors the engine's
+      // NULL-sim-on-mismatch.
       Some("""WITH probe AS (SELECT CAST(embedding AS DOUBLE[]) AS p FROM embeddings WHERE vec_id = 0),
         | dims AS (SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS x,
         |                 generate_subscripts(embedding, 1) AS i FROM embeddings

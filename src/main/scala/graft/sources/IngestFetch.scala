@@ -38,24 +38,6 @@ trait EnvelopeTransport extends Serializable {
   def fetchPartition(requests: Iterator[FetchRequest]): Iterator[String]
 }
 
-/** Deterministic in-JVM stand-in for the POS API: answers every
-  * request with a well-formed envelope whose payload derives from the
-  * request coordinates. This is what the sandbox wires in where a
-  * deployment would wire an HTTP client; it also gives specs a stable
-  * fixture for the worklist → fetch → decode path.
-  */
-final class StubTransport extends EnvelopeTransport {
-  override def fetchPartition(requests: Iterator[FetchRequest]): Iterator[String] =
-    requests.map { r =>
-      val day = r.date.toEpochDay
-      // one record per request, id/k derived from the coordinates;
-      // every 50th store answers with a non-OK code like the real
-      // API's error envelopes (load_sales_data.py:97-99 gate)
-      val code = if (r.storeId % 50 == 0) "9999" else "0000"
-      s"""{"ret_code":"$code","data":[{"id":${r.storeId * 100000 + day},"k":${day % 7}}]}"""
-    }
-}
-
 /** The real wire transport: one HTTP client per PARTITION (pooled
   * connections — the executor-side analog of the reference's per-run
   * `requests` session), one POST per work unit with the reference's
@@ -172,33 +154,15 @@ object HttpTransport {
 
 object IngestFetch {
   /** Drive the transport over a worklist (store_id LONG, d DATE — the
-    * [[WorklistSource]] schema): one raw envelope string per work
-    * unit, fetched partition-parallel on the executors. The output is
-    * a one-column `payload` DataFrame shaped exactly for
-    * `RelationalOps.decodeEnvelope` — the full reference ingest chain
-    * is then worklist → fetchEnvelopes → decodeEnvelope, with the
-    * wire call swappable behind [[EnvelopeTransport]].
-    */
-  def fetchEnvelopes(worklist: DataFrame, transport: EnvelopeTransport): DataFrame = {
-    val spark = worklist.sparkSession
-    import spark.implicits._
-    worklist.select(col("store_id"), col("d"))
-      .as[(Long, java.sql.Date)]
-      .mapPartitions { it =>
-        transport.fetchPartition(
-          it.map { case (s, dt) => FetchRequest(s, dt.toLocalDate) })
-      }
-      .toDF("payload")
-  }
-
-  /** Coordinate-preserving fetch: one row per work unit —
-    * (store_id, d, payload). The reference stamps every decoded record
-    * with the LOOP date, not the API's echo (load_sales_data.py:106
-    * overrides the record's sale_date with the iteration date), which
-    * requires the request coordinates to survive next to the response
-    * envelope; this is the fetch the nightly composition
-    * ([[graft.pipeline.NightlyRun]]) uses. Same transport seam and
-    * partition lifecycle as [[fetchEnvelopes]]. The zip is lazy: a
+    * [[WorklistSource]] schema), fetched partition-parallel on the
+    * executors: one row per work unit — (store_id, d, payload), where
+    * `payload` is the raw envelope string shaped for
+    * `RelationalOps.decodeEnvelope`. The request coordinates survive
+    * next to the response because the reference stamps every decoded
+    * record with the LOOP date, not the API's echo
+    * (load_sales_data.py:106 overrides the record's sale_date with the
+    * iteration date); this is the fetch the nightly composition
+    * ([[graft.pipeline.NightlyRun]]) uses. The zip is lazy: a
     * transport that yields one envelope per request as it goes keeps
     * the duplicate-iterator gap at O(1); a transport that drains its
     * request iterator before answering buffers one partition's

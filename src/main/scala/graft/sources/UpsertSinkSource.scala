@@ -66,8 +66,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * store as driver-memory-bound at scale; this is the promised
   * file-backed replacement — same two-phase protocol, same semantics).
   * At 100 TB the same design holds with buckets ∝ data and a
-  * compaction pass folding old segments (graft.sources.Compaction is
-  * that operator for file tables); the JDBC MERGE tier
+  * compaction pass folding old segments ([[UpsertSinkSource.compact]]
+  * is that pass); the JDBC MERGE tier
   * ([[JdbcUpsert]], q54) remains the real-DB path.
   */
 class UpsertSinkSource extends TableProvider {
@@ -312,9 +312,9 @@ object UpsertSinkSource {
     * →files→executor; the driver still only sees file names. Run it
     * when the chain grows (a nightly stream adds one segment per
     * batch; scan cost is O(segments) per bucket until folded) — the
-    * same duty cycle as parquet small-file compaction
-    * ([[Compaction]]), expressed through the sink's own protocol.
-    * Then [[vacuum]] reclaims the unreferenced files.
+    * duty cycle of parquet small-file compaction, expressed through
+    * the sink's own protocol. Then [[vacuum]] reclaims the
+    * unreferenced files.
     *
     * The whole read-fold-install sequence runs under the table's
     * commit lock: a concurrent append blocks at its own

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructType}
   * (`{s_code, sale_date}` bodies, envelope responses — the reference's
   * requests.post boundary, load_sales_data.py:84-99), and
   * [[HttpTransport]] drives it from executor threads via
-  * `IngestFetch.fetchEnvelopes`. Round-6 VERDICT: only the stub
+  * `IngestFetch.fetchEnvelopesWithCoords`. Round-6 VERDICT: only the stub
   * transport was ever exercised; this closes that gap with zero
   * external network.
   */
@@ -62,11 +62,11 @@ class IngestSpec extends SparkSpec {
     val hits = new AtomicInteger(0)
     withPosServer(hits) { endpoint =>
       val wl = worklist(120, "2024-03-01", "2024-03-02", 5)
-      val viaHttp = IngestFetch.fetchEnvelopes(wl, new HttpTransport(endpoint))
-        .as[String].collect().sorted.toSeq
+      val viaHttp = IngestFetch.fetchEnvelopesWithCoords(wl, new HttpTransport(endpoint))
+        .as[(Long, java.sql.Date, String)].collect().sortBy(_._3).toSeq
       assert(hits.get() === 240, "exactly one POST per store×day work unit")
-      val viaStub = IngestFetch.fetchEnvelopes(wl, new StubTransport)
-        .as[String].collect().sorted.toSeq
+      val viaStub = IngestFetch.fetchEnvelopesWithCoords(wl, new StubTransport)
+        .as[(Long, java.sql.Date, String)].collect().sortBy(_._3).toSeq
       assert(viaHttp === viaStub,
         "wire transport must be invisible to everything downstream")
     }
@@ -85,9 +85,9 @@ class IngestSpec extends SparkSpec {
     server.start()
     try {
       val endpoint = s"http://127.0.0.1:${server.getAddress.getPort}/pos"
-      val raw = IngestFetch.fetchEnvelopes(
+      val raw = IngestFetch.fetchEnvelopesWithCoords(
         worklist(4, "2024-03-01", "2024-03-01", 2), new HttpTransport(endpoint))
-        .as[String].collect().toSeq
+        .select("payload").as[String].collect().toSeq
       assert(raw.size === 4 && raw.forall(_.contains("\"9999\"")),
         "transport must hand the error envelope to the decode layer, not swallow or throw")
     } finally server.stop(0)
@@ -117,10 +117,10 @@ class IngestSpec extends SparkSpec {
     server.start()
     try {
       val endpoint = s"http://127.0.0.1:${server.getAddress.getPort}/pos"
-      val raw = IngestFetch.fetchEnvelopes(
+      val raw = IngestFetch.fetchEnvelopesWithCoords(
         worklist(4, "2024-03-01", "2024-03-01", 1), // ONE partition holds all units
         new HttpTransport(endpoint, readTimeoutMs = 5000))
-        .as[String].collect().toSeq
+        .select("payload").as[String].collect().toSeq
       assert(hits.get() === 4, "each unit fetched exactly once — no partition-wide retry")
       assert(raw.size === 4, "the torn unit must not erase its partition")
       val quarantined = raw.filter(_.contains(s""""ret_code":"${graft.sources.HttpTransport.UnitErrorCode}""""))
@@ -133,7 +133,7 @@ class IngestSpec extends SparkSpec {
         .add("data", ArrayType(new StructType()
           .add("id", LongType).add("k", LongType)))
       assert(RelationalOps.decodeEnvelope(
-        IngestFetch.fetchEnvelopes(
+        IngestFetch.fetchEnvelopesWithCoords(
           worklist(4, "2024-03-01", "2024-03-01", 1),
           new HttpTransport(endpoint, readTimeoutMs = 5000)),
         "payload", schema).count() === 3L)
@@ -193,10 +193,10 @@ class IngestSpec extends SparkSpec {
       val endpoint = s"http://127.0.0.1:${server.getAddress.getPort}/pos"
       val n = graft.sources.HttpTransport.MaxConsecutiveUnitFaults + 8
       val ex = intercept[Exception] {
-        IngestFetch.fetchEnvelopes(
+        IngestFetch.fetchEnvelopesWithCoords(
           worklist(n, "2024-03-01", "2024-03-01", 1),
           new HttpTransport(endpoint, readTimeoutMs = 5000))
-          .as[String].collect()
+          .select("payload").as[String].collect()
       }
       assert(ex != null)
     } finally server.stop(0)
@@ -206,10 +206,10 @@ class IngestSpec extends SparkSpec {
     // port 1 on loopback: nothing listens; connect must raise and the
     // partition task must fail rather than emit partial results
     val ex = intercept[Exception] {
-      IngestFetch.fetchEnvelopes(
+      IngestFetch.fetchEnvelopesWithCoords(
         worklist(2, "2024-03-01", "2024-03-01", 1),
         new HttpTransport("http://127.0.0.1:1/pos", connectTimeoutMs = 500))
-        .as[String].collect()
+        .select("payload").as[String].collect()
     }
     assert(ex != null)
   }
@@ -217,7 +217,7 @@ class IngestSpec extends SparkSpec {
   test("full reference ingest chain over the wire: worklist → POST → decodeEnvelope gate") {
     val hits = new AtomicInteger(0)
     withPosServer(hits) { endpoint =>
-      val raw = IngestFetch.fetchEnvelopes(
+      val raw = IngestFetch.fetchEnvelopesWithCoords(
         worklist(120, "2024-03-01", "2024-03-02", 5), new HttpTransport(endpoint))
       val schema = new StructType()
         .add("ret_code", StringType)

@@ -5,16 +5,15 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** Shared FIFO-settled Spark-job counter for tests (r20 ADVICE item 4:
-  * three verbatim copies had grown across LazyRegistrySpec,
-  * NightlyRunSpec and DevNightlySoak — and the copied settle() returned
-  * as soon as ANY job-start event landed after its mark, so a BODY
-  * job's event still in flight on the listener bus could satisfy the
+/** Shared FIFO-settled Spark-job counter for tests (LazyRegistrySpec
+  * and NightlyRunSpec, its soak case included). A settle that returned
+  * as soon as ANY job-start event landed after its mark would let a
+  * BODY job's event still in flight on the listener bus satisfy the
   * wait before the sentinel's own event was counted, undercounting one
   * window and overcounting the next. This settle waits for the
   * SENTINEL'S OWN event, identified by a unique job-group tag: the
   * listener bus delivers events in order, so once the sentinel's start
-  * event has arrived, every job started before it has been counted.)
+  * event has arrived, every job started before it has been counted.
   */
 final class JobCounter(sc: SparkContext) extends AutoCloseable {
   private val jobStarts = new AtomicInteger(0)

@@ -26,7 +26,11 @@ import graft.sources.{EnvelopeTransport, FetchRequest, StubTransport}
   *     the whole chain), and every job belongs to a SQL execution;
   *   - only incoming winners are enriched: a standing winner keeps the
   *     region it was stored with, and a duplicate dim key never fans
-  *     out mart rows.
+  *     out mart rows;
+  *   - over a month of nights (the soak case) nothing accumulates: job
+  *     counts stay flat as the mart ages, no staging or artifact
+  *     residue is left behind, and the mart equals a closed-form
+  *     oracle.
   */
 class NightlyRunSpec extends SparkSpec {
   import spark.implicits._
@@ -43,15 +47,19 @@ class NightlyRunSpec extends SparkSpec {
         java.time.LocalDate.parse(hi).toEpochDay
     } yield (s * 100000 + day, s, day % 7)
 
-  /** A later re-send of the same slice with REVISED measures — the
-    * reference's nightly re-extraction window, where the API returns
-    * corrected figures and the upsert must overwrite (latest wins). */
-  private final class RevisedTransport extends EnvelopeTransport {
+  /** A later re-send with REVISED measures — the reference's nightly
+    * re-extraction window, where the API returns corrected figures
+    * and the upsert must overwrite (latest wins). Answers
+    * StubTransport's envelopes with k = epochDay % 7 + revision(date),
+    * so revision 0 is the stub's own figure. */
+  private final class RevisedTransport(revision: java.time.LocalDate => Long)
+      extends EnvelopeTransport {
     override def fetchPartition(rs: Iterator[FetchRequest]): Iterator[String] =
       rs.map { r =>
         val day = r.date.toEpochDay
         val code = if (r.storeId % 50 == 0) "9999" else "0000"
-        s"""{"ret_code":"$code","data":[{"id":${r.storeId * 100000 + day},"k":${day % 7 + 10}}]}"""
+        val k = day % 7 + revision(r.date)
+        s"""{"ret_code":"$code","data":[{"id":${r.storeId * 100000 + day},"k":$k}]}"""
       }
   }
 
@@ -199,7 +207,7 @@ class NightlyRunSpec extends SparkSpec {
       val (r3, jobs3) = countJobs {
         NightlyRun.run(spark, martDir, stores = 120,
           lo = "2024-03-03", hi = "2024-03-04",
-          transport = new RevisedTransport, storeDim = dim)
+          transport = new RevisedTransport(_ => 10L), storeDim = dim)
       }
       assert(r3.decoded === expB.size.toLong && r3.gatePassed)
       // merge saw standing ∪ incoming, collapsed to one row per key
@@ -229,7 +237,7 @@ class NightlyRunSpec extends SparkSpec {
       val (r4, jobs4) = countJobs {
         NightlyRun.run(spark, martDir, stores = 120,
           lo = "2024-03-03", hi = "2024-03-04",
-          transport = new RevisedTransport, storeDim = dim)
+          transport = new RevisedTransport(_ => 10L), storeDim = dim)
       }
       assert(r4.gatePassed && r4.merged === expB.size.toLong)
       assert(spark.read.parquet(martDir).count() ===
@@ -299,10 +307,84 @@ class NightlyRunSpec extends SparkSpec {
       val jc = new JobCounter(spark.sparkContext)
       val (r, side) = try jc.outsideSql {
         NightlyRun.run(spark, martDir, stores = 60, lo = lo, hi = hi,
-          transport = new RevisedTransport, storeDim = dim)
+          transport = new RevisedTransport(_ => 10L), storeDim = dim)
       } finally jc.close()
       assert(r.gatePassed)
       assert(side.isEmpty, s"jobs without spark.sql.execution.id: $side")
     } finally rmMart(martDir)
+  }
+
+  test("soak: 30 nights over a re-extraction window keep the gate, flat job counts, no residue, the oracle mart") {
+    // the reference's production envelope is a nightly cron over a
+    // trailing window (load_sales_data.py:146-164) that runs for
+    // months; its failure modes are cumulative, so four ticks cannot
+    // see them: job counts creeping with mart age (a full-mart
+    // listing), staging or artifact residue piling up, a merge bug
+    // that corrupts a date only once it has been revised AND aged
+    // past the slice window. Night n fetches [date(n-1), date(n)]:
+    // date n is new, date n-1 is re-fetched with revised figures
+    // k = epochDay % 7 + 100·(n − i) for date i, so every date ends at
+    // its night-(i+1) revision (+100) except the newest (+0).
+    val (nights, stores, gradeEvery) = (30, 200L, 5)
+    val d0 = java.time.LocalDate.parse("2024-07-01")
+    val martDir = Files.createTempDirectory("graft_soak_mart_").toString
+    val dim = Seq((1L, "north"), (2L, "south"), (3L, "north"))
+      .toDF("store_id", "region_nm")
+    // graft-family stage/trash entries in the shared tmp root (the
+    // chaos_restart scope) must not grow across the soak
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def residues(): Set[String] =
+      Option(tmpRoot.list()).getOrElse(Array.empty).toSet
+        .filter(n => n.startsWith("graft_") &&
+          (n.contains(".stage.") || n.contains(".trash.")))
+    val residues0 = residues()
+    // the mart after `night`, in closed form: (id, store_id, sale_d, k)
+    def oracle(night: Int): Set[(Long, Long, String, Long)] =
+      (for {
+        i <- 0 to night
+        s <- 0L until stores
+        if s % 50 != 0
+      } yield {
+        val date = d0.plusDays(i.toLong)
+        val day = date.toEpochDay
+        (s * 100000 + day, s, date.toString, day % 7 + 100L * (math.min(i + 1, night) - i))
+      }).toSet
+    val jc = new JobCounter(spark.sparkContext)
+    try {
+      val jobs = (1 to nights).map { n =>
+        val revision: java.time.LocalDate => Long =
+          d => 100L * (n - java.time.temporal.ChronoUnit.DAYS.between(d0, d))
+        val (rpt, j) = jc.counted {
+          NightlyRun.run(spark, martDir, stores,
+            d0.plusDays(n - 1L).toString, d0.plusDays(n.toLong).toString,
+            new RevisedTransport(revision), dim)
+        }
+        assert(rpt.gatePassed, s"night $n: gate failed ${rpt.gate.filterNot(_.passed)}")
+        val grown = residues() -- residues0
+        assert(grown.isEmpty, s"night $n: residue growth $grown")
+        assert(!new java.io.File(martDir, "_staging").exists(),
+          s"night $n: _staging survived the commit")
+        if (n % gradeEvery == 0 || n == nights) {
+          val got = spark.read.parquet(martDir)
+            .select($"id", $"store_id", $"sale_d".cast("string"), $"k")
+            .as[(Long, Long, String, Long)].collect().toSet
+          val exp = oracle(n)
+          assert(got === exp, s"night $n: mart diverged from the oracle " +
+            s"(got ${got.size} rows, expected ${exp.size}; " +
+            s"missing ${(exp -- got).take(3)}, extra ${(got -- exp).take(3)})")
+        }
+        n -> j
+      }
+      // nights >= 3 share one slice shape (one standing partition plus
+      // one new date) over a mart aging from 3 to 30 partitions: any
+      // drift means the tick has started paying for mart age
+      val steady = jobs.filter(_._1 >= 3)
+      assert(steady.map(_._2).distinct.size === 1,
+        "steady-night job counts drifted with mart age: " +
+          steady.map { case (n, j) => s"n$n=$j" }.mkString(", "))
+    } finally {
+      jc.close()
+      rmMart(martDir)
+    }
   }
 }

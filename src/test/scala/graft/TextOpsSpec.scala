@@ -79,7 +79,7 @@ class TextOpsSpec extends SparkSpec {
   test("minhashSignatures: deterministic and partition-count independent") {
     val d = docs(1L -> "w1 w2 w3 w4 w5 w6", 2L -> "z1 z2 z3 z4 z5")
       .select(col("doc_id"),
-        TextOps.shingleHashes(TextOps.shingles(TextOps.tokens(col("text")), 3)).as("hs"))
+        TextOps.ngramHashes64(TextOps.tokens(col("text")), 3).as("hs"))
     def sigs(parts: Int): Map[Long, Seq[Long]] =
       TextOps.minhashSignatures(d.repartition(parts), "doc_id", "hs", 8)
         .as[(Long, Seq[Long])].collect().toMap
@@ -239,10 +239,12 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("LSH banding pipeline: recall 1.0 vs exhaustive ground truth on the real corpus") {
-    val sh = corpusWithNearDups.select(col("doc_id"),
+    val corpus = corpusWithNearDups
+    val sh = corpus.select(col("doc_id"),
       TextOps.shingles(TextOps.tokens(col("text")), 3).as("sh"))
     val sig = TextOps.minhashSignatures(
-      sh.select(col("doc_id"), TextOps.shingleHashes(col("sh")).as("hs")),
+      corpus.select(col("doc_id"),
+        TextOps.ngramHashes64(TextOps.tokens(col("text")), 3).as("hs")),
       "doc_id", "hs", 32)
     val cands = TextOps.lshCandidates(
       TextOps.lshBands(sig, "doc_id", "sig", 16, 2), "doc_id",

@@ -4,12 +4,12 @@ import graft.ops.TextOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Canonical-equivalence contracts (round 17 unicode probe,
-  * tools/unicode_probe.py). The probe planted NFC / NFD spellings of
-  * the SAME visual string plus zero-width weaves into every
-  * string-bearing table and ran all 113 queries through the unchanged
-  * DuckDB gate: ALL GREEN on the first run, zero divergences — both
-  * engines byte-compare. That run is evidence the engines AGREE; this
+/** Canonical-equivalence contracts (the edge sweep's `canon`
+  * variant, tools/edge_fixtures.py). The variant plants NFC / NFD
+  * spellings of the SAME visual string plus zero-width weaves into
+  * every string-bearing table and runs all 113 queries through the
+  * unchanged DuckDB gate: zero divergences — both engines
+  * byte-compare. That run is evidence the engines AGREE; this
   * spec pins WHAT they agree on, so a future "helpful" normalization
   * (an NFC fold in a tokenizer, a trim that eats ZWSP) breaks a named
   * contract instead of silently flipping dedup/join cardinalities

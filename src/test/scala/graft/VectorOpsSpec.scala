@@ -164,39 +164,6 @@ class VectorOpsSpec extends SparkSpec {
     }
   }
 
-  test("kmeansCentroids: Lloyd converges to well-separated cluster means; assignment consistent") {
-    val rnd = new scala.util.Random(11)
-    // three tight clusters around (10,0), (0,10), (-10,-10)
-    val centers = Seq(Seq(10.0, 0.0), Seq(0.0, 10.0), Seq(-10.0, -10.0))
-    val pts = (0 until 90).map { i =>
-      val c = centers(i % 3)
-      (i.toLong, Seq(c(0) + rnd.nextGaussian() * 0.1,
-        c(1) + rnd.nextGaussian() * 0.1), 0)
-    }
-    val d = vecs(pts: _*)
-    val cents = VectorOps.kmeansCentroids(d, "vec_id", "embedding", 3, 10)
-      .as[(Int, Seq[Double])].collect().toMap
-    assert(cents.size === 3)
-    // every true center has a learned centroid within 0.1
-    centers.foreach { c =>
-      val best = cents.values.map(l =>
-        math.hypot(l(0) - c(0), l(1) - c(1))).min
-      assert(best < 0.1, s"no learned centroid near $c: $cents")
-    }
-    // nearestCentroid assigns each point to the centroid nearest its
-    // true cluster center (separation >> spread)
-    val centLit = typedLit(cents.toSeq.sortBy(_._1).map(_._2))
-    val assigns = d.select(col("vec_id"),
-      VectorOps.nearestCentroid(
-        VectorOps.toDouble(col("embedding")), centLit, 3).as("cell"))
-      .as[(Long, Int)].collect().toMap
-    // all members of one true cluster share one assigned cell
-    (0 until 3).foreach { m =>
-      val cells = pts.filter(_._1 % 3 == m).map(p => assigns(p._1)).distinct
-      assert(cells.size === 1, s"cluster $m split across cells $cells")
-    }
-  }
-
   test("toDouble widens float arrays exactly") {
     val d = Seq(Seq(1.5f, -2.25f)).toDF("v")
     val out = d.select(VectorOps.toDouble(col("v")).as("d"))

@@ -59,7 +59,7 @@ class WorklistSourceSpec extends SparkSpec {
     // 120 stores × 2 days through the full reference ingest chain with
     // the stub transport standing in for requests.post
     val worklist = load(120, "2024-03-01", "2024-03-02", 5)
-    val raw = IngestFetch.fetchEnvelopes(worklist, new StubTransport)
+    val raw = IngestFetch.fetchEnvelopesWithCoords(worklist, new StubTransport)
     assert(raw.count() === 240L, "one envelope per work unit")
     val schema = new StructType()
       .add("ret_code", StringType)

@@ -76,10 +76,9 @@ def run_verify(sf, outdir, kill_after=None):
     """Run Verify via spark_java (the out-of-sbt launcher). Returns
     (returncode_or_None_if_killed, last_stdout_line)."""
     shutil.rmtree(outdir, ignore_errors=True)
-    env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     p = subprocess.Popen(
         ["bash", "tools/spark_java.sh", "graft.Verify", sf, outdir],
-        cwd=ROOT, env=env, stdout=subprocess.PIPE,
+        cwd=ROOT, stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL, text=True,
         # the JVM must die WITH the wrapper shell: SIGKILL to the
         # shell alone would orphan it

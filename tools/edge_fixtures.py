@@ -60,6 +60,22 @@ Variants (each a full 10-table dir):
             hard-error on non-JSON input, the CSV ''-vs-NULL lossy
             round trip, and the zero-byte export invisible to
             Spark's binaryFile reader
+  orphans — fact tables (orders/lineitem/events) carry a second row
+            with every key/FK bumped +77000: its own PK stays unique,
+            every FK dangles (late or trimmed dims). Inner joins must
+            drop it, left joins null-fill it, anti/exists probes
+            classify it, and no "derive the dim from the facts"
+            pruning may drop data the oracle still sees
+  liar    — internally INCONSISTENT rows beside the full one: derived
+            columns that contradict their sources (LIAR, +70000) and
+            domain-violating measures (OUTLAW, +71000) — a query that
+            derives a value from `text` on one side of a gate but
+            trusts `n_chars` on the other diverges here
+  canon   — canonical EQUIVALENCE: the same visual strings in NFC
+            (+62000) and NFD (+63000), plus zero-width weaves and a
+            defective leading combining mark (+64000), in every
+            string-bearing table; both engines byte-compare, pinned
+            in UnicodeEquivalenceSpec
 
 Usage: python3 tools/edge_fixtures.py <out_root>
 Writes <out_root>/{empty,onerow,nulls,nullkeys,...}/<table>.parquet
@@ -342,33 +358,6 @@ def zerowidth_row(full):
             out[k] = ("\u0301" + v + "\u200b z\u200dw\u200cj")
             changed = True
     return out if changed else None
-
-
-def bigdoc_rows(full):
-    """BOUNDED big documents (r17, the megadoc follow-through): the
-    megadoc probe's 200k-token rows prove engine-side per-row safety
-    but exclude the 8 all-pairs similarity oracles as intractable in
-    DuckDB; at ~15k tokens (~10x the real fixtures' largest docs)
-    those oracles still finish, so the LSH/PPJoin family runs UNDER
-    the oracle at a document size the graded sweep never reaches.
-    Three planted documents (+33000..+35000):
-      - cyclic: 15k tokens over a 50-word vocabulary (worst case for
-        repetition/shingle dedup: every shingle near-duplicates)
-      - alldist: 15k all-distinct tokens (worst case for any
-        per-distinct-token pass, the q104 shape)
-      - longtok: one single 10kB token (tokenizer/shingle boundary)
-    Only the documents table changes. None for every other table."""
-    if "text" not in full:
-        return None
-    cyc = " ".join(f"w{i % 50}" for i in range(15_000))
-    dis = " ".join(f"u{i}" for i in range(15_000))
-    lt = "x" * 10_000
-    out = []
-    for delta, txt in ((33000, cyc), (34000, dis), (35000, lt)):
-        r = bump_keys(full, delta)
-        r.update(text=txt, n_chars=len(txt))
-        out.append(r)
-    return out
 
 
 def dup_fact_row(full):
@@ -667,13 +656,37 @@ def write_skew(outdir, base_sf):
     append_rows(outdir, base_sf, skew_rows(base_sf))
 
 
+# `liar` variant: derived/metadata columns contradict their sources
+# (n_chars=999999 on a 43-char text, label flipped on an unchanged
+# embedding), ids +70000 ...
+LIAR = {
+    "documents": {"n_chars": 999999},
+    "embeddings": {"label": 7},
+}
+
+# ... and domain-violating measures (negative quantity/price with
+# positive extendedprice, discount 2.0, negative value), ids +71000
+OUTLAW = {
+    "lineitem": {"l_quantity": -5.0, "l_extendedprice": 100.0,
+                 "l_discount": 2.0, "l_tax": -0.5},
+    "orders": {"o_totalprice": -42.0},
+    "events": {"value": -1e12},
+    "customer": {"c_acctbal": -0.0},
+    "part": {"p_size": -1, "p_retailprice": -9.99},
+}
+
+# `orphans` variant: the fact tables whose second row's FKs dangle
+ORPHANED = frozenset(["orders", "lineitem", "events"])
+
+
 def main(root, base_sf="/root/testdata/sf0.001"):
     import os
     write_mixed(os.path.join(root, "mixed"), base_sf)
     write_skew(os.path.join(root, "skew"), base_sf)
     for variant in ("empty", "onerow", "nulls", "nullkeys", "nulltime",
                     "jsonhostile", "dupdims", "dupfacts", "emptystr",
-                    "extremes", "unicode", "naninf", "whitespace"):
+                    "extremes", "unicode", "naninf", "whitespace",
+                    "orphans", "liar", "canon"):
         d = os.path.join(root, variant)
         os.makedirs(d, exist_ok=True)
         for name in SCHEMAS:
@@ -708,6 +721,20 @@ def main(root, base_sf="/root/testdata/sf0.001"):
             elif variant == "whitespace":
                 rows = [full] + [r for r in (spaces_row(full),
                                              padded_row(full))
+                                 if r is not None]
+            elif variant == "orphans":
+                rows = [full] + ([bump_keys(full, 77000)]
+                                 if name in ORPHANED else [])
+            elif variant == "liar":
+                rows = [full]
+                for delta, over in ((70000, LIAR), (71000, OUTLAW)):
+                    if name in over:
+                        r = bump_keys(full, delta)
+                        r.update(over[name])
+                        rows.append(r)
+            elif variant == "canon":
+                rows = [full] + [r for r in (nfc_row(full), nfd_row(full),
+                                             zerowidth_row(full))
                                  if r is not None]
             elif variant == "emptystr":
                 e = emptystr_row(full)

@@ -49,10 +49,10 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = sys.argv[1] if len(sys.argv) > 1 else "/tmp/edge_sweep"
 VARIANTS = ["mixed", "skew", "empty", "onerow", "nulls", "nullkeys",
             "nulltime", "jsonhostile", "dupdims", "dupfacts", "emptystr",
-            "extremes", "unicode", "naninf", "whitespace"]
+            "extremes", "unicode", "naninf", "whitespace", "orphans",
+            "liar", "canon"]
 # The sweep's EXIT CONTRACT (r15, VERDICT item 6): the standing green
-# claim is "15 variants × 113 queries" (nulltime and jsonhostile
-# joined in r18), so the variant set itself is
+# claim is "18 variants × 113 queries", so the variant set itself is
 # part of the contract — a future edit that drops a variant from
 # VARIANTS, or a fixture-generator change that silently stops writing
 # one, must fail the sweep loudly instead of shrinking the claim.
@@ -61,7 +61,7 @@ VARIANTS = ["mixed", "skew", "empty", "onerow", "nulls", "nullkeys",
 CONTRACT_VARIANTS = frozenset(
     ["mixed", "skew", "empty", "onerow", "nulls", "nullkeys", "nulltime",
      "jsonhostile", "dupdims", "dupfacts", "emptystr", "extremes",
-     "unicode", "naninf", "whitespace"])
+     "unicode", "naninf", "whitespace", "orphans", "liar", "canon"])
 CONTRACT_TABLES = ["region", "nation", "customer", "supplier", "part",
                    "orders", "lineitem", "events", "documents", "embeddings"]
 Q72_DIR = "/tmp/graft_q72_files"
@@ -106,8 +106,7 @@ def main():
         outdir = os.path.join(WORK, "out", v)
         shutil.rmtree(outdir, ignore_errors=True)
         shutil.rmtree(Q72_DIR, ignore_errors=True)
-        env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "8"))
-        r = run(["bash", "tools/spark_java.sh", "graft.Verify", vdir, outdir], env=env)
+        r = run(["bash", "tools/spark_java.sh", "graft.Verify", vdir, outdir])
         sys.stdout.write("".join(
             ln + "\n" for ln in (r.stdout + r.stderr).splitlines()
             if ln.startswith("[verify]")))
