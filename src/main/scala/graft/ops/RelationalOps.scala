@@ -33,10 +33,17 @@ object RelationalOps {
     *
     * Apply ONLY where the pre-exchange per-row work is genuinely
     * expensive (measured, OPTIMIZATION_r21.md): an interpreted expression
-    * chain (zip_with n-gram hashing) or a broadcast nested-loop probe.
+    * chain (zip_with n-gram hashing), a broadcast nested-loop probe, or
+    * a broadcast hash probe whose per-pair kernel is the cost (q84:
+    * bounded levenshtein per candidate pair; the compact probe rows
+    * spread and both join sides reuse the one exchange — median op
+    * 0.77 → 0.43 s in perfbench's sf0.1 `suite`, 4 cores).
     * Codegen'd explode+aggregate pipelines and plain partial
     * aggregations measured FASTER without it — the exchange of raw
-    * rows costs more than the single-task compute it parallelizes.
+    * rows costs more than the single-task compute it parallelizes
+    * (q98's grouping-sets aggregate, same suite: 3 → 7 tasks, executor
+    * time 0.21–0.33 → 0.51 s, no faster; aggregating below its Expand
+    * is what pays there).
     *
     * The spread key is a HASH partitioning on a high-cardinality
     * deterministic key (the row's id), not round-robin: round-robin

@@ -136,9 +136,21 @@ object VectorOps {
     * recomputing it per query would nullify IVF's pruning win (the
     * round-3 q35 defect: the quantizer build was inlined in the search
     * plan, making every "pruned" query a full scan).
+    *
+    * A member whose squared norm is not finite (a NaN or ±Inf
+    * component) carries no direction and is left out of its cell's
+    * mean; averaging it in would make the whole cell's centroid NaN
+    * and drop every finite member of that cell from the search. Null
+    * components add nothing to the norm, as they add nothing to the
+    * per-position mean.
     */
   def ivfCentroids(vecs: DataFrame, vecCol: String, labelCol: String): DataFrame =
-    vecs.select(col(labelCol), posexplode(toDouble(col(vecCol))))
+    vecs.select(col(labelCol), toDouble(col(vecCol)).as("_v"))
+      // `<= MaxValue` is false for NaN and +Inf under Spark's NaN
+      // ordering (cosineNearDupPairs' finite-norm guard)
+      .filter(aggregate(col("_v"), lit(0.0),
+        (acc, x) => acc + coalesce(x * x, lit(0.0))) <= lit(Double.MaxValue))
+      .select(col(labelCol), posexplode(col("_v")))
       .groupBy(col(labelCol), col("pos"))
       .agg(avg(col("col")).as("c"))
       .groupBy(col(labelCol))

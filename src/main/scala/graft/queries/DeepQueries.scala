@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Graded, Tables}
+import graft.ops.RelationalOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -239,12 +240,18 @@ object DeepQueries {
     // surface is restricted to ASCII where both agree (the engine op
     // itself is charset-clean). The 3-arg threshold form prunes the DP
     // early — a row over the bound costs O(threshold·len), not
-    // O(len²).
+    // O(len²). The verify's cost is candidate pairs, not bytes: a
+    // corpus that scans as fewer tasks than cores spreads its compact
+    // (doc_id, bkt, pfx) rows by doc_id first, so the broadcast probe
+    // runs on every core (both join sides reuse that one exchange);
+    // a many-split scan keeps its plan.
     Graded("q84_editdist_neardup", (s, d) => {
-      val b = Tables.documents(s, d).filter(col("lang") === "en")
-        .select(col("doc_id"),
-          floor(col("n_chars") / lit(16.0)).cast("long").as("bkt"),
-          substring(col("text"), 1, 48).as("pfx"))
+      val b = RelationalOps.rebalanceScan(
+        Tables.documents(s, d).filter(col("lang") === "en")
+          .select(col("doc_id"),
+            floor(col("n_chars") / lit(16.0)).cast("long").as("bkt"),
+            substring(col("text"), 1, 48).as("pfx")),
+        col("doc_id"))
       val lhs = b.select(col("bkt"), col("doc_id").as("id_a"), col("pfx").as("_pa"))
       val rhs = b.select(col("bkt").as("_bkt2"), col("doc_id").as("id_b"),
         col("pfx").as("_pb"))

@@ -498,7 +498,7 @@ object NorthQueries {
       // contains no full-corpus aggregation (PlanSpec-asserted) — at
       // 100 TB the query scans nprobe cells plus a |cells|-row
       // centroid table, nothing else.
-      val cpath = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_v2_" +
+      val cpath = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_v3_" +
         graft.Fixtures.tableFingerprint(d, "embeddings")
       // gate on the _SUCCESS marker, not bare directory existence: a
       // crashed prior write leaves a partial parquet dir that would
@@ -515,19 +515,15 @@ object NorthQueries {
         e.filter(col("vec_id") === 0L),
         "vec_id", "embedding", "label", 3, 10)
     },
-      // non-finite embeddings are excluded by ivfTopK's NaN filters:
-      // ivfCentroids averages every member, so one NaN/Inf vector
-      // turns its label's centroid non-finite and its probe cosine
-      // NaN. NaN sorts FIRST under DESC in both engines, so without
-      // the `_csim` filter the poisoned label would enter best-3,
-      // where its ragged members ERROR DuckDB's list_cosine; the `sim`
-      // filter drops a non-finite member's NaN similarity from the
-      // result. The oracle states the exclusion with isfinite on the
-      // squared norm (training AND search). That is not the same
-      // exclusion: the oracle still ranks a label by its finite
-      // members where the engine drops the whole label, so the two
-      // agree only while no label in the running holds a non-finite
-      // vector. The ragged-pair guard (len =) mirrors the engine's
+      // non-finite embeddings (squared norm not finite) are excluded
+      // the same way on both sides, in the centroid build AND in the
+      // search: ivfCentroids leaves them out of their label's mean, so
+      // a label is still ranked by its finite members, and ivfTopK's
+      // `sim` filter drops a non-finite member's NaN similarity from
+      // the result. The oracle states both with isfinite on the
+      // squared norm (`dims` and the final WHERE), so a label holding
+      // one non-finite vector ranks the same on both sides. The
+      // ragged-pair guard (len =) mirrors the engine's
       // NULL-sim-on-mismatch.
       Some("""WITH probe AS (SELECT CAST(embedding AS DOUBLE[]) AS p FROM embeddings WHERE vec_id = 0),
         | dims AS (SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS x,

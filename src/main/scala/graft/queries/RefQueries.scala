@@ -222,7 +222,8 @@ object RefQueries {
         col("p_brand"), col("p_type"), col("p_size"), col("p_retailprice"))
       val sink = graft.ops.AppScratch.path(s, "q19_refresh")
       snapshot.write.mode("overwrite").parquet(sink)
-      s.read.parquet(sink)
+      // read back under the writer's schema: no footer-inference job
+      s.read.schema(snapshot.schema).parquet(sink)
     },
       Some("SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice FROM part")),
 

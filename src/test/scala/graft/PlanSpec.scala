@@ -19,6 +19,17 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }
 
+  /** The operator tree of a formatted plan, one operator per line, top
+    * down (the block between the header and the per-node details). */
+  private def tree(p: String): Seq[String] =
+    p.linesIterator.dropWhile(!_.startsWith("== Physical Plan ==")).drop(1)
+      .takeWhile(_.trim.nonEmpty).toSeq
+
+  /** The first operator under the Expand that is not a Project. */
+  private def expandInput(p: String): String =
+    tree(p).dropWhile(!_.contains("Expand")).drop(1)
+      .find(!_.contains("Project")).getOrElse("")
+
   test("q01 scan: column pruning reaches the parquet reader (5 of 11 columns)") {
     val p = plan("q01_scan_project")
     val readSchema = p.linesIterator.find(_.contains("ReadSchema")).get
@@ -275,6 +286,15 @@ class PlanSpec extends SparkSpec {
     val p = plan("q84_editdist_neardup")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       "pair generation must join on the (length-band) block key")
+    // the one-split fixture spreads the compact probe rows by doc_id
+    // below the join, so the verify runs on every core
+    val ops = tree(p)
+    val join = ops.indexWhere(_.contains("BroadcastHashJoin"))
+    val spread = ops.indexWhere(l =>
+      l.contains("Exchange") && !l.contains("BroadcastExchange"), join)
+    assert(join >= 0 && spread > join, s"no exchange under the join:\n$p")
+    assert(p.contains("hashpartitioning(doc_id"),
+      s"the probe side must spread by doc_id:\n$p")
   }
 
   test("q83 heavy hitters: top-20 via TakeOrderedAndProject, no global sort") {
@@ -402,6 +422,18 @@ class PlanSpec extends SparkSpec {
     val scans = p.linesIterator.count(l =>
       l.contains("Location") && l.contains("orders.parquet"))
     assert(scans == 1, s"grouping sets must scan the fact once, got $scans")
+    assert(expandInput(p).contains("HashAggregate"),
+      s"the Expand must copy pre-aggregated groups, not fact rows:\n$p")
+  }
+
+  test("q39 rollup: one scan, one Expand over pre-aggregated groups") {
+    val p = plan("q39_rollup_sales")
+    assert(p.contains("Expand"), "rollup must plan as Expand")
+    val scans = p.linesIterator.count(l =>
+      l.contains("Location") && l.contains("lineitem.parquet"))
+    assert(scans == 1, s"rollup must scan the fact once, got $scans")
+    assert(expandInput(p).contains("HashAggregate"),
+      s"the Expand must copy pre-aggregated groups, not fact rows:\n$p")
   }
 
   test("q99 DPP: the fact scan's partition filter is a runtime dynamicpruning expression") {

@@ -273,6 +273,30 @@ class RelationalOpsSpec extends SparkSpec {
     assert(rebalanceScan(union, col("l_orderkey")) eq union)
   }
 
+  test("rebalanceScan spreads a filtered, projected one-split scan; a many-split scan keeps its plan") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    // q84's use: the compact (doc_id, pfx) rows of a filtered scan
+    def compact(s: org.apache.spark.sql.SparkSession) =
+      Tables.load(s, "/root/testdata/sf0.01", "documents")
+        .filter(col("lang") === "en")
+        .select(col("doc_id"), substring(col("text"), 1, 48).as("pfx"))
+    val want = spark.sparkContext.defaultParallelism
+    val one = compact(spark)
+    assert(estimatedScanSplits(one).contains(1L), "test premise: one split")
+    val spread = rebalanceScan(one, col("doc_id"))
+    val parts = spread.queryExecution.logical.collect {
+      case r: RepartitionByExpression => r.numPartitions
+    }
+    assert(parts === Seq(want), s"expected one hash spread to $want partitions")
+    // many splits (a small split size stands in for a large table)
+    Session.scoped(spark, "spark.sql.files.maxPartitionBytes" -> (8 * 1024).toString) { c =>
+      val many = compact(c)
+      val est = estimatedScanSplits(many).get
+      assert(est > want, s"test premise broken: estimate $est not > $want")
+      assert(rebalanceScan(many, col("doc_id")) eq many)
+    }
+  }
+
   test("scanScaledPartitions: floor at fixture scale, scan-tracking at volume (r22)") {
     val df = Tables.load(spark, "/root/testdata/sf0.01", "lineitem")
     // fixture parquet is one row group → estimate 1 → the historical

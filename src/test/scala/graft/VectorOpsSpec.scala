@@ -64,6 +64,23 @@ class VectorOpsSpec extends SparkSpec {
     assert(out === Seq(1L, 2L))
   }
 
+  test("ivfCentroids: a non-finite member is left out of its label's mean, not poisoning the label") {
+    val nan = Double.NaN
+    val d = vecs(
+      (1L, Seq(1.0, 0.0), 5), (2L, Seq(0.0, 2.0), 5),
+      (3L, Seq(nan, nan), 5), (4L, Seq(Double.PositiveInfinity, 1.0), 5),
+      (5L, Seq(0.0, 3.0), 6))
+    val cents = VectorOps.ivfCentroids(d, "embedding", "label")
+    val c = cents.as[(Int, Seq[Double])].collect().toMap
+    assert(c === Map(5 -> Seq(0.5, 1.0), 6 -> Seq(0.0, 3.0)))
+    // label 5 still ranks by its finite members: probe x-axis picks it
+    // (cosine 0.447 vs label 6's 0), and only finite members surface
+    val out = VectorOps.ivfTopK(d, cents, d.filter(col("vec_id") === 1L),
+      "vec_id", "embedding", "label", nprobe = 1, k = 10)
+      .select("vec_id").as[Long].collect().toSeq
+    assert(out === Seq(1L, 2L))
+  }
+
   test("native codegen'd dot/cosine ≡ HOF forms bit-for-bit, and SQL-addressable") {
     val rnd = new scala.util.Random(42)
     val d = (1 to 50).map { i =>
