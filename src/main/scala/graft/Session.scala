@@ -24,8 +24,7 @@ object Session {
     .config("spark.sql.shuffle.partitions", cpus.toString)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.warehouse.dir",
-      System.getProperty("java.io.tmpdir") + "/graft_warehouse")
+    .config("spark.sql.warehouse.dir", Scratch.shared("warehouse"))
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Spark's recursive-CTE ROW guard (1M rows TOTAL over all
     // iterations) is a notebook safety net, not a data bound: q105's

@@ -76,7 +76,7 @@ object SparkEntry {
       "responsible", "chain_no", Seq(1L, 2L, 3L), "직영")
 
     // 6. atomic date-partitioned refresh, then serve the re-read.
-    val sink = graft.ops.AppScratch.path(spark, "entry_mart")
+    val sink = Scratch.app(spark, "entry_mart")
     val mart = filled.withColumn("sale_month",
       date_format(col("sale_dy"), "yyyy-MM"))
     // co-partition by the partition column BEFORE the write (r21,

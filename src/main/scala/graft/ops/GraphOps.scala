@@ -53,7 +53,7 @@ object GraphOps {
     // as a side effect — a refactor accepting pre-materialized edges
     // would otherwise throw "Checkpoint directory has not been set"
     // on a fresh session (r14 review)
-    Materialize.ensureCheckpointDir(pairs.sparkSession.sparkContext)
+    Materialize.ensureCheckpointDir(pairs.sparkSession)
     // both orientations from ONE scan of `pairs` (explode, not a
     // self-union): pairs is typically the output of an expensive
     // near-dup join and a union would execute that lineage twice

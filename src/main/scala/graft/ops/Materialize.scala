@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.SparkContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Eager, fault-tolerant materialization of a multiply-consumed
   * intermediate — the engine-wide `localCheckpoint` replacement (r12).
@@ -26,24 +25,21 @@ import org.apache.spark.sql.DataFrame
   * consumer instead of re-encoded). On a cluster the checkpoint dir
   * points at durable shared storage, so unlike executor-local blocks
   * the materialization survives node loss; locally it defaults to a
-  * tmp dir that a JVM-exit hook removes (checkpoint files are not
-  * reference-tracked by default, and bench reps would otherwise
-  * accumulate one table per invocation on disk forever).
+  * per-application scratch dir removed at application end (checkpoint
+  * files are not reference-tracked by default, and bench reps would
+  * otherwise accumulate one table per invocation on disk forever).
   */
 object Materialize {
 
-  /** Set a default checkpoint dir (tmp-scoped, cleaned at JVM exit)
-    * if the session has none. A caller-provided dir is respected and
-    * never deleted. Shared by [[once]] and GraphOps' iterative loop.
+  /** Set a default checkpoint dir (graft.Scratch's per-application
+    * "checkpoint" path, swept at application end) if the context has
+    * none. A caller-provided dir is respected and never deleted.
+    * Shared by [[once]] and GraphOps' iterative loop.
     */
-  def ensureCheckpointDir(sc: SparkContext): Unit =
-    if (sc.getCheckpointDir.isEmpty) synchronized {
-      if (sc.getCheckpointDir.isEmpty) {
-        val dir = java.nio.file.Files.createTempDirectory("graft_checkpoint_")
-        sc.setCheckpointDir(dir.toString)
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try FsOps.rmTree(dir.toFile) catch { case _: Exception => () }))
-      }
+  def ensureCheckpointDir(s: SparkSession): Unit =
+    if (s.sparkContext.getCheckpointDir.isEmpty) synchronized {
+      if (s.sparkContext.getCheckpointDir.isEmpty)
+        s.sparkContext.setCheckpointDir(graft.Scratch.app(s, "checkpoint"))
     }
 
   /** Materialize `df` eagerly and fault-tolerantly. `slot` names the
@@ -51,11 +47,11 @@ object Materialize {
     * a job, and that job carries `slot` as its description (restored
     * after, so the label doesn't bleed onto the caller's later jobs).
     * Each invocation writes a fresh checkpoint (files are bounded by
-    * the JVM-exit cleanup above).
+    * the application-end cleanup above).
     */
   def once(slot: String, df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    ensureCheckpointDir(sc)
+    ensureCheckpointDir(df.sparkSession)
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"graft.materialize: $slot")
     try df.checkpoint()

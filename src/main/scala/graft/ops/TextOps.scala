@@ -331,7 +331,7 @@ object TextOps {
   def prefixFilterCandidates(docShingles: DataFrame, idCol: String,
                              shCol: String, num: Int, den: Int): DataFrame = {
     // CALLER CONTRACT (r14 review): pass a MATERIALIZED docShingles
-    // (q37 does — Materialize.once("q37.sh", …)). The exploded
+    // (q37 does — Materialize.once("neardup.sh", …)). The exploded
     // inverted index below is consumed twice — inside the prefix-index
     // build and, re-derived, as the exact-overlap refinement's idxB —
     // so an unmaterialized shingle pipeline would run end-to-end

@@ -18,10 +18,6 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle.
   */
 object CurateQueries {
-  /** The SQL twin of SampleOps.bucket — one shared definition. */
-  private def bucketSql(key: String): String =
-    graft.ops.SampleOps.bucketSql(key)
-
   val graded: Seq[Graded] = Seq(
     // §2k — PII release gate: stable keyed pseudonym (sha2-256 +
     // pepper), partial mask of the display name, quasi-identifier
@@ -180,7 +176,7 @@ object CurateQueries {
       val comps = HardenQueries.neardupComponents(s, d)
       val docs = Tables.documents(s, d).select(col("doc_id"))
       val corpus = docs.unionByName(
-        docs.select((col("doc_id") + HardenQueries.DupOffset).as("doc_id")))
+        docs.select((col("doc_id") + NorthQueries.DupOffset).as("doc_id")))
       SampleOps.hashSplit(
         corpus.join(broadcast(comps), Seq("doc_id"), "left")
           .withColumn("split_key",
@@ -225,8 +221,8 @@ object CurateQueries {
          |  -- (r14 review; k = coalesce(component, doc_id) is non-null
          |  -- whenever doc_id is, so this only matters off-fixture)
          |  CASE WHEN k IS NULL THEN NULL
-         |       WHEN ${bucketSql("k")} < 80 THEN 'train'
-         |       WHEN ${bucketSql("k")} < 90 THEN 'val'
+         |       WHEN ${SampleOps.bucketSql("k")} < 80 THEN 'train'
+         |       WHEN ${SampleOps.bucketSql("k")} < 90 THEN 'val'
          |       ELSE 'test' END AS split
          |FROM keyed""".stripMargin)),
 
@@ -293,8 +289,8 @@ object CurateQueries {
     // Oracle = exhaustive delta×corpus Jaccard — an independent
     // derivation with no LSH anywhere.
     Graded("q93_incremental_neardup", (s, d) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_q93_idx_v1_" +
-        graft.Fixtures.tableFingerprint(d, "documents")
+      val base = graft.Scratch.shared(
+        "q93_idx_v1_" + graft.Fixtures.tableFingerprint(d, "documents"))
       val shP = s"$base/shingles"
       val bandP = s"$base/bands"
       def bands(x: DataFrame) = TextOps.lshBands(

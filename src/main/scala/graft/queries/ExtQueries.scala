@@ -1,9 +1,8 @@
 package graft.queries
 
 import graft.{Graded, Session, Tables}
-import graft.ops.{RelationalOps, TextOps}
+import graft.ops.RelationalOps
 import graft.ops.RelationalOps.sumMoney
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DecimalType, LongType, StringType, StructType}
@@ -20,8 +19,6 @@ object ExtQueries {
     * ONE definition (NorthQueries), not a verbatim copy guarded by a
     * comment: a recipe edit on one side would silently desynchronize
     * the other query's Spark corpus from its oracle. */
-  private def docsWithNearDups(s: SparkSession, d: String): DataFrame =
-    NorthQueries.docsWithNearDups(s, d)
   private val nearDupUnionDocs = NorthQueries.nearDupUnionDocs
 
   /** S1 envelope schema: {ret_code, data:[{id,k}]} —
@@ -38,21 +35,9 @@ object ExtQueries {
     // candidates (deterministic, provably complete at the threshold —
     // TextOps.prefixFilterCandidates) + exact verify. The
     // deterministic sibling of q29's MinHash-LSH: same output
-    // contract, guaranteed recall, index ~(1-t) of the shingles.
-    Graded("q37_ngram_jaccard_join", (s, d) => {
-      // candidates + verify on numeric 64-bit shingle hashes (longs,
-      // no n-gram strings — TextOps.ngramHashes64); the hash order
-      // serves as the prefix filter's global total order
-      // Materialize.once: sh feeds the prefix index AND both verify
-      // sides — the tokenize/shingle/hash pipeline runs once per
-      // invocation instead of 3× (the round-3 q37 hot spot), as an
-      // eager reliable checkpoint (localCheckpoint through r12).
-      val sh = graft.ops.Materialize.once("q37.sh",
-        docsWithNearDups(s, d).select(col("doc_id"),
-          TextOps.ngramHashes64(TextOps.tokens(col("text")), 3).as("sh")))
-      val cands = TextOps.prefixFilterCandidates(sh, "doc_id", "sh", 4, 5)
-      TextOps.jaccardVerify(cands, sh, "doc_id", "sh", 4, 5)
-    },
+    // contract, guaranteed recall, index ~(1-t) of the shingles. One
+    // definition with the q56/q89 pair artifact.
+    Graded("q37_ngram_jaccard_join", (s, d) => NorthQueries.nearDupJaccardPairs(s, d),
       // Exhaustive all-pairs ground truth (fixture-scale only) — q37's
       // prefix filtering must reproduce it EXACTLY (complete recall by
       // construction, unlike q29's probabilistic banding).
@@ -183,7 +168,7 @@ object ExtQueries {
     // is what makes q03's BETWEEN cheap at 100 TB. Unique sink path
     // per application — no cross-session overwrite race.
     Graded("q41_partitioned_write", (s, d) => {
-      val sink = graft.ops.AppScratch.path(s, "q41_part")
+      val sink = graft.Scratch.app(s, "q41_part")
       val mart = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"),
           date_format(col("o_orderdate"), "yyyy-MM").as("order_month"))
@@ -236,7 +221,7 @@ object ExtQueries {
     // inference, mirroring the reference's fixed DB schema as the only
     // typed boundary). Unique path per application.
     Graded("q43_csv_roundtrip", (s, d) => {
-      val sink = graft.ops.AppScratch.path(s, "q43_csv")
+      val sink = graft.Scratch.app(s, "q43_csv")
       // nullValue sentinel on BOTH sides (r15 empty-string probe): CSV
       // has one on-disk shape for "nothing here", so Spark's defaults
       // write NULL and '' identically and read both back as NULL — the
@@ -283,11 +268,11 @@ object ExtQueries {
     // join reads co-located buckets — so the tables are content-keyed
     // (q35/q56/q99 pattern) and written only when this session hasn't
     // built them for these fixture bytes. Cross-JVM staleness cannot
-    // collide: the database name carries the applicationId, so a dead
-    // JVM's warehouse files sit under a db this session never opens.
+    // collide: the database is per application (Scratch.database), so
+    // a dead JVM's warehouse files sit under a db this session never
+    // opens, and a clean application end removes its own.
     Graded("q45_bucketed_join", (s, d) => {
-      val db = "g_" + s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+      val db = graft.Scratch.database(s)
       val key = graft.Fixtures.tableFingerprint(d, "orders") + "_" +
         graft.Fixtures.tableFingerprint(d, "customer")
       val ob = s"$db.orders_b_$key"

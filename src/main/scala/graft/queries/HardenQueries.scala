@@ -1,8 +1,9 @@
 package graft.queries
 
-import graft.{Graded, Tables}
+import graft.{Graded, Scratch, Tables}
 import graft.ops.TextOps
 import graft.ops.RelationalOps.sumMoney
+import graft.queries.NorthQueries.DupOffset
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,7 +15,24 @@ import org.apache.spark.sql.functions._
   * and the LSH-bucketed ANN variant beside q35's IVF (q55).
   */
 object HardenQueries {
-  private[queries] val DupOffset = 100000L
+  /** One Derby bootstrap for both JDBC queries (q53/q54): system
+    * properties, in-memory URL keyed by application id, embedded
+    * driver props. Was duplicated verbatim — a bootstrap change had
+    * to land twice or the two queries ran against differently-
+    * configured databases. */
+  private def derbyUrlAndProps(s: SparkSession): (String, java.util.Properties) = {
+    // string columns must map to VARCHAR (not CLOB) before ANY Derby
+    // write — see JdbcUpsert.GraftDerbyDialect (r13 edge sweep)
+    graft.sources.JdbcUpsert.ensureDerbyDialect()
+    System.setProperty("derby.system.home", Scratch.root)
+    System.setProperty("derby.stream.error.file", Scratch.root + "/derby.log")
+    val url = "jdbc:derby:memory:graft_" +
+      s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_") +
+      ";create=true"
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    (url, props)
+  }
 
   /** Persisted-ingest-artifact cache keys: CONTENT of the documents
     * fixture (graft.Fixtures), not applicationId — so the artifacts
@@ -27,27 +45,6 @@ object HardenQueries {
     * change — otherwise a stale artifact from the old code would keep
     * serving.
     */
-  /** One Derby bootstrap for both JDBC queries (q53/q54): system
-    * properties, in-memory URL keyed by application id, embedded
-    * driver props. Was duplicated verbatim — a bootstrap change had
-    * to land twice or the two queries ran against differently-
-    * configured databases. */
-  private def derbyUrlAndProps(s: SparkSession): (String, java.util.Properties) = {
-    // string columns must map to VARCHAR (not CLOB) before ANY Derby
-    // write — see JdbcUpsert.GraftDerbyDialect (r13 edge sweep)
-    graft.sources.JdbcUpsert.ensureDerbyDialect()
-    System.setProperty("derby.system.home",
-      System.getProperty("java.io.tmpdir"))
-    System.setProperty("derby.stream.error.file",
-      System.getProperty("java.io.tmpdir") + "/derby.log")
-    val url = "jdbc:derby:memory:graft_" +
-      s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_") +
-      ";create=true"
-    val props = new java.util.Properties()
-    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-    (url, props)
-  }
-
   private def artifactKey(d: String): String =
     // v3: r16 dupfacts probe — pair semantics now collapse duplicate
     // doc_ids (latest-revision-wins) before shingling
@@ -63,26 +60,12 @@ object HardenQueries {
     * exactly how the nightly steady state behaves.
     */
   private[queries] def neardupPairs(s: SparkSession, d: String): DataFrame = {
-    val ppath = s"${System.getProperty("java.io.tmpdir")}/graft_pairs_" +
-      artifactKey(d)
+    val ppath = Scratch.shared("pairs_" + artifactKey(d))
     // stage-and-rename install (StagedArtifact): the path is SHARED
     // across sessions by content key — two JVMs building concurrently
     // must not interleave overwrite phases under one _SUCCESS
     graft.ops.StagedArtifact.writeOnce(ppath) { stage =>
-      // one revision per doc_id before shingling (r16 dupfacts probe,
-      // same contract as NorthQueries.docsWithNearDups): dup-id rows
-      // blend into one corrupted per-doc prefix window otherwise
-      val docs = Tables.documents(s, d)
-        .groupBy(col("doc_id")).agg(max(col("text")).as("text"))
-      val corpus = docs.unionByName(
-        docs.select((col("doc_id") + DupOffset).as("doc_id"),
-          concat(col("text"), lit(" graftdup")).as("text")))
-      val sh = graft.ops.Materialize.once("harden.pairs.sh",
-        corpus.select(col("doc_id"),
-          TextOps.ngramHashes64(TextOps.tokens(col("text")), 3).as("sh")))
-      TextOps.jaccardVerify(
-          TextOps.prefixFilterCandidates(sh, "doc_id", "sh", 4, 5),
-          sh, "doc_id", "sh", 4, 5).select("id_a", "id_b")
+      NorthQueries.nearDupJaccardPairs(s, d).select("id_a", "id_b")
         .write.mode("overwrite").parquet(stage)
     }
     s.read.parquet(ppath)
@@ -99,8 +82,7 @@ object HardenQueries {
     * key — both now read the build that rep/run 1 paid once.
     */
   private[queries] def neardupComponents(s: SparkSession, d: String): DataFrame = {
-    val cpath = s"${System.getProperty("java.io.tmpdir")}/graft_comps_" +
-      artifactKey(d)
+    val cpath = Scratch.shared("comps_" + artifactKey(d))
     graft.ops.StagedArtifact.writeOnce(cpath) { stage =>
       graft.ops.GraphOps.connectedComponents(neardupPairs(s, d))
         .write.mode("overwrite").parquet(stage)
@@ -198,8 +180,8 @@ object HardenQueries {
     Graded("q52_dsv2_sink_upsert", (s, d) => {
       val table = ("mart_" + s.sparkContext.applicationId + "_" + d)
         .replaceAll("[^A-Za-z0-9_]", "_")
-      // served lazily by the returned frame — reclaimed at JVM exit
-      graft.sources.UpsertSinkSource.dropOnExit(table)
+      // served lazily by the returned frame — reclaimed at app end
+      Scratch.track(s, graft.sources.UpsertSinkSource.tableDir(table).toString)
       val daily = Tables.orders(s, d)
         .groupBy(col("o_custkey"), col("o_orderdate").cast("date").as("day"))
         .agg(sumMoney(col("o_totalprice")).as("amt"), count(lit(1)).as("n"))

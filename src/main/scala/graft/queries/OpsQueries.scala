@@ -17,11 +17,6 @@ import org.apache.spark.sql.types.DecimalType
   * Every query deterministic; every verdict re-derived by DuckDB.
   */
 object OpsQueries {
-  private val invocation = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private def rmTree(f: java.io.File): Unit = graft.ops.FsOps.rmTree(f)
-
-
   val graded: Seq[Graded] = Seq(
     // End-to-end streaming mart maintenance, executed for real (q46
     // grades the transform's batch parity; THIS runs the streaming
@@ -33,26 +28,24 @@ object OpsQueries {
     // SERVED table is what the oracle grades against a cold batch
     // GROUP BY of the same events. Keys whose rows straddle batches
     // prove the cumulative-state + latest-wins convergence; each
-    // invocation is a fresh pipeline (nonce below) and converges to
+    // invocation is a fresh pipeline (Scratch.call) and converges to
     // the identical table.
     Graded("q100_stream_mart", (s, d) => {
-      // nonce per INVOCATION, not per app: a re-run (bench rep, retry)
+      // fresh per INVOCATION, not per app: a re-run (bench rep, retry)
       // must get a fresh staging dir + checkpoint + table — re-staging
       // under an old checkpoint would surface the same events as new
       // files and double the stateful aggregation's counts
-      val safe = (s.sparkContext.applicationId + "_" + d + "_" +
-        invocation.incrementAndGet()).replaceAll("[^A-Za-z0-9_]", "_")
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_q100_$safe"
+      val base = graft.Scratch.call(s, "q100")
       val staged = s"$base/staged"
       val ev = Tables.events(s, d).select(col("user_id"), col("ts"), col("value"))
-      val table = s"stream_mart_$safe"
+      val table = "stream_mart_" + new java.io.File(base).getName
       // the served table must outlive this call (the returned frame
-      // reads it lazily) — reclaim it at JVM exit, not eagerly
-      graft.sources.UpsertSinkSource.dropOnExit(table)
+      // reads it lazily) — reclaim it at app end, not eagerly
+      graft.Scratch.track(s, graft.sources.UpsertSinkSource.tableDir(table).toString)
       // staged files and the checkpoint are dead once the drain
       // completes (the returned frame reads the SINK table, which
-      // must outlive them) — reclaim them in finally so a failed
-      // drain can't leak the per-invocation nonce dirs either
+      // must outlive them) — reclaim them in finally, ahead of the
+      // app-end sweep
       //
       // The stateful agg instantiates one state store PER SHUFFLE
       // PARTITION PER MICRO-BATCH (provider init + delta file +
@@ -93,7 +86,7 @@ object OpsQueries {
         // read opens O(buckets) files instead of O(batches x buckets)
         graft.sources.UpsertSinkSource.compact(s, table)
         graft.sources.UpsertSinkSource.vacuum(table)
-      } finally rmTree(new java.io.File(base))
+      } finally graft.ops.FsOps.rmTree(new java.io.File(base))
       s.read.format("graft.sources.UpsertSinkSource")
         .option("table", table).load()
     },
@@ -183,12 +176,10 @@ object OpsQueries {
     // (Observe expressions must be merge-associative — no distinct —
     // exactly the constraint partial aggregation already imposes.)
     Graded("q108_observe_metrics", (s, d) => {
-      val safe = (s.sparkContext.applicationId + "_" + d + "_" +
-        invocation.incrementAndGet()).replaceAll("[^A-Za-z0-9_]", "_")
-      val sink = s"${System.getProperty("java.io.tmpdir")}/graft_q108_$safe"
-      val obs = new org.apache.spark.sql.Observation(s"audit_$safe")
+      val sink = graft.Scratch.call(s, "q108")
+      val obs = new org.apache.spark.sql.Observation()
       // the deliverable is the audit row; the sink dir is reclaimed in
-      // finally so a failed write can't leak the nonce'd tmp dir
+      // finally, ahead of the app-end sweep
       val m = try {
         Tables.orders(s, d)
           .filter(col("o_orderdate") >= to_timestamp(lit("1995-01-01 00:00:00")) &&
@@ -200,7 +191,7 @@ object OpsQueries {
             max(col("o_totalprice")).as("max_price"))
           .write.mode("overwrite").parquet(sink) // the ONE action; metrics ride it
         obs.get
-      } finally rmTree(new java.io.File(sink))
+      } finally graft.ops.FsOps.rmTree(new java.io.File(sink))
       import s.implicits._
       // a zero-row observed write yields NULL sum/max — surface them
       // as the oracle's NULLs, not an unboxing NPE (or Scala's silent

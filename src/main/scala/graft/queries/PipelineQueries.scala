@@ -37,8 +37,8 @@ object PipelineQueries {
          | -- review). Fixture doc_ids are non-null; this pins parity
          | -- for inputs that aren't.
          | CASE WHEN doc_id IS NULL THEN NULL
-         |      WHEN ${bucketSql("doc_id")} < 80 THEN 'train'
-         |      WHEN ${bucketSql("doc_id")} < 90 THEN 'val'
+         |      WHEN ${SampleOps.bucketSql("doc_id")} < 80 THEN 'train'
+         |      WHEN ${SampleOps.bucketSql("doc_id")} < 90 THEN 'val'
          |      ELSE 'test' END AS split
          |FROM documents""".stripMargin)),
 
@@ -72,7 +72,7 @@ object PipelineQueries {
           Tables.documents(s, d).select(col("doc_id"), col("lang")),
           "doc_id", "lang", Map("en" -> 30), defaultPct = 10),
       Some(s"""SELECT doc_id, lang FROM documents
-         |WHERE ${bucketSql("doc_id")} <
+         |WHERE ${SampleOps.bucketSql("doc_id")} <
          |      CASE WHEN lang = 'en' THEN 30 ELSE 10 END""".stripMargin)),
 
     // Corpus profiling: per-column null count / exact distinct count /
@@ -115,7 +115,7 @@ object PipelineQueries {
     // a 100-TB table. The graded surface is the round trip: bounded
     // read-back over the sorted layout, aggregated per month.
     Graded("q67_sorted_layout", (s, d) => {
-      val sink = graft.ops.AppScratch.path(s, "q67")
+      val sink = graft.Scratch.app(s, "q67")
       // r22: the range-write task count was a hard-coded 8 — at 100 TB
       // that caps the whole layout rewrite at 8 writers. Scale it from
       // scan metadata with 8 as the floor: at fixture scale the
@@ -155,7 +155,7 @@ object PipelineQueries {
     // is OPTIMIZE ZORDER done with a plain repartitionByRange+sort
     // write — no table format required.
     Graded("q92_zorder_layout", (s, d) => {
-      val sink = graft.ops.AppScratch.path(s, "q92")
+      val sink = graft.Scratch.app(s, "q92")
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_orderdate").cast("date").as("day"), col("o_totalprice"))
@@ -252,7 +252,7 @@ object PipelineQueries {
     // mergeSchema read is the declarative alternative; partition
     // discovery (gen=N directories) doubles as the generation tag.
     Graded("q70_schema_evolution", (s, d) => {
-      val sink = graft.ops.AppScratch.path(s, "q70")
+      val sink = graft.Scratch.app(s, "q70")
       val sup = Tables.supplier(s, d)
       sup.select(col("s_suppkey"), col("s_name"))
         .write.mode("overwrite").parquet(s"$sink/gen=1")
@@ -374,7 +374,7 @@ object PipelineQueries {
     // pure function of the (fixed-size) nation table, so concurrent or
     // repeated runs converge on identical bytes.
     Graded("q72_binary_files", (s, d) => {
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q72_files"
+      val dir = graft.Scratch.shared("q72_files")
       // a NULL nation key renders a NULL file name, which the export
       // rejects LOUDLY by contract (unsafe-name require) — and a file
       // must have a name, so a NULL-keyed row is quarantine-tier
@@ -393,7 +393,7 @@ object PipelineQueries {
       Some(s"""SELECT regexp_extract(filename, '[^/]+$$') AS file_name,
          | CAST(size AS BIGINT) AS n_bytes,
          | decode(content) AS text
-         |FROM read_blob('${System.getProperty("java.io.tmpdir")}/graft_q72_files/*.bin')""".stripMargin)),
+         |FROM read_blob('${graft.Scratch.shared("q72_files")}/*.bin')""".stripMargin)),
 
     // FULL OUTER join — the year-over-year comparison that must keep
     // BOTH unmatched sides (customers active only in 1995 AND only in
@@ -558,9 +558,4 @@ object PipelineQueries {
         |  CAST(ntile(10) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS BIGINT) AS decile
         |FROM documents""".stripMargin))
   )
-
-  // the SQL twin of SampleOps.bucket lives next to the Scala
-  // implementation — one definition, no drift
-  private def bucketSql(key: String): String =
-    graft.ops.SampleOps.bucketSql(key)
 }

@@ -220,7 +220,7 @@ object RefQueries {
     Graded("q19_overwrite_refresh", (s, d) => {
       val snapshot = Tables.part(s, d).select(col("p_partkey"), col("p_name"),
         col("p_brand"), col("p_type"), col("p_size"), col("p_retailprice"))
-      val sink = graft.ops.AppScratch.path(s, "q19_refresh")
+      val sink = graft.Scratch.app(s, "q19_refresh")
       snapshot.write.mode("overwrite").parquet(sink)
       // read back under the writer's schema: no footer-inference job
       s.read.schema(snapshot.schema).parquet(sink)

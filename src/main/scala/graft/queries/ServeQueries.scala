@@ -455,11 +455,11 @@ object ServeQueries {
     // takes in production.
     Graded("q99_dpp_prune", (s, d) => {
       val fp = graft.Fixtures.tableFingerprint(d, "orders")
-      val sink = s"${System.getProperty("java.io.tmpdir")}/graft_q99_dpp_v2_$fp"
-      val db = "g_" + s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
+      val sink = graft.Scratch.shared(s"q99_dpp_v2_$fp")
+      val db = graft.Scratch.database(s)
       val tbl = s"$db.orders_pm_$fp"
       // a catalog entry can outlive its files: the sink lives in
-      // java.io.tmpdir, which a tmp cleaner (systemd-tmpfiles) can
+      // the tmp root, which a tmp cleaner (systemd-tmpfiles) can
       // empty under a long-lived session — the table would then
       // dangle over nothing and every later read fail instead of
       // self-healing. So the steady state re-gates on the _SUCCESS
@@ -481,7 +481,6 @@ object ServeQueries {
               date_format(col("o_orderdate"), "yyyy-MM").as("order_month"))
             .repartition(col("order_month"))
             .write.partitionBy("order_month").mode("overwrite").parquet(stage))
-        s.sql(s"CREATE DATABASE IF NOT EXISTS $db")
         // explicit columns + PARTITIONED BY, never inference: over an
         // empty sink (zero partition dirs) schema inference throws
         // UNABLE_TO_INFER_SCHEMA (r13 edge sweep), and a declared

@@ -236,7 +236,7 @@ object WidenQueries {
     // Same predicate-pushdown/column-pruning story as parquet at
     // 100 TB; the engine treats the format as a storage detail.
     Graded("q60_orc_roundtrip", (s, d) => {
-      val sink = graft.ops.AppScratch.path(s, "q60_orc")
+      val sink = graft.Scratch.app(s, "q60_orc")
       Tables.supplier(s, d).write.mode("overwrite").orc(sink)
       s.read.orc(sink)
         .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))

@@ -126,7 +126,7 @@ object UpsertSinkSource {
 
   /** Ops surface: where a table's manifest + bucketed data files live. */
   def tableDir(table: String): Path =
-    Paths.get(System.getProperty("java.io.tmpdir"), "graft_upsert_store", table)
+    Paths.get(graft.Scratch.shared("upsert_store"), table)
 
   private[sources] def tableName(opts: CaseInsensitiveStringMap): String = {
     val n = opts.get("table")
@@ -385,23 +385,6 @@ object UpsertSinkSource {
       // files, one per version — at any real commit cadence the
       // ledger's cost is noise, and [[drop]] removes the whole dir.
     }
-  }
-
-  // tmpdir janitor: per-invocation nonce'd tables (q52/q100 create a
-  // fresh one per run) would otherwise outlive the JVM and accumulate
-  // on disk forever. Dropping at exit — not eagerly — keeps the served
-  // DataFrame readable for the query's whole lifetime.
-  private val exitDrops = ConcurrentHashMap.newKeySet[String]()
-  private lazy val exitHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      exitDrops.asScala.foreach(t => try drop(t) catch { case _: Exception => () })))
-    ()
-  }
-
-  /** Schedule a table for deletion at JVM exit (idempotent). */
-  def dropOnExit(table: String): Unit = {
-    exitHook
-    exitDrops.add(table): Unit
   }
 
   /** Test/ops hook: drop a table (not reachable from query plans).

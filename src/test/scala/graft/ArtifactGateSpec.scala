@@ -84,7 +84,7 @@ class ArtifactGateSpec extends SparkSpec {
       assert(again.length === 1)
       assert(Files.getLastModifiedTime(sink.resolve("_SUCCESS")) === mt,
         "a committed layout must be served by read, not re-laid-out")
-      val db = "g_" + spark.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
+      val db = Scratch.database(spark)
       val tbl = s"$db.orders_pm_$fp"
       // half-registered state: a crash between CREATE TABLE and
       // RECOVER PARTITIONS leaves a table that knows no partitions —
@@ -128,7 +128,7 @@ class ArtifactGateSpec extends SparkSpec {
       assert(out.length === 2, s"two segments expected, got ${out.toSeq}")
       // the bucketed files on disk are the artifact: a second
       // invocation must serve the join from them, not re-bucket
-      val db = "g_" + spark.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
+      val db = Scratch.database(spark)
       val key = Fixtures.tableFingerprint(dir, "orders") + "_" +
         Fixtures.tableFingerprint(dir, "customer")
       val files = spark.table(s"$db.orders_b_$key").inputFiles

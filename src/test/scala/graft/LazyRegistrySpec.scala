@@ -26,12 +26,14 @@ class LazyRegistrySpec extends SparkSpec {
     *   - W fixture/sink WRITERS: the write IS the graded operator
     *     (S6–S11, the stream mart, layout/snapshot/CDC fixtures);
     *   - I ITERATIVE algorithms: driver-coordinated convergence loops
-    *     must evaluate each step (connected components, Lloyd);
+    *     must evaluate each step (connected components, group
+    *     closure);
     *   - T build-then-PERSIST artifacts (IVF centroids) pay their
     *     one-time build on first use;
-    *   - C eager reuse CHECKPOINTS: `localCheckpoint()` materializes
-    *     a multiply-consumed intermediate once (the round-3 q29/q37
-    *     hot-spot fix) — the materialization is the optimization.
+    *   - C eager reuse CHECKPOINTS: `Materialize.once`'s reliable
+    *     checkpoint materializes a multiply-consumed intermediate once
+    *     (the round-3 q29/q37 hot-spot fix) — the materialization is
+    *     the optimization.
     */
   private val materializing: Set[String] = Set(
     "q19_overwrite_refresh",   // W truncate-and-load (S8)

@@ -334,6 +334,7 @@ class StreamingSpec extends SparkSpec {
     } finally {
       q.stop()
       graft.ops.FsOps.rmTree(new java.io.File(ckpt))
+      UpsertSinkSource.drop(table)
     }
   }
 

@@ -22,44 +22,46 @@ class WriteRebalanceSpec extends SparkSpec {
 
   test("partitionedOverwrite: small partitions keep one file per dir") {
     val dir = java.nio.file.Files.createTempDirectory("graft_rebal_small").toFile
-    dir.deleteOnExit()
-    val df = spark.range(600).select(
-      (col("id") % 6).cast("string").as("m"), col("id").as("v"))
-    graft.ops.LayoutOps.partitionedOverwrite(df, "m", dir.getAbsolutePath)
-    val counts = filesPerDir(dir)
-    assert(counts.size === 6)
-    assert(counts.values.forall(_ == 1),
-      s"small months must keep one file per dir, saw $counts")
+    try {
+      val df = spark.range(600).select(
+        (col("id") % 6).cast("string").as("m"), col("id").as("v"))
+      graft.ops.LayoutOps.partitionedOverwrite(df, "m", dir.getAbsolutePath)
+      val counts = filesPerDir(dir)
+      assert(counts.size === 6)
+      assert(counts.values.forall(_ == 1),
+        s"small months must keep one file per dir, saw $counts")
+    } finally graft.ops.FsOps.rmTree(dir)
   }
 
   test("partitionedOverwrite: a hot partition splits into bounded files") {
     val dir = java.nio.file.Files.createTempDirectory("graft_rebal_hot").toFile
-    dir.deleteOnExit()
-    // force the skew machinery visible at test scale: advisory 64KB
-    // against a ~1MB hot month next to two tiny ones; 16 shuffle
-    // partitions so the cold months get their own hash buckets (a
-    // cold month SHARING a skewed bucket is legitimately split by
-    // map-output ranges — not what this test pins)
-    Session.scoped(spark,
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536",
-        "spark.sql.shuffle.partitions" -> "16") { c =>
-      val df = c.range(200000).select(
-        when(col("id") % 100 === 0,
-          concat(lit("cold"), (expr("id div 100") % 2).cast("string")))
-          .otherwise(lit("hot")).as("m"),
-        concat(lit("payload_"), col("id")).as("v"))
-      graft.ops.LayoutOps.partitionedOverwrite(df, "m", dir.getAbsolutePath)
-      val counts = filesPerDir(dir)
-      assert(counts("m=hot") >= 2,
-        s"hot month must split across tasks under rebalance, saw $counts")
-      assert(counts("m=cold0") === 1 && counts("m=cold1") === 1,
-        s"cold months must stay one file each, saw $counts")
-      // and the write is lossless
-      val back = c.read.parquet(dir.getAbsolutePath)
-      assert(back.count() === 200000)
-      // the write's no-coalescing scope must not reach its caller
-      assert(c.conf.get("spark.sql.adaptive.coalescePartitions.enabled",
-        "true") === "true")
-    }
+    try {
+      // force the skew machinery visible at test scale: advisory 64KB
+      // against a ~1MB hot month next to two tiny ones; 16 shuffle
+      // partitions so the cold months get their own hash buckets (a
+      // cold month SHARING a skewed bucket is legitimately split by
+      // map-output ranges — not what this test pins)
+      Session.scoped(spark,
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536",
+          "spark.sql.shuffle.partitions" -> "16") { c =>
+        val df = c.range(200000).select(
+          when(col("id") % 100 === 0,
+            concat(lit("cold"), (expr("id div 100") % 2).cast("string")))
+            .otherwise(lit("hot")).as("m"),
+          concat(lit("payload_"), col("id")).as("v"))
+        graft.ops.LayoutOps.partitionedOverwrite(df, "m", dir.getAbsolutePath)
+        val counts = filesPerDir(dir)
+        assert(counts("m=hot") >= 2,
+          s"hot month must split across tasks under rebalance, saw $counts")
+        assert(counts("m=cold0") === 1 && counts("m=cold1") === 1,
+          s"cold months must stay one file each, saw $counts")
+        // and the write is lossless
+        val back = c.read.parquet(dir.getAbsolutePath)
+        assert(back.count() === 200000)
+        // the write's no-coalescing scope must not reach its caller
+        assert(c.conf.get("spark.sql.adaptive.coalescePartitions.enabled",
+          "true") === "true")
+      }
+    } finally graft.ops.FsOps.rmTree(dir)
   }
 }

@@ -48,7 +48,7 @@ KILL_FRACS = [0.05, 0.15, 0.30, 0.50, 0.70, 0.85, 0.95]
 # rebuildable content-keyed caches (StagedArtifact/Materialize
 # families) — safe to clear, every Verify rebuilds them on demand
 CLEARABLE = ("graft_pairs_v", "graft_comps_v", "graft_ivf_v",
-             "graft_q93_idx_v", "graft_q99_dpp_v", "graft_compact")
+             "graft_q93_idx_v", "graft_q99_dpp_v")
 
 
 # residue scan is scoped to the repo's own artifact families — an
