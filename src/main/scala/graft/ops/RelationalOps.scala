@@ -55,6 +55,14 @@ object RelationalOps {
     * order is not part of any graded query's contract and every
     * aggregate downstream is order-independent (DECIMAL sums / integer
     * counts / min-max).
+    *
+    * When the spread key IS the key of the next exchange, the spread
+    * costs no extra hop: the spread exchange already satisfies that
+    * distribution (a Union of sides spread the same way keeps it), so
+    * Spark plans no second exchange and the stage after it runs on
+    * every core. q12 spreads each merge side by `o_orderkey`: one hop,
+    * a 4-task window stage instead of a 2-task one, median op 0.279 →
+    * 0.158 s in a same-JVM A/B (sf0.1, 4 cores; SCALING.md).
     */
   def rebalanceScan(df: DataFrame, keys: Column*): DataFrame = {
     require(keys.nonEmpty, "rebalanceScan needs a deterministic spread key")
@@ -227,6 +235,16 @@ object RelationalOps {
     * UPDATE/INSERT (load_sales_data.py:129-134) with a single window
     * over `target ∪ incoming`; at 100 TB it is one hash-partitioned
     * exchange instead of 2N round-trips.
+    *
+    * The rank-1 filter plans as Spark's own WindowGroupLimit under the
+    * Window: a partial limit keeps at most one row per key and map
+    * task before the key exchange, and the window then ranks only
+    * those survivors. When both sides already arrive hash-partitioned
+    * on `keys` (q12 spreads its scan by the merge key), the Union keeps
+    * that partitioning and the merge adds no exchange of its own. A
+    * `min_by(struct(*))` aggregate rewrite of this window was tried
+    * and retired: any string in the row made it a two-sided
+    * SortAggregate, slower than this plan (SCALING.md).
     *
     * Determinism contract: each side must be key-unique (the
     * reference's tables are, by PK). If a side may carry duplicate

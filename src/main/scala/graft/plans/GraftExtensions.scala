@@ -11,6 +11,12 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * `call_function`-addressable (`SELECT graft_cosine(a.v, b.v) …`).
   * Injection happens per-session at build time — no global registry
   * mutation, cluster-safe.
+  *
+  * Functions only, no optimizer rules: the one rule this used to
+  * inject (a `min_by(struct(*))` rewrite of the rank-1 latest-wins
+  * window) planned as a two-sided SortAggregate whenever the row
+  * carried a string, and measured slower than Spark's own
+  * WindowGroupLimit plan it was meant to beat (SCALING.md).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -38,9 +44,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // sort-free latest-wins: row_number=1 upserts → min_by aggregates
-    // (map-side partial agg slashes the upsert's shuffle volume)
-    ext.injectOptimizerRule(_ => new LatestWinsRule)
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       info(classOf[DotProduct], "graft_dot",

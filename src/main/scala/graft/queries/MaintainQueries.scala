@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * query does:
   *   - q111: MERGE with delete semantics — tombstone merge resolved in
   *     ONE anti-join pass + union (no full-outer join, no window, no
-  *     latest-wins min_by) — the delta-lake MERGE shape q12/q13 don't
+  *     latest-wins rank) — the delta-lake MERGE shape q12/q13 don't
   *     cover (q12 has no deletes; q13 is insert-only).
   *   - q112: trailing-window DISTINCT from mergeable HLL partials —
   *     the one aggregate a RANGE window can't re-derive from sums

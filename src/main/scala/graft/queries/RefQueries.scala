@@ -103,15 +103,27 @@ object RefQueries {
       Some(s"SELECT c_custkey, d FROM customer CROSS JOIN ($dateRange7)")),
 
     // U1 — latest-wins MERGE replacing per-row exists-probe+UPDATE/INSERT
-    // (load_sales_data.py:129-134). One shuffle on the key.
+    // (load_sales_data.py:129-134). One shuffle on the key. A scan of
+    // fewer splits than cores is spread by the MERGE key itself, each
+    // side below its own projection, and the Union keeps that hash
+    // partitioning: the spread IS the merge's shuffle, and the window
+    // runs on every core instead of one task per scan (SCALING.md). A
+    // many-split scan keeps the plain one-exchange merge.
     Graded("q12_upsert_latest_wins", (s, d) => {
-      val o = Tables.orders(s, d)
+      val o = rebalanceScan(Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
+        col("o_orderkey"))
       val target = o.select(col("o_orderkey"), col("o_custkey"),
         lit(0.0).as("total"), lit("stale").as("src"))
       val incoming = o.filter(col("o_orderkey") % 3 === 0)
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_totalprice").as("total"), lit("fresh").as("src"))
+      // `src` stays nullable, as the frozen dump schema has it: the
+      // window passes the literals' non-null through to the parquet
+      // writer. nullif against a value no row carries is the identity,
+      // and unlike `when(isNotNull)` the optimizer cannot fold it away.
       upsertLatestWins(target, incoming, Seq("o_orderkey"))
+        .withColumn("src", nullif(col("src"), lit("")))
     },
       Some("""WITH t AS (SELECT o_orderkey, o_custkey, CAST(0.0 AS DOUBLE) AS total, 'stale' AS src, 1 AS pri FROM orders),
         | i AS (SELECT o_orderkey, o_custkey, o_totalprice AS total, 'fresh' AS src, 0 AS pri FROM orders WHERE o_orderkey % 3 = 0),

@@ -25,6 +25,26 @@ class PlanSpec extends SparkSpec {
     p.linesIterator.dropWhile(!_.startsWith("== Physical Plan ==")).drop(1)
       .takeWhile(_.trim.nonEmpty).toSeq
 
+  /** The per-node detail block of a tree line ("+- Exchange (6)"). */
+  private def details(p: String, op: String): String = {
+    val id = """\((\d+)\)\s*$""".r.findFirstMatchIn(op).map(_.group(1))
+      .getOrElse(fail(s"no node id on '$op'"))
+    p.linesIterator.dropWhile(!_.startsWith(s"($id) ")).takeWhile(_.trim.nonEmpty)
+      .mkString("\n")
+  }
+
+  /** The subtrees under a tree line, one per child: a child's line
+    * carries its ":- " / "+- " marker in the column where the parent's
+    * name starts. */
+  private def branches(ops: Seq[String], at: Int): Seq[Seq[String]] = {
+    val c = ops(at).indexWhere(_.isLetter)
+    val below = ops.drop(at + 1)
+      .takeWhile(l => l.length > c && l.take(c).forall(_ == ' '))
+    val starts = below.indices.filter(i =>
+      below(i).startsWith(":- ", c) || below(i).startsWith("+- ", c))
+    starts.zip(starts.drop(1) :+ below.size).map { case (a, b) => below.slice(a, b) }
+  }
+
   /** The first operator under the Expand that is not a Project. */
   private def expandInput(p: String): String =
     tree(p).dropWhile(!_.contains("Expand")).drop(1)
@@ -80,17 +100,31 @@ class PlanSpec extends SparkSpec {
       "top-k must be a per-partition take + k-row merge, not a global sort")
   }
 
-  test("q12 upsert: one exchange, rewritten to a partial-agg min_by (LatestWinsRule)") {
+  test("q12 upsert: WindowGroupLimit window, one hop spread by the merge key") {
     val p = plan("q12_upsert_latest_wins")
-    val exchanges = p.linesIterator.count(_.contains("Exchange"))
-    assert(exchanges <= 2, // hashpartitioning exchange appears once per explain section
-      s"merge should shuffle once, found $exchanges exchange mentions:\n$p")
-    // the LatestWinsRule must have replaced the row_number window with
-    // a min_by aggregate: map-side partial agg, no window machinery
-    assert(!p.contains("Window"),
-      s"latest-wins should be an aggregate after the rewrite:\n$p")
-    assert(p.contains("partial_min_by"),
-      s"map-side partial min_by missing:\n$p")
+    assert(p.contains("WindowGroupLimit"),
+      s"rank-1 merge should plan as Spark's WindowGroupLimit + Window:\n$p")
+    assert(!p.contains("SortAggregate") && !p.contains("min_by"),
+      s"latest-wins must not be a min_by aggregate:\n$p")
+    // the one-split fixture is spread by the merge key below the
+    // Union; the Union keeps that hash partitioning, so the window
+    // reads it with no second exchange
+    val ops = tree(p)
+    val union = ops.indexWhere(_.contains("Union"))
+    assert(union >= 0, s"no Union under the merge:\n$p")
+    assert(!ops.take(union).exists(_.contains("Exchange")) &&
+      !p.contains("ENSURE_REQUIREMENTS"),
+      s"the merge re-shuffles above the Union:\n$p")
+    val sides = branches(ops, union)
+    assert(sides.size == 2, s"expected target and incoming under the Union:\n$p")
+    sides.foreach { side =>
+      val ex = side.find(_.contains("Exchange"))
+        .getOrElse(fail(s"a Union branch is not spread:\n$p"))
+      val args = details(p, ex)
+      assert(args.contains("hashpartitioning(o_orderkey") &&
+        args.contains("REPARTITION_BY_NUM"),
+        s"a Union branch must be spread by the merge key:\n$args")
+    }
   }
 
   test("q17 aggregation: partial (map-side) aggregation before the exchange") {
@@ -295,6 +329,21 @@ class PlanSpec extends SparkSpec {
     assert(join >= 0 && spread > join, s"no exchange under the join:\n$p")
     assert(p.contains("hashpartitioning(doc_id"),
       s"the probe side must spread by doc_id:\n$p")
+  }
+
+  test("q84 edit-distance verify: the id order is checked before the distance") {
+    // `And` short-circuits left to right: with id_a < id_b first,
+    // mirrored and self pairs never run the levenshtein DP
+    val p = plan("q84_editdist_neardup")
+    val ops = tree(p)
+    val cond = details(p, ops.find(_.contains("BroadcastHashJoin"))
+      .getOrElse(fail(s"no broadcast join:\n$p")))
+      .linesIterator.find(_.startsWith("Join condition"))
+      .getOrElse(fail(s"the join carries no condition:\n$p"))
+    val order = """id_a#\d+L? < id_b""".r.findFirstMatchIn(cond).map(_.start)
+    val dist = cond.indexOf("levenshtein")
+    assert(order.isDefined && dist >= 0 && order.get < dist,
+      s"id_a < id_b must precede levenshtein in the join condition: $cond")
   }
 
   test("q83 heavy hitters: top-20 via TakeOrderedAndProject, no global sort") {

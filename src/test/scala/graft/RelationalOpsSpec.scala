@@ -90,6 +90,21 @@ class RelationalOpsSpec extends SparkSpec {
     assert(out.toSeq === Seq((1, "old"), (2, "new"), (3, "new")))
   }
 
+  test("upsertLatestWins: a multi-column tiebreak with a descending key orders same-side copies") {
+    // NightlyRun's shape: the target may hold one key twice (an old and
+    // a corrected date). With no incoming copy the tiebreak picks the
+    // survivor: latest date first, then the next column ascending.
+    val target = Seq((1, 10, "a", "t10a"), (1, 12, "b", "t12b"),
+      (1, 12, "a", "t12a"), (2, 5, "a", "t5")).toDF("k", "d", "s", "v")
+    val incoming = Seq((2, 1, "z", "i1"), (3, 7, "a", "i7")).toDF("k", "d", "s", "v")
+    Seq(1, 3).foreach { n =>
+      val out = upsertLatestWins(target.repartition(n), incoming, Seq("k"),
+        tiebreak = Seq(col("d").desc, col("s")))
+        .orderBy("k").select("k", "v").as[(Int, String)].collect()
+      assert(out.toSeq === Seq((1, "t12a"), (2, "i1"), (3, "i7")), s"at $n partitions")
+    }
+  }
+
   test("newRows/existingRows split incoming by key presence (J3/J4)") {
     val target = Seq(1, 2).toDF("k")
     val incoming = Seq((2, "x"), (3, "y")).toDF("k", "v")

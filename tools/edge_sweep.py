@@ -20,10 +20,12 @@ embeddings; `skew` (r14) is the REAL tables plus one hot key per table
 identical-embedding pile — the routine 100-TB distribution no other
 variant exercises):
   1. regenerate the variant via tools/edge_fixtures.py
-  2. clear /tmp/graft_q72_files (q72's deterministic shared export dir
-     is keyed to fixture CONTENT by design; across VARIANTS it must be
-     reset or the binary round trip reads the previous variant's files)
-  3. run graft.Verify over the variant (all 113 queries)
+  2. clear <work>/tmp/graft_q72_files (q72's deterministic shared export
+     dir is keyed to fixture CONTENT by design; across VARIANTS it must
+     be reset or the binary round trip reads the previous variant's
+     files)
+  3. run graft.Verify over the variant (all 113 queries), its JVM's
+     java.io.tmpdir set to <work>/tmp
   4. run tools/local_verify.py (same DuckDB compare the driver uses)
   5. reinterpret exactly ONE expected case: an ALLOWLISTED rows-only
      query (q30_simhash only) returning 0 rows on the EMPTY variant is
@@ -64,7 +66,12 @@ CONTRACT_VARIANTS = frozenset(
      "unicode", "naninf", "whitespace", "orphans", "liar", "canon"])
 CONTRACT_TABLES = ["region", "nation", "customer", "supplier", "part",
                    "orders", "lineitem", "events", "documents", "embeddings"]
-Q72_DIR = "/tmp/graft_q72_files"
+# Verify's JVM runs with java.io.tmpdir under the work root, so q72's
+# files (graft.Scratch.shared("q72_files"), which its DuckDB oracle
+# reads back) land in a directory this script knows and clears before
+# each variant, whatever the host's default tmpdir is.
+TMP = os.path.join(os.path.abspath(WORK), "tmp")
+Q72_DIR = os.path.join(TMP, "graft_q72_files")
 # rows-only queries allowed to return 0 rows on the EMPTY variant, by
 # name: q30's banded self-join legitimately finds no pairs in no docs
 # (its hashes are hash-graded via q50). A FUTURE rows-only query that
@@ -106,7 +113,9 @@ def main():
         outdir = os.path.join(WORK, "out", v)
         shutil.rmtree(outdir, ignore_errors=True)
         shutil.rmtree(Q72_DIR, ignore_errors=True)
-        r = run(["bash", "tools/spark_java.sh", "graft.Verify", vdir, outdir])
+        os.makedirs(TMP, exist_ok=True)
+        r = run(["bash", "tools/spark_java.sh", "-Djava.io.tmpdir=" + TMP,
+                 "graft.Verify", vdir, outdir])
         sys.stdout.write("".join(
             ln + "\n" for ln in (r.stdout + r.stderr).splitlines()
             if ln.startswith("[verify]")))
